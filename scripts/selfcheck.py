@@ -1,11 +1,15 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate: run each oracle SQL in
 DuckDB against the sf parquet tables and compare to the parquet the Verify
-main dumped. Columns sorted by name; values hashed after normalization.
+main dumped. Both sides go through pandas dtypes (`.df()`), as the driver
+compares them: an integer column on one side and a float column on the
+other is a failure (DuckDB's SUM(BIGINT) is HUGEINT, which reaches pandas
+as float64). Columns sorted by name; values hashed after normalization.
 Usage: selfcheck.py <sfDir> <verifyOutDir>
 """
-import sys, json, glob, os, math
+import sys, json, glob, os, math, decimal
 import duckdb
+import numpy as np
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
@@ -18,6 +22,10 @@ oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
 def norm(v):
     if v is None:
         return "<null>"
+    if isinstance(v, np.generic):
+        return norm(v.item())
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return "[" + ",".join(norm(x) for x in v) + "]"
     if isinstance(v, float):
         if math.isnan(v):
             return "<nan>"
@@ -25,6 +33,26 @@ def norm(v):
     if isinstance(v, bool):
         return str(int(v))
     return str(v)
+
+def kind(col):
+    """The numeric kind of a pandas column, as the driver's comparator sees
+    it: decimals count as float."""
+    k = col.dtype.kind
+    if k in "iu":
+        return "int"
+    if k == "f":
+        return "float"
+    vals = [v for v in col if v is not None]
+    if vals and isinstance(vals[0], decimal.Decimal):
+        return "float"
+    return "other"
+
+def frame(sql):
+    """(columns, rows with nulls as None, {column: kind}) of a query,
+    fetched through pandas."""
+    df = con.execute(sql).df()
+    rows = df.astype(object).where(df.notna(), None).values.tolist()
+    return list(df.columns), rows, {c: kind(df[c]) for c in df.columns}
 
 def frame_sig(rows, cols):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -39,20 +67,22 @@ for name, sql in sorted(oracle.items()):
         fails += 1
         continue
     try:
-        oc = con.execute(sql)
-        ocols = [d[0] for d in oc.description]
-        orows = oc.fetchall()
-        sc = con.execute(f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')")
-        scols = [d[0] for d in sc.description]
-        srows = sc.fetchall()
+        ocols, orows, okinds = frame(sql)
+        scols, srows, skinds = frame(f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')")
     except Exception as e:
         print(f"ERR   {name}: {e}")
         fails += 1
         continue
     oc_sig = frame_sig(orows, ocols)
     sc_sig = frame_sig(srows, scols)
+    mixed = [c for c in sorted(okinds)
+             if {okinds[c], skinds.get(c)} == {"int", "float"}]
     if oc_sig[0] != sc_sig[0]:
         print(f"FAIL  {name}: columns {sc_sig[0]} != oracle {oc_sig[0]}")
+        fails += 1
+    elif mixed:
+        c = mixed[0]
+        print(f"FAIL  {name}: column {c} is {skinds[c]}, oracle {okinds[c]}")
         fails += 1
     elif len(oc_sig[1]) != len(sc_sig[1]):
         print(f"FAIL  {name}: rows {len(sc_sig[1])} != oracle {len(oc_sig[1])}")

@@ -460,9 +460,10 @@ object TableIO {
     Table(spark.read.json(path), name)
 
   /** Reload a table previously persisted with [[Table.save]] — partition
-    * columns written by `partitionBy` come back prunable. */
+    * columns written by `partitionBy` come back prunable. Reads through the
+    * catalog's schema cache ([[graft.tables.Tables.parquet]]). */
   def fromParquet(spark: SparkSession, path: String, name: String): Table =
-    Table(spark.read.parquet(path), name)
+    Table(graft.tables.Tables.parquet(spark, path), name)
 
   /** Load an ORC directory/file — same columnar pushdown/pruning story as
     * parquet (predicate pushdown, column pruning, partition pruning), for

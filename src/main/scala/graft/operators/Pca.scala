@@ -52,8 +52,17 @@ object Pca {
     val spark = embeds.sparkSession
     import spark.implicits._
     val D = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
-    // one slim head() for the v0 literal (Similarity codebook precedent)
-    val dim = embeds.select(size(col(vecCol))).head().getInt(0)
+    // one slim aggregate for the v0 literal's dimension, which also
+    // checks the input's shape: n = 1 (a zero covariance divisor) and
+    // ragged vectors fail here by name, not inside the covariance collect
+    val shape = embeds.filter(col(vecCol).isNotNull)
+      .agg(count(lit(1)), min(size(col(vecCol))), max(size(col(vecCol)))).head()
+    val n = shape.getLong(0)
+    require(n > 1, s"pc1 needs at least 2 non-null vectors in $vecCol, got $n")
+    val dim = shape.getInt(1)
+    require(dim == shape.getInt(2),
+      s"pc1 needs vectors of one dimension in $vecCol, got $dim to ${shape.getInt(2)}")
+    require(dim >= 1, s"pc1 needs non-empty vectors in $vecCol")
     val v0 = 1.0 / math.sqrt(dim.toDouble)
 
     // sufficient statistics: S_j and SS_jk from one scan (two Generates,

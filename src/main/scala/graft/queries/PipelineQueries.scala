@@ -176,9 +176,11 @@ object PipelineQueries {
     "asg AS MATERIALIZED (SELECT vec_id, orig, cell, q FROM " +
     "(SELECT *, row_number() OVER (PARTITION BY vec_id " +
     "ORDER BY q, cell) AS rk FROM cs) WHERE rk = 1), " +
-    "o AS (SELECT cell, count(*) AS n_orig, sum(q) AS qerr_orig_micros " +
+    // CAST: DuckDB SUM(BIGINT) is HUGEINT (surfaces as float64 in the
+    // comparator) while Spark emits BIGINT
+    "o AS (SELECT cell, count(*) AS n_orig, CAST(sum(q) AS BIGINT) AS qerr_orig_micros " +
     "FROM asg WHERE orig GROUP BY cell), " +
-    "nw AS (SELECT cell, count(*) AS n_now, sum(q) AS qerr_now " +
+    "nw AS (SELECT cell, count(*) AS n_now, CAST(sum(q) AS BIGINT) AS qerr_now " +
     "FROM asg GROUP BY cell) " +
     "SELECT nw.cell, coalesce(o.n_orig, 0) AS n_orig, " +
     "nw.n_now - coalesce(o.n_orig, 0) AS n_appended, " +

@@ -67,4 +67,15 @@ class PcaSpec extends SparkSpec {
     assert(math.abs(math.abs(out(0)._2) - 1.0) < 1e-3)
     assert(out.head._3 > 0.99)
   }
+
+  test("pc1 rejects a single vector and ragged vectors by name") {
+    val one = Seq(Tuple1(Array(1.0f, 2.0f))).toDF("f")
+    val e1 = intercept[IllegalArgumentException](Pca.pc1(one, "f"))
+    assert(e1.getMessage.contains("at least 2 non-null vectors"), e1.getMessage)
+    val ragged = Seq(Tuple1(Array(1.0f, 2.0f)), Tuple1(Array(3.0f, 4.0f, 5.0f)),
+      Tuple1(Array(0.5f, 1.5f))).toDF("f")
+    val e2 = intercept[IllegalArgumentException](Pca.pc1(ragged, "f"))
+    assert(e2.getMessage.contains("one dimension"), e2.getMessage)
+    assert(e2.getMessage.contains("2 to 3"), e2.getMessage)
+  }
 }
