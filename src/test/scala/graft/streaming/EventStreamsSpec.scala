@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import graft.operators.PersistedIndex
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{coalesce, col, concat, lit, when}
 import org.apache.spark.sql.streaming.OutputMode
@@ -1122,6 +1123,26 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  // one maintained batch per family, driven through the single
+  // EventStreams.maintainedBatch with the step its public starter uses
+  private def mhStep(tag: String) = EventStreams.dedupStep(
+    graft.operators.Dedup.minhashIncrementalPersisted(_, "doc_id", "text",
+      tag, 0.5), "doc_id") _
+  private def embStep(tag: String) = EventStreams.dedupStep(
+    graft.operators.Dedup.embedIncrementalPersisted(_, "vec_id",
+      "embedding", tag, 0.999), "vec_id") _
+  private def annBatch(df: org.apache.spark.sql.DataFrame, id: Long,
+      tag: String, onS: (Long, org.apache.spark.sql.DataFrame) => Unit,
+      crashBeforeCommit: () => Unit = () => ()): Unit = {
+    lazy val books = graft.operators.Similarity.loadIndexCodebooks(spark, tag)
+    EventStreams.maintainedBatch(PersistedIndex.ann(tag, books), df, id,
+        "vec_id", "embedding", onS, crashBeforeCommit) { snap =>
+      (graft.operators.Similarity.annIvfPqServe(snap, "vec_id", "embedding",
+        tag, k = 1, nprobe = 4, overfetch = 4, preloaded = Some(books))
+        .localCheckpoint(), snap)
+    }
+  }
+
   test("maintainedMinhashBatch crash recovery (judge r15 ask #5): a crash " +
        "after the index append but before the commit row does not " +
        "double-append on replay; the guard is a TABLE, so it survives " +
@@ -1149,8 +1170,9 @@ class EventStreamsSpec extends SparkSpec {
     // batch 0: doc 100 is novel (admitted), 101 copies corpus doc 2
     val b0 = Seq((100L, doc(99)), (101L, doc(2))).toDF("doc_id", "text")
     val boom = intercept[RuntimeException] {
-      EventStreams.maintainedMinhashBatch(b0, 0L, "doc_id", "text", tag,
-        0.5, onM, crashBeforeCommit = () => throw new RuntimeException("boom"))
+      EventStreams.maintainedBatch(PersistedIndex.minhash(tag), b0, 0L,
+        "doc_id", "text", onM,
+        crashBeforeCommit = () => throw new RuntimeException("boom"))(mhStep(tag))
     }
     assert(boom.getMessage == "boom")
     // the dangerous state: the append landed, the commit row did not
@@ -1159,8 +1181,8 @@ class EventStreamsSpec extends SparkSpec {
     // replay — a fresh call shares NOTHING in memory with the crashed
     // one (all guard state is in tables), i.e. a new JVM's replay
     matches.clear()
-    EventStreams.maintainedMinhashBatch(b0, 0L, "doc_id", "text", tag,
-      0.5, onM)
+    EventStreams.maintainedBatch(PersistedIndex.minhash(tag), b0, 0L,
+      "doc_id", "text", onM)(mhStep(tag))
     assert(matches.toSeq == Seq((101L, 2L)),
       s"replay emitted wrong matches: $matches")
     assert(spark.table(st).filter(col("corpus_id") === 100L).count() == 1,
@@ -1176,15 +1198,15 @@ class EventStreamsSpec extends SparkSpec {
     // batch 1: a copy of the admitted doc matches it exactly once —
     // provable only if the index holds exactly one copy of doc 100
     matches.clear()
-    EventStreams.maintainedMinhashBatch(
+    EventStreams.maintainedBatch(PersistedIndex.minhash(tag),
       Seq((200L, doc(99))).toDF("doc_id", "text"), 1L, "doc_id", "text",
-      tag, 0.5, onM)
+      onM)(mhStep(tag))
     assert(matches.toSeq == Seq((200L, 100L)), s"got $matches")
     // replaying a COMMITTED batch is a durable no-op
     matches.clear()
     val stBefore = spark.table(st).count()
-    EventStreams.maintainedMinhashBatch(b0, 0L, "doc_id", "text", tag,
-      0.5, onM)
+    EventStreams.maintainedBatch(PersistedIndex.minhash(tag), b0, 0L,
+      "doc_id", "text", onM)(mhStep(tag))
     assert(matches.isEmpty && spark.table(st).count() == stBefore,
       "committed batch replayed")
     Seq(bt, st, ct).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -1216,22 +1238,23 @@ class EventStreamsSpec extends SparkSpec {
     val b0 = Seq((100L, vec(999)), (101L, vec(3).map(_ * 1.5)))
       .toDF("vec_id", "embedding")
     intercept[RuntimeException] {
-      EventStreams.maintainedEmbedBatch(b0, 0L, "vec_id", "embedding",
-        tag, 0.999, onM, crashBeforeCommit = () => throw new RuntimeException("boom"))
+      EventStreams.maintainedBatch(PersistedIndex.embed(tag), b0, 0L,
+        "vec_id", "embedding", onM,
+        crashBeforeCommit = () => throw new RuntimeException("boom"))(embStep(tag))
     }
     assert(spark.table(vecT).filter(col("corpus_id") === 100L).count() == 1)
     assert(spark.table(ct).filter(col("batch_id") === 0L).isEmpty)
     matches.clear()
-    EventStreams.maintainedEmbedBatch(b0, 0L, "vec_id", "embedding",
-      tag, 0.999, onM)
+    EventStreams.maintainedBatch(PersistedIndex.embed(tag), b0, 0L,
+      "vec_id", "embedding", onM)(embStep(tag))
     assert(matches.toSeq == Seq((101L, 3L)), s"got $matches")
     assert(spark.table(vecT).filter(col("corpus_id") === 100L).count() == 1,
       "double-append in the vecs table")
     // batch 1: a scaled copy of the admitted vector matches exactly once
     matches.clear()
-    EventStreams.maintainedEmbedBatch(
+    EventStreams.maintainedBatch(PersistedIndex.embed(tag),
       Seq((200L, vec(999).map(_ * 2.0))).toDF("vec_id", "embedding"), 1L,
-      "vec_id", "embedding", tag, 0.999, onM)
+      "vec_id", "embedding", onM)(embStep(tag))
     assert(matches.toSeq == Seq((200L, 100L)), s"got $matches")
     Seq(sigT, vecT, ct).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
@@ -1263,16 +1286,14 @@ class EventStreamsSpec extends SparkSpec {
     val b0 = Seq((100L, vec(3).map(_ * 1.5)), (101L, vec(999)))
       .toDF("vec_id", "embedding")
     intercept[RuntimeException] {
-      EventStreams.maintainedAnnBatch(b0, 0L, "vec_id", "embedding", tag,
-        k = 1, nprobe = 4, overfetch = 4, onS,
+      annBatch(b0, 0L, tag, onS,
         crashBeforeCommit = () => throw new RuntimeException("boom"))
     }
     // the crash landed the insert but not the commit row
     assert(spark.table(vecsT).filter(col("vid") === 100L).count() == 1)
     assert(spark.table(ct).filter(col("batch_id") === 0L).isEmpty)
     served.clear()
-    EventStreams.maintainedAnnBatch(b0, 0L, "vec_id", "embedding", tag,
-      k = 1, nprobe = 4, overfetch = 4, onS)
+    annBatch(b0, 0L, tag, onS)
     assert(served.toSet == Set((100L, 3L), (101L, served.toMap.apply(101L))),
       s"replayed serve lost the family match: $served")
     assert(spark.table(vecsT).filter(col("vid") === 100L).count() == 1 &&
@@ -1288,9 +1309,9 @@ class EventStreamsSpec extends SparkSpec {
     // batch 1: a 2.0x copy of the batch-0 NOVEL vector serves to it —
     // provable only via the appended index rows
     served.clear()
-    EventStreams.maintainedAnnBatch(
+    annBatch(
       Seq((200L, vec(999).map(_ * 2.0))).toDF("vec_id", "embedding"), 1L,
-      "vec_id", "embedding", tag, k = 1, nprobe = 4, overfetch = 4, onS)
+      tag, onS)
     assert(served.toSeq == Seq((200L, 101L)), s"got $served")
     (Seq(codesT, vecsT, coarseT, pqT) :+ ct)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
