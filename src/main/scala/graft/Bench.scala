@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Execute the full plan without keeping results. A noop-format write
     * evaluates every measured expression: `.count()` would let Catalyst
@@ -42,22 +42,14 @@ object Bench {
     * self-reports instead of masquerading as a code regression. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry generated-class cache thrashes when ~67
-      // queries' codegen units cycle through it once per interleaved
-      // pass, re-paying Janino compilation (~0.1-0.2 s/query/pass) that
-      // the consecutive-reps protocol never saw; size it to hold the
-      // whole suite so passes 2+ measure execution, not compilation
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the default 100-entry generated-class cache thrashes when ~67
+    // queries' codegen units cycle through it once per interleaved
+    // pass, re-paying Janino compilation (~0.1-0.2 s/query/pass) that
+    // the consecutive-reps protocol never saw; size it to hold the
+    // whole suite so passes 2+ measure execution, not compilation
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.codegen.cache.maxEntries" -> "10000")
     // Warm-up: JIT/codegen caches + first-touch parquet footers, so the
     // per-query numbers measure the plans rather than JVM startup.
     Seq("q1_agg", "q_text_tokens", "q_events_window", "q_ann_topk")
@@ -86,32 +78,11 @@ object Bench {
       val ts = samples(name).sorted
       (name, ts(ts.length / 2), ts.head)
     }
-    // 4-decimal times (0.1 ms — far under run-to-run noise): the driver
-    // captures this line from a stdout TAIL, and full 17-digit doubles
-    // pushed the 113-query r8 line past the capture window (only 58
-    // per-query medians survived machine-readable in BENCH_r08.json)
-    def r4(d: Double) = math.rint(d * 10000) / 10000
-    def fmt(sel: ((String, Double, Double)) => Double) =
-      results.map(r => s"\"" + r._1 + "\":" + r4(sel(r))).mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val totalMin = results.map(_._3).sum
-    val noise = if (totalMin > 0) total / totalMin else 1.0
     // median-of-3 calibration, measured after the suite (box state the
     // queries actually saw); first call warms the JIT
     val calib = { calibrate(); Seq(calibrate(), calibrate(), calibrate()).sorted.apply(1) }
-    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // stdout line (the driver's capture): every contract key, but ONE
-    // per-query map — the r17 two-map line was ~12.5 KB at 238 queries
-    // and overflowed the driver's stdout-tail window, losing two rounds
-    // of PERF ground truth (judge r17 ask #2). The medians map (the
-    // "queries" contract key, values unchanged) goes LAST so a clipped
-    // tail still ends inside it and per-query pairs stay salvageable;
-    // queries_min moves to the file line only (same numbers as ever).
-    val scalars = s""""metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"noise_ratio":$noise,"calib_sec":$calib,"sf":"$sfDir","reps":$passes,"interleaved":true,"failed":$errs"""
-    println(s"""{$scalars,"queries":${fmt(_._2)}}""")
-    // the FULL line (both maps) persists to a file so every per-query
-    // median and min stays machine-readable regardless of the capture
-    val line = s"""{$scalars,"queries_min":${fmt(_._3)},"queries":${fmt(_._2)}}"""
+    val (stdoutLine, line) = resultLines(results, calib, sfDir, passes, failed)
+    println(stdoutLine)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes("UTF-8"))
@@ -120,5 +91,25 @@ object Bench {
     }
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** The run's two result lines from its (query, median, min) rows. The
+    * stdout line carries the contract keys only (metric, value,
+    * total_min, noise_ratio, calib_sec, sf, reps, failed, plus unit and
+    * interleaved): the caller keeps only the last 2000 bytes of stdout,
+    * and a per-query map there (12.4 KB at 238 queries) cut the line.
+    * The file line adds both per-query maps, times in 4 decimals (0.1 ms,
+    * far under run-to-run noise). */
+  def resultLines(results: Seq[(String, Double, Double)], calib: Double,
+                  sfDir: String, passes: Int, failed: Seq[String]): (String, String) = {
+    def r4(d: Double) = math.rint(d * 10000) / 10000
+    def fmt(sel: ((String, Double, Double)) => Double) =
+      results.map(r => s"\"" + r._1 + "\":" + r4(sel(r))).mkString("{", ",", "}")
+    val total = results.map(_._2).sum
+    val totalMin = results.map(_._3).sum
+    val noise = if (totalMin > 0) total / totalMin else 1.0
+    val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val scalars = s""""metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"noise_ratio":$noise,"calib_sec":$calib,"sf":"$sfDir","reps":$passes,"interleaved":true,"failed":$errs"""
+    (s"{$scalars}", s"""{$scalars,"queries_min":${fmt(_._3)},"queries":${fmt(_._2)}}""")
   }
 }

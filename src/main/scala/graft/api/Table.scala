@@ -311,7 +311,6 @@ final case class Table(df: DataFrame, name: String) {
     * what dominates. */
   def describe(cols: Seq[String], approx: Boolean = false): DataFrame = {
     require(cols.nonEmpty, "describe needs at least one column")
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val D = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
     val aggs = cols.flatMap { c =>
       Seq(count(col(c)).as(s"__cnt_$c"),
@@ -326,10 +325,10 @@ final case class Table(df: DataFrame, name: String) {
     // final-merge task — the r9 scale-killer). Values carry the
     // ±n/accuracy rank guarantee (checked by q_describe_approx's oracle).
     val qAggs = cols.map { c =>
-      val e =
-        if (approx) s"approx_percentile($c, array(0.25D, 0.5D, 0.75D), 10000)"
-        else s"exact_percentile($c, array(0.25, 0.5, 0.75))"
-      expr(e).cast("array<double>").as(s"__q_$c")
+      val q =
+        if (approx) expr(s"approx_percentile($c, array(0.25D, 0.5D, 0.75D), 10000)")
+        else graft.functions.GraftFunctions.exact_percentile(col(c), Seq(0.25, 0.5, 0.75))
+      q.cast("array<double>").as(s"__q_$c")
     }
     val moments = df.agg(count(lit(1)).as("__nr"), aggs: _*)
     val quarts = df.agg(qAggs.head, qAggs.tail: _*)
@@ -373,6 +372,8 @@ final case class Table(df: DataFrame, name: String) {
 
   /** `Table.query(sql)` (base.py:1616) — raw SQL against this table. */
   def query(spark: SparkSession, sql: String): DataFrame = {
+    // user SQL may name a native function
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     df.createOrReplaceTempView(name)
     spark.sql(sql)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit, sum}
+import org.apache.spark.sql.functions.{lit, sum}
 import org.apache.spark.sql.types.{DataType, DataTypes, DoubleType, LongType}
 
 /** `dec6_micros(v)`: the integer-micros quantization step of the repo's
@@ -82,8 +82,8 @@ object Dec6Micros {
     * over long-backed decimals. The final *1e-6 decimal multiply is exact
     * (scale shift only) and the decimal→double conversion is correctly
     * rounded, so results are bit-identical to the decimal-cast spelling
-    * (Dec6MicrosSpec asserts it). Needs GraftFunctions.ensureRegistered. */
+    * (Dec6MicrosSpec asserts it). */
   def dec6Sum(c: Column): Column =
-    (sum(call_function("dec6_micros", c).cast(D28_0)) * lit(MicroLit))
+    (sum(GraftFunctions.dec6_micros(c).cast(D28_0)) * lit(MicroLit))
       .cast("double")
 }

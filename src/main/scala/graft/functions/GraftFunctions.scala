@@ -1,18 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.GraftColumns.{column, expression}
+import org.apache.spark.sql.types.DoubleType
 
-/** Registration of graft's native expressions.
+/** The SQL-text names of graft's native expressions (`minhash_bands(...)`
+  * in `spark.sql` or `expr`). Column code needs none of this: the
+  * [[GraftFunctions]] handles build their Expressions directly.
   *
-  * Two routes, both public Spark API:
-  *   - `SparkSession.builder().withExtensions(GraftExtensions.inject)` (or
-  *     `spark.sql.extensions=graft.functions.GraftExtensions`) — the
-  *     cluster-deployment route;
-  *   - `GraftFunctions.ensureRegistered(spark)` — imperative fallback for
-  *     sessions graft didn't build (driver smoke, notebooks).
+  * Installed by `graft.GraftSession.local` (`withExtensions`), by
+  * `spark.sql.extensions=graft.functions.GraftExtensions` on a cluster,
+  * and by `Table.query` / `Tables.registerViews`, the raw-SQL entry points,
+  * through [[GraftFunctions.ensureRegistered]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = GraftExtensions.inject(e)
@@ -150,8 +151,11 @@ object GraftExtensions {
     all.foreach { case (id, fi, builder) => e.injectFunction((id, fi, builder)) }
 }
 
+/** Column handles for graft's native expressions. Each wraps its Catalyst
+  * Expression directly, so it evaluates on any session, registered or not;
+  * the function registry ([[GraftExtensions]]) serves SQL text only. */
 object GraftFunctions {
-  /** Register on an existing session (idempotent). */
+  /** Install the SQL-text names on an existing session (idempotent). */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
@@ -160,82 +164,61 @@ object GraftFunctions {
     }
   }
 
-  // Column-API handles (functions must be registered on the active session).
-  def rolling_hash(c: Column): Column = call_function("rolling_hash", c)
-  def simhash64(c: Column): Column = call_function("simhash64", c)
-  def simhash_wide(c: Column, parts: Int): Column =
-    call_function("simhash_wide", c, org.apache.spark.sql.functions.lit(parts))
-  def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-  def ham_xor(a: Column, b: Column): Column = call_function("ham_xor", a, b)
-  def srp_sketch(v: Column, words: Int, planesPerWord: Int,
-                 seedBase: Long): Column =
-    call_function("srp_sketch", v, org.apache.spark.sql.functions.lit(words),
-      org.apache.spark.sql.functions.lit(planesPerWord),
-      org.apache.spark.sql.functions.lit(seedBase))
+  def rolling_hash(c: Column): Column = column(RollingHash(expression(c)))
+  def simhash64(c: Column): Column = column(SimHash64(expression(c)))
+  def simhash_wide(c: Column, parts: Int): Column = column(SimHashWide(expression(c), parts))
+  def vec_dot(a: Column, b: Column): Column = column(VecDot(expression(a), expression(b)))
+  def ham_xor(a: Column, b: Column): Column = column(HamXor(expression(a), expression(b)))
+  def srp_sketch(v: Column, words: Int, planesPerWord: Int, seedBase: Long): Column =
+    column(SrpSketch(expression(v), words, planesPerWord, seedBase))
   def minhash_bands(shingles: Column, numPerm: Int, bands: Int): Column =
-    call_function("minhash_bands", shingles,
-      org.apache.spark.sql.functions.lit(numPerm),
-      org.apache.spark.sql.functions.lit(bands))
-  def word_shingles(text: Column, w: Int): Column =
-    call_function("word_shingles", text, org.apache.spark.sql.functions.lit(w))
-  def word_ngrams(text: Column, n: Int): Column =
-    call_function("word_ngrams", text, org.apache.spark.sql.functions.lit(n))
-  def fnv1a64(s: Column, basis: Long): Column =
-    call_function("fnv1a64", s, org.apache.spark.sql.functions.lit(basis))
+    column(MinHashBands(expression(shingles), numPerm, bands))
+  def word_shingles(text: Column, w: Int): Column = column(WordShingles(expression(text), w))
+  def word_ngrams(text: Column, n: Int): Column = column(WordNgrams(expression(text), n))
+  def fnv1a64(s: Column, basis: Long): Column = column(Fnv1a64Col(expression(s), basis))
   def nb_scores(toks: Column, vocab: Seq[String], lam: Seq[Seq[Long]],
                 oov: Seq[Long], prior: Seq[Long]): Column =
-    call_function("nb_scores", toks,
-      org.apache.spark.sql.functions.typedLit(vocab),
-      org.apache.spark.sql.functions.typedLit(lam),
-      org.apache.spark.sql.functions.typedLit(oov),
-      org.apache.spark.sql.functions.typedLit(prior))
+    column(NbScores(expression(toks), vocab.toArray, lam.map(_.toArray).toArray,
+      oov.toArray, prior.toArray))
   def dsir_score(feats: Column, lamMicros: Seq[Long]): Column =
-    call_function("dsir_score", feats,
-      org.apache.spark.sql.functions.typedLit(lamMicros))
+    column(DsirScore(expression(feats), lamMicros.toArray))
   def word_chunks(text: Column, size: Int, stride: Int): Column =
-    call_function("word_chunks", text,
-      org.apache.spark.sql.functions.lit(size),
-      org.apache.spark.sql.functions.lit(stride))
-  def nfc_normalize(text: Column): Column = call_function("nfc_normalize", text)
-  def char_pairs(text: Column): Column = call_function("char_pairs", text)
+    column(WordChunks(expression(text), size, stride))
+  def nfc_normalize(text: Column): Column = column(NfcNormalize(expression(text)))
+  def char_pairs(text: Column): Column = column(CharPairs(expression(text)))
   def bloom_contains(words: Column, key: Column, k: Int): Column =
-    call_function("bloom_contains", words, key,
-      org.apache.spark.sql.functions.lit(k))
-  def media_header(payload: Column): Column = call_function("media_header", payload)
-  def html_text(html: Column): Column = call_function("html_text", html)
-  def audio_header(payload: Column): Column = call_function("audio_header", payload)
-  def mp4_header(payload: Column): Column = call_function("mp4_header", payload)
+    column(BloomContains(expression(words), expression(key), k))
+  def media_header(payload: Column): Column = column(MediaHeader(expression(payload)))
+  def html_text(html: Column): Column = column(HtmlText(expression(html)))
+  def audio_header(payload: Column): Column = column(AudioHeader(expression(payload)))
+  def mp4_header(payload: Column): Column = column(Mp4Header(expression(payload)))
   def image_dhash(payload: Column, gcols: Int, grows: Int): Column =
-    call_function("image_dhash", payload,
-      org.apache.spark.sql.functions.lit(gcols),
-      org.apache.spark.sql.functions.lit(grows))
+    column(ImageDhash(expression(payload), gcols, grows))
   def bmp_synth(src: Column, shift: Column, bump: Column): Column =
-    call_function("bmp_synth", src, shift, bump)
+    column(BmpSynth(expression(src), expression(shift), expression(bump)))
   def pcm_fingerprint(payload: Column, wins: Int, phases: Int): Column =
-    call_function("pcm_fingerprint", payload,
-      org.apache.spark.sql.functions.lit(wins),
-      org.apache.spark.sql.functions.lit(phases))
+    column(PcmFingerprint(expression(payload), wins, phases))
   def wav_synth(src: Column, gain: Column, bump: Column): Column =
-    call_function("wav_synth", src, gain, bump)
+    column(WavSynth(expression(src), expression(gain), expression(bump)))
   def video_dhash(payload: Column, frames: Int, gcols: Int, grows: Int): Column =
-    call_function("video_dhash", payload,
-      org.apache.spark.sql.functions.lit(frames),
-      org.apache.spark.sql.functions.lit(gcols),
-      org.apache.spark.sql.functions.lit(grows))
+    column(VideoDhash(expression(payload), frames, gcols, grows))
   def marker_counts(toks: Column, vocabs: Seq[Seq[String]]): Column =
-    call_function("marker_counts", toks,
-      org.apache.spark.sql.functions.typedLit(vocabs))
+    column(MarkerCounts(expression(toks), vocabs))
   def vec_mat_cosines(v: Column, mat: Array[Array[Double]]): Column =
-    call_function("vec_mat_cosines", v,
-      org.apache.spark.sql.functions.typedLit(mat.map(_.toSeq).toSeq))
-  def repetition_stats(toks: Column): Column = call_function("repetition_stats", toks)
-  def text_quality_stats(text: Column): Column =
-    call_function("text_quality_stats", text)
+    column(VecMatCosines(expression(v), mat))
+  def repetition_stats(toks: Column): Column = column(RepetitionStats(expression(toks)))
+  def text_quality_stats(text: Column): Column = column(QualityStats(expression(text)))
   def byte_histogram(payload: Column, buckets: Int): Column =
-    call_function("byte_histogram", payload,
-      org.apache.spark.sql.functions.lit(buckets))
+    column(ByteHistogram(expression(payload), buckets))
   def srp_signature(v: Column, numPlanes: Int, seed: Long = 0L): Column =
-    call_function("srp_signature", v,
-      org.apache.spark.sql.functions.lit(numPlanes),
-      org.apache.spark.sql.functions.lit(seed))
+    column(SrpSignature(expression(v), numPlanes, seed))
+  def dec6_micros(c: Column): Column = column(Dec6Micros(expression(c)))
+  /** Aggregate: the exact percentile `p` of `c` cast to double (see
+    * [[ExactPercentile]]); the `Seq` form returns an array, one per `ps`. */
+  def exact_percentile(c: Column, p: Double): Column = percentile(c, Array(p), isArray = false)
+  def exact_percentile(c: Column, ps: Seq[Double]): Column =
+    percentile(c, ps.toArray, isArray = true)
+
+  private def percentile(c: Column, ps: Array[Double], isArray: Boolean): Column =
+    column(ExactPercentile(Cast(expression(c), DoubleType), ps, isArray).toAggregateExpression())
 }

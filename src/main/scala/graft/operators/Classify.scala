@@ -257,7 +257,6 @@ object Classify {
       s"need lr > 0 and momentum in [0,1), got ($lr, $momentum)")
     require(hashChars >= 1 && hashChars <= 8,
       s"hashChars must be in [1,8], got $hashChars")
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val t = coalesce(col(textCol), lit(""))
     val base = docs.select(col(idCol).as("doc_id"),
       col(labelCol).as("label"),

@@ -47,7 +47,6 @@ object Curation {
                     minTokens: Int = 10, maxStopwordRatio: Double = 1.0,
                     nearDupTau: Double = 0.8,
                     maxBroadcastLosers: Long = MaxBroadcastLosers): (DataFrame, () => Unit) = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"),
       coalesce(col(textCol), lit("")).as("text"))
 
@@ -97,7 +96,6 @@ object Curation {
     // 4. provenance fingerprints: a pure per-row projection — attached with
     // select, never a self-join (which would re-execute the whole dedup
     // subtree and add a shuffle for what is scan-side arithmetic)
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val out = deduped.select(col("doc_id") +: col("lang_detected") +: col("n_tokens") +:
       col("stopword_ratio") +: col("distinct_ratio") +:
       TextAnalysis.fingerprintCols(col("text")): _*)

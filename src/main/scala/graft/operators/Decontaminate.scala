@@ -78,7 +78,6 @@ object Decontaminate {
       : (DataFrame, () => Unit) = {
     require(w > 0 && minShared > 0,
       s"w/minShared must be positive, got ($w, $minShared)")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val corpusSg = corpus.select(col(idCol).as("doc_id"),
       explode(GraftFunctions.word_shingles(col(textCol), w)).as("sg"))
     val (bench, _, cleanup) =
@@ -118,7 +117,6 @@ object Decontaminate {
       : (DataFrame, () => Unit) = {
     require(w > 0 && minShared > 0,
       s"w/minShared must be positive, got ($w, $minShared)")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     // persisted once, read twice: the hash-set build and the exact verify
     val (bench, n, cleanup) =
       benchNgramsManaged(benchmark, textCol, w, maxBroadcast)
@@ -193,7 +191,6 @@ object Decontaminate {
                              maxBroadcast: Long = MaxBroadcastNgrams)
       : (DataFrame, () => Unit) = {
     require(w > 0, s"w must be positive, got $w")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val base = corpus.select(col(idCol).as("doc_id"),
       coalesce(col(textCol), lit("")).as("text"))
     val (bench, _, cleanup) =

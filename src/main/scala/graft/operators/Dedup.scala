@@ -95,7 +95,6 @@ object Dedup {
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    tau: Double, numPerm: Int = 128, bands: Int = 32,
                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), 3).as("sh"))
     val bandsDf = sh.select(col("doc_id"),
@@ -192,7 +191,6 @@ object Dedup {
                          idCol: String, textCol: String, tau: Double,
                          numPerm: Int = 128, bands: Int = 32,
                          maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(batch.sparkSession)
     def shingled(df: DataFrame) = df.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), 3).as("sh"))
     def banded(sh: DataFrame) = sh.select(col("doc_id"),
@@ -490,7 +488,6 @@ object Dedup {
                                   textCol: String, tag: String,
                                   tau: Double): DataFrame = {
     val spark = batch.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     val (bt, st) = indexTables(tag)
     // geometry FROM the recorded table properties (advisor r14 — the
     // embedIncrementalPersisted contract): a caller-supplied
@@ -844,7 +841,6 @@ object Dedup {
                    maxHamming: Int,
                    chunks: Int = 0, chunkBits: Int = 0,
                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val nChunks =
       if (chunks > 0) chunks
       else Seq(2, 4, 8, 16, 32, 64).find(_ > maxHamming).getOrElse(
@@ -926,7 +922,6 @@ object Dedup {
   def imageDhashPairs(imgs: DataFrame, idCol: String, payloadCol: String,
                       maxHamming: Int, gcols: Int = 17, grows: Int = 8,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(imgs.sparkSession)
     val nbits = (gcols - 1) * grows
     require(nbits % 64 == 0,
       s"dhash grid must pack whole 64-bit words, got $nbits bits")
@@ -975,7 +970,6 @@ object Dedup {
   def pcmFingerprintPairs(auds: DataFrame, idCol: String, payloadCol: String,
                           maxHamming: Int, wins: Int = 17, phases: Int = 8,
                           maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(auds.sparkSession)
     val nbits = (wins - 1) * phases
     require(nbits % 64 == 0,
       s"fingerprint grid must pack whole 64-bit words, got $nbits bits")
@@ -1025,7 +1019,6 @@ object Dedup {
                       maxHamming: Int, frames: Int = 4,
                       gcols: Int = 17, grows: Int = 8,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(vids.sparkSession)
     val nbits = frames * (gcols - 1) * grows
     require(nbits % 64 == 0,
       s"fingerprint must pack whole 64-bit words, got $nbits bits")
@@ -1084,7 +1077,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         w: Int, tau: Double,
                         prefixFilter: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), w).as("sh"))
     val inv = sh.select(col("doc_id"), size(col("sh")).as("n"),
@@ -1134,7 +1126,6 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        w: Int, tau: Double,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), w).as("sh"))
     val inv = sh.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -1193,7 +1184,6 @@ object Dedup {
                       maxDf: Int = 16): DataFrame = {
     require(w > 0 && minShared > 0 && maxDf >= 2,
       s"w/minShared must be positive and maxDf >= 2, got ($w, $minShared, $maxDf)")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val inv = docs.select(col(idCol).as("doc_id"),
       explode(GraftFunctions.word_shingles(col(textCol), w)).as("s"))
       .select(col("doc_id"), col("s"), xxhash64(col("s")).as("h"))
@@ -1636,7 +1626,6 @@ object Dedup {
     * Cosine uses Similarity.cosine (deterministic left-fold dot product). */
   def embedPairs(emb: DataFrame, idCol: String, vecCol: String,
                  tau: Double, maxRows: Long = MaxExactEmbedRows): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val n = emb.select(idCol).count()
     require(n <= maxRows,
       s"embedPairs is the exact all-pairs baseline (O(n^2) cartesian) and is " +
@@ -1745,7 +1734,6 @@ object Dedup {
   def embedPairsBanded(emb: DataFrame, idCol: String, vecCol: String,
                        tau: Double, bits: Int = 0, tables: Int = 32,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
@@ -1831,7 +1819,6 @@ object Dedup {
                        idCol: String, vecCol: String, tau: Double,
                        bits: Int = 0, tables: Int = 32,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    GraftFunctions.ensureRegistered(batch.sparkSession)
     def prep(df: DataFrame) = df.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
@@ -1947,7 +1934,6 @@ object Dedup {
                                 vecCol: String, tag: String,
                                 tau: Double): DataFrame = {
     val spark = batch.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     val (sigT, vecT) = embedIndexTables(tag)
     val g = requiredIntProps(spark, sigT, Seq(EmbedBitsProp, EmbedTablesProp),
       "embedIncrementalPersisted")
@@ -2028,7 +2014,6 @@ object Dedup {
                seed: Long = 42L): DataFrame = {
     require(nlist >= 0 && kmeansIters >= 0,
       s"need nlist >= 0 and kmeansIters >= 0, got ($nlist, $kmeansIters)")
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
@@ -2097,7 +2082,6 @@ object Dedup {
   def cutDuplicateSpans(docs: DataFrame, idCol: String, textCol: String,
                         w: Int = 6): DataFrame = {
     require(w > 0, s"w must be positive, got $w")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"),
       coalesce(col(textCol), lit("")).as("text"))
     val spans = base.select(col("doc_id"),
@@ -2137,7 +2121,6 @@ object Dedup {
   def duplicateSpanRuns(docs: DataFrame, idCol: String, textCol: String,
                         w: Int = 6): DataFrame = {
     require(w > 0, s"w must be positive, got $w")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"),
       coalesce(col(textCol), lit("")).as("text"))
     val spans = base.select(col("doc_id"),

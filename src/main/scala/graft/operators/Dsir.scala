@@ -43,7 +43,6 @@ object Dsir {
 
   private def featStream(docs: DataFrame, idCol: String, textCol: String,
                          isTarget: Column): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val t = coalesce(col(textCol), lit(""))
     docs
       .select(col(idCol).as("doc_id"), isTarget.as("is_tgt"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.exact_percentile
 
 /** Batch analogs of the streaming event operators (SURVEY.md §2.2/2.3):
   * tumbling-window aggregation and gap-based sessionization. The streaming
@@ -285,12 +286,11 @@ object Events {
     * threshold filter, same guard as [[anomalies]]). */
   def robustOutliers(events: DataFrame, typeCol: String, valueCol: String,
                      idCol: String, threshold: Double = 3.5): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(events.sparkSession)
     val med = events.groupBy(col(typeCol))
-      .agg(expr(s"exact_percentile($valueCol, 0.5)").as("__med"))
+      .agg(exact_percentile(col(valueCol), 0.5).as("__med"))
     val withMed = events.join(broadcast(med), typeCol)
     val mad = withMed.groupBy(col(typeCol))
-      .agg(expr(s"exact_percentile(abs($valueCol - __med), 0.5)").as("__mad"))
+      .agg(exact_percentile(abs(col(valueCol) - col("__med")), 0.5).as("__mad"))
     withMed.join(broadcast(mad), typeCol)
       .withColumn("z", when(col("__mad") =!= 0.0,
         (col(valueCol) - col("__med")) / (lit(1.4826) * col("__mad"))))

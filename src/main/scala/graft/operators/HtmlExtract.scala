@@ -30,7 +30,6 @@ object HtmlExtract {
 
   /** (doc_id, title, text, n_blocks) via the native Expression. */
   def extract(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol), GraftFunctions.html_text(col(htmlCol)).as("h"))
       .select(col(idCol), col("h.title").as("title"),
         col("h.text").as("text"), col("h.n_blocks").as("n_blocks"))
@@ -40,7 +39,6 @@ object HtmlExtract {
     * extracted main text (funnel stage-0 plumbing). */
   def extractTextCol(df: DataFrame, htmlCol: String,
                      outTextCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(df.sparkSession)
     df.withColumn(outTextCol,
       GraftFunctions.html_text(col(htmlCol)).getField("text"))
   }

@@ -56,7 +56,6 @@ object Joins {
   def bloomSemiJoin(fact: DataFrame, dim: DataFrame, factKey: String,
                     dimKey: String, mBits: Int = 1 << 17,
                     kHashes: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(fact.sparkSession)
     val bf = dim.agg(graft.functions.BloomSketch.bloom(kHashes, mBits)(
       col(dimKey).cast("string")).as("__bf"))
     fact.crossJoin(broadcast(bf))

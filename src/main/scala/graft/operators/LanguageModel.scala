@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.GraftFunctions.exact_percentile
 
 /** Corpus-trained unigram language-model perplexity scoring — the CCNet
   * quality-filter shape (Wenzek et al. 2020, "CCNet: Extracting High
@@ -107,15 +108,14 @@ object LanguageModel {
                         langCol: String, minCount: Long = 2,
                         oovAlpha: Double = 0.5, maxLangs: Int = 1000)
       : (DataFrame, () => Unit) = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val (ppl, cleanup) =
       perplexityManaged(docs, idCol, textCol, minCount, oovAlpha)
     val scores = ppl
       .join(docs.select(col(idCol).as("doc_id"), col(langCol).as("lang")),
         Seq("doc_id"))
     val thrRows = scores.groupBy("lang")
-      .agg(expr("exact_percentile(avg_nll, 0.3333333333333333)").as("t33"),
-        expr("exact_percentile(avg_nll, 0.6666666666666666)").as("t67"))
+      .agg(exact_percentile(col("avg_nll"), 0.3333333333333333).as("t33"),
+        exact_percentile(col("avg_nll"), 0.6666666666666666).as("t67"))
       .limit(maxLangs + 1).collect()
     require(thrRows.length <= maxLangs,
       s"more than $maxLangs languages — not a bounded threshold table")

@@ -108,7 +108,6 @@ object Multimodal {
     * posture for the header stage; full pixel decode still needs a codec
     * and keeps the mapPartitions plumbing below. */
   def decodeHeader(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol),
         graft.functions.GraftFunctions.media_header(col(payloadCol)).as("hdr"))
       .select(col(idCol), col("hdr.format").as("format"),
@@ -233,7 +232,6 @@ object Multimodal {
     * plumbing. */
   def decodeAudioHeader(df: DataFrame, idCol: String,
                         payloadCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol),
         graft.functions.GraftFunctions.audio_header(col(payloadCol)).as("hdr"))
       .select(col(idCol), col("hdr.format").as("format"),
@@ -304,7 +302,6 @@ object Multimodal {
     * decode stays behind the codec plumbing. */
   def decodeVideoHeader(df: DataFrame, idCol: String,
                         payloadCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol),
         graft.functions.GraftFunctions.mp4_header(col(payloadCol)).as("hdr"))
       .select(col(idCol), col("hdr.format").as("format"),
@@ -389,7 +386,6 @@ object Multimodal {
     * column per bin so the DuckDB oracle compares plain integers. */
   def byteFeatures(df: DataFrame, idCol: String, payloadCol: String,
                    buckets: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val hist = graft.functions.GraftFunctions.byte_histogram(col(payloadCol), buckets)
     df.select(col(idCol) +:
       octet_length(col(payloadCol)).cast("long").as("n_bytes") +:
@@ -457,7 +453,6 @@ object Multimodal {
     // (functions/MediaExpressions.scala BmpSynthImpl — a ~3-store/pixel
     // byte loop; the original per-pixel hex-string concat cost 20 s at
     // sf0.1, hours at decade scale, for a FIXTURE). Same bytes.
-    graft.functions.GraftFunctions.ensureRegistered(imgs.sparkSession)
     imgs.select(col(idCol),
       graft.functions.GraftFunctions.bmp_synth(col(srcCol).cast("long"),
         col(shiftCol).cast("long"), col(bumpCol).cast("long")).as("payload"))
@@ -474,7 +469,6 @@ object Multimodal {
     * 180·(1+gain) + bump ≤ 32767 is enforced by the Expression. */
   def syntheticWavs(auds: DataFrame, idCol: String, srcCol: String,
                     gainCol: String, bumpCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(auds.sparkSession)
     auds.select(col(idCol),
       graft.functions.GraftFunctions.wav_synth(col(srcCol).cast("long"),
         col(gainCol).cast("long"), col(bumpCol).cast("long")).as("payload"))
@@ -497,7 +491,6 @@ object Multimodal {
                       frames: Int = 4, bumpFrame: Int = 2): DataFrame = {
     require(frames >= 1 && bumpFrame >= 0 && bumpFrame < frames,
       s"need frames >= 1 and bumpFrame in [0, frames), got $frames/$bumpFrame")
-    graft.functions.GraftFunctions.ensureRegistered(vids.sparkSession)
     val frameSize =
       54 + graft.functions.BmpSynthImpl.W * graft.functions.BmpSynthImpl.H * 3
     val mdatSize = 8 + frames * frameSize

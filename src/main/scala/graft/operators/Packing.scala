@@ -169,7 +169,6 @@ object Packing {
     * reaches the document end, so no fully-contained tail fragments. */
   def chunkDocuments(docs: DataFrame, idCol: String, textCol: String,
                      size: Int, stride: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol),
       posexplode(graft.functions.GraftFunctions.word_chunks(
         coalesce(col(textCol), lit("")), size, stride))

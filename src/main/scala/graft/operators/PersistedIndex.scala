@@ -74,7 +74,6 @@ private[graft] final case class PersistedIndex(
   def write(corpus: DataFrame, idCol: String, valueCol: String,
             geom: Map[String, Int], sides: () => Unit = () => ()): Unit = {
     val spark = corpus.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     // a previous JVM may have left a managed location behind with no
     // catalog entry: dropStaleTable removes both forms
     (fingerprinted :+ Dedup.commitsTableName(primary))
@@ -114,7 +113,6 @@ private[graft] final case class PersistedIndex(
   def maintain[T](spark: SparkSession, what: String)
                  (body: Map[String, Int] => T): T =
     Dedup.withMaintenanceLease(spark, primary, what) {
-      GraftFunctions.ensureRegistered(spark)
       tables.foreach(t => Dedup.recoverSwappedTable(spark, t.name))
       require(fingerprinted.forall(spark.catalog.tableExists),
         s"$what: no index for tag '$tag' — write it first")

@@ -124,7 +124,6 @@ object Search {
                 k: Int = 10, poolSize: Int = 50,
                 rrfK: Int = 60): DataFrame = {
     require(poolSize >= k && rrfK > 0, "need poolSize >= k and rrfK > 0")
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.GraftFunctions.vec_dot(a, b)
     // both pool windows rank ≤ poolSize rows AFTER their limit — bounded

@@ -36,7 +36,6 @@ object Similarity {
     * query id — k·|queries| rows survive. Self-matches excluded. */
   def annTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryIds: Seq[Long], k: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = e.filter(col("vid").isin(queryIds: _*))
@@ -79,7 +78,6 @@ object Similarity {
     require(e.columns.contains("vid") && e.columns.contains("v"),
       s"kmeansCodebook expects columns (vid, v: array<double>), got " +
       e.columns.mkString("(", ", ", ")"))
-    graft.functions.GraftFunctions.ensureRegistered(e.sparkSession)
     // seeded-sample init ordered by md5("<vid>:<seed>") — a keyed hash
     // order like the previous xxhash64 form, but replayable by the
     // DuckDB oracle (md5 exists in both engines; xxhash64 does not), so
@@ -128,7 +126,6 @@ object Similarity {
              queryIds: Seq[Long], k: Int,
              nlist: Int = 16, nprobe: Int = 4,
              kmeansIters: Int = 2, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val codebook: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
@@ -239,7 +236,6 @@ object Similarity {
             queryIds: Seq[Long], k: Int,
             m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
             overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
@@ -403,7 +399,6 @@ object Similarity {
                nlist: Int = 16, nprobe: Int = 4,
                m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
                overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
@@ -515,7 +510,6 @@ object Similarity {
                        nlist: Int = 16, nprobe: Int = 4,
                        m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
                        overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
@@ -707,7 +701,6 @@ object Similarity {
                     tag: String, nlist: Int = 16, m: Int = 4,
                     ksub: Int = 8, kmeansIters: Int = 2,
                     seed: Long = 42L, buckets: Int = 32): Unit = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val (_, _, coarseT, pqT) = annIndexTables(tag)
@@ -842,7 +835,6 @@ object Similarity {
     * — visible, not hidden), and compaction leaves it unchanged. */
   def annDriftReport(spark: org.apache.spark.sql.SparkSession,
                      tag: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val (codesT, vecsT, coarseT, _) = annIndexTables(tag)
     val statsT = annStatsTable(tag)
     Seq(codesT, vecsT).foreach(Dedup.recoverSwappedTable(spark, _))
@@ -925,7 +917,6 @@ object Similarity {
   def annIvfPqPersisted(spark: org.apache.spark.sql.SparkSession,
                         tag: String, queryIds: Seq[Long], k: Int,
                         nprobe: Int = 4, overfetch: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
     val m = Dedup.requiredIntProp(spark, codesT, AnnMProp, "annIvfPqPersisted")
@@ -1018,7 +1009,6 @@ object Similarity {
                     preloaded: Option[(Array[Array[Double]],
                       Array[Array[Array[Double]]])] = None): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // a multi-column relation passed by mistake would otherwise be
     // silently narrowed to its first column — serving against the wrong
@@ -1146,7 +1136,6 @@ object Similarity {
 
   def nearestCentroid(emb: DataFrame, idCol: String, vecCol: String,
                       labelCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     // long-format (label, pos, c) rows, label-then-pos ordered, fold into
     // the label-major matrix; decimal-exact means, so the collected
     // centroids are bit-identical to what the oracle's CTE computes
@@ -1179,7 +1168,6 @@ object Similarity {
   def knnClassify(emb: DataFrame, idCol: String, vecCol: String,
                   labelCol: String, probe: Column, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb.select(col(idCol).as("vid"),
       col(vecCol).cast("array<double>").as("v"), col(labelCol).as("lbl"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -1221,7 +1209,6 @@ object Similarity {
   def annLsh(emb: DataFrame, idCol: String, vecCol: String,
              queryIds: Seq[Long], k: Int,
              numPlanes: Int = 16, bands: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val bits = numPlanes / bands
     val mask = (1L << bits) - 1
     val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"),

@@ -47,7 +47,6 @@ object TextAnalysis {
 
   /** Per-language marker scores + deterministic argmax. */
   def langId(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select((col(idCol) +: langScoreCols(col(textCol))): _*)
       .withColumn("detected", detectedCol)
   }
@@ -66,7 +65,6 @@ object TextAnalysis {
     * engines. */
   def langMix(docs: DataFrame, idCol: String, textCol: String,
               minMarkers: Int = 2): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val langs = Markers.map(_._1)
     val scored = docs
       .select((col(idCol) +: langScoreCols(col(textCol))): _*)
@@ -131,7 +129,6 @@ object TextAnalysis {
   }
 
   def quality(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select((col(idCol) +: qualityCols(col(textCol))): _*)
   }
 
@@ -225,7 +222,6 @@ object TextAnalysis {
 
   /** Per-doc repetition report (composable columns: [[repetitionCols]]). */
   def repetition(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol) +:
       repetitionCols(coalesce(col(textCol), lit(""))): _*)
   }
@@ -320,7 +316,6 @@ object TextAnalysis {
   /** Document fingerprints: normalized text → md5 (exact dedup key) +
     * polynomial rolling hash (graft native Expression, codegen'd). */
   def fingerprint(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol) +: fingerprintCols(col(textCol)): _*)
   }
 
@@ -339,7 +334,6 @@ object TextAnalysis {
     * right trade for a regex-bound projection on every box measured. */
   def fingerprintOrdered(docs: DataFrame, idCol: String,
                          textCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol), col(textCol))
       .repartitionByRange(col(idCol))
       .sortWithinPartitions(idCol)
@@ -355,7 +349,6 @@ object TextAnalysis {
     * spine >= bucket join on the driver-side-broadcastable agg — the
     * 100 TB cost is the scan, not the sweep. */
   def qualitySweep(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val spark = docs.sparkSession
     import org.apache.spark.sql.functions.{broadcast => bcast}
     val st = GraftFunctions.text_quality_stats(coalesce(col(textCol), lit("")))

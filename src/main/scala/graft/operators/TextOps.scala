@@ -31,8 +31,7 @@ object TextOps {
 
   /** Occurrence count of marker tokens (language-ID scoring) — one probe
     * of the native marker_counts hash map per token instead of an
-    * interpreted filter+array_contains scan. Requires
-    * GraftFunctions.ensureRegistered on the session. */
+    * interpreted filter+array_contains scan. */
   def markerCount(toks: Column, markers: Seq[String]): Column =
     element_at(graft.functions.GraftFunctions.marker_counts(toks, Seq(markers)), 1)
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Table, ViewCompiler, ViewDef, ViewFilter, ViewRegistry}
+import graft.functions.GraftFunctions.exact_percentile
 import graft.operators.{Cdc, ChangeLog}
 import graft.tables.Tables
 
@@ -408,8 +409,8 @@ object CoreQueries {
     // and produce bit-identical doubles (verified on this data)
     "q_stats_quantiles" -> ((s, d) =>
       Tables.orders(s, d).groupBy("o_orderstatus")
-        .agg(expr("exact_percentile(o_totalprice, 0.5)").as("med_total"),
-          expr("exact_percentile(o_totalprice, 0.9)").as("p90_total"),
+        .agg(exact_percentile(col("o_totalprice"), 0.5).as("med_total"),
+          exact_percentile(col("o_totalprice"), 0.9).as("p90_total"),
           count(lit(1)).as("n"))
         .orderBy("o_orderstatus")),
 
@@ -638,8 +639,8 @@ object CoreQueries {
     "q_winsorize" -> ((s, d) => {
       val o = Tables.orders(s, d)
       val bounds = o.groupBy("o_orderstatus")
-        .agg(expr("exact_percentile(o_totalprice, 0.05)").as("p05"),
-          expr("exact_percentile(o_totalprice, 0.95)").as("p95"))
+        .agg(exact_percentile(col("o_totalprice"), 0.05).as("p05"),
+          exact_percentile(col("o_totalprice"), 0.95).as("p95"))
       o.join(broadcast(bounds), "o_orderstatus")
         .select(col("o_orderstatus"),
           least(greatest(col("o_totalprice"), col("p05")), col("p95"))
@@ -658,7 +659,7 @@ object CoreQueries {
     "q_quantile_bins" -> ((s, d) => {
       val o = Tables.orders(s, d)
       val edges = o.agg(
-        expr("exact_percentile(o_totalprice, array(0.25, 0.5, 0.75))").as("qs"))
+        exact_percentile(col("o_totalprice"), Seq(0.25, 0.5, 0.75)).as("qs"))
       o.crossJoin(broadcast(edges))
         .withColumn("bin", (1 to 3).map(i =>
           when(col("o_totalprice") >= element_at(col("qs"), i), 1)

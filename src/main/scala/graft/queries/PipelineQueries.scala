@@ -985,7 +985,6 @@ object PipelineQueries {
     // the pass provably does work (n_raw - n_norm = 1 combining mark);
     // the md5 makes any divergence content-exact
     "q_text_normalize" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val planted = concat(coalesce(col("text"), lit("")),
         lit("  Cafe\u0301  x")) // decomposed e + U+0301, as the oracle plants
       Tables.documents(s, d).select(col("doc_id"),
@@ -1220,7 +1219,6 @@ object PipelineQueries {
     // sketch's guaranteed one-sided error
     "q_cms_check" -> ((s, d) => {
       import graft.functions.{CmsSketch, GraftFunctions}
-      GraftFunctions.ensureRegistered(s)
       val dRows = 4; val w = 2048
       val li = Tables.lineitem(s, d)
         .select(col("l_partkey").cast("string").as("t"), col("l_partkey"))

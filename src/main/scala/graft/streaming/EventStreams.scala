@@ -147,7 +147,6 @@ object EventStreams {
     * report why survivors nearly died. */
   def gopherStream(docs: DataFrame, textCol: String,
                    minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select((docs.columns.map(col).toSeq ++
         graft.operators.TextAnalysis.gopherCols(
           coalesce(col(textCol), lit("")), minWords, maxWords)): _*)
@@ -179,7 +178,6 @@ object EventStreams {
                    minTokens: Int = 10, maxStopwordRatio: Double = 1.0,
                    watermarkDelay: String = "10 minutes"): DataFrame = {
     import graft.operators.TextAnalysis
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val base = docs.withColumn("text", coalesce(col("text"), lit("")))
     val gated = base.select((base.columns.map(col).toSeq ++
         TextAnalysis.langScoreCols(col("text")) ++
@@ -256,7 +254,6 @@ object EventStreams {
     * Decontaminate.reportHashPrefiltered). */
   def benchmarkNgrams(benchmark: DataFrame, textCol: String, w: Int = 5,
                       maxVocab: Int = 200000): Seq[String] = {
-    graft.functions.GraftFunctions.ensureRegistered(benchmark.sparkSession)
     val rows = benchmark
       .select(explode(graft.functions.GraftFunctions.word_shingles(
         coalesce(col(textCol), lit("")), w)).as("sg"))
@@ -282,7 +279,6 @@ object EventStreams {
                           minShared: Int = 1): DataFrame = {
     require(w > 0 && minShared > 0,
       s"w/minShared must be positive, got ($w, $minShared)")
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val sh = graft.functions.GraftFunctions.word_shingles(
       coalesce(col(textCol), lit("")), w)
     stream
@@ -304,7 +300,6 @@ object EventStreams {
     * on it ("admit target-like docs at ingest"). */
   def dsirStream(stream: DataFrame, lamMicros: Array[Long],
                  textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val t = coalesce(col(textCol), lit(""))
     val feats = concat(graft.operators.TextOps.tokens(t),
       graft.functions.GraftFunctions.word_ngrams(t, 2))
@@ -328,7 +323,6 @@ object EventStreams {
   def nbStream(stream: DataFrame,
                model: graft.operators.Classify.NbModelMicros,
                textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val labels = model.labels
     val toks = graft.operators.TextOps.tokens(coalesce(col(textCol), lit("")))
     val scored = stream.withColumn("__sc",
@@ -358,7 +352,6 @@ object EventStreams {
   def centroidStream(stream: DataFrame, labelVals: Array[Any],
                      centroids: Array[Array[Double]],
                      vecCol: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val labelArr = array(labelVals.map(v => lit(v)).toIndexedSeq: _*)
     stream
       .withColumn("__sims", graft.functions.GraftFunctions.vec_mat_cosines(
@@ -691,7 +684,6 @@ object EventStreams {
   private def embedStreamJoin(stream: DataFrame, idCol: String,
                               vecCol: String, c: DataFrame, tau: Double,
                               bits: Int, tables: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val sigC = c.select(col("corpus_id"), col("sk_c"), col("sigs_c"),
       posexplode(col("sigs_c")).as(Seq("tbl", "sig")))
     val s = stream.select(col(idCol).cast("long").as("batch_id"),
@@ -729,7 +721,6 @@ object EventStreams {
   def minhashDedupStream(stream: DataFrame, corpus: DataFrame, idCol: String,
                          textCol: String, tau: Double, numPerm: Int = 128,
                          bands: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(stream.sparkSession)
     val c = shingled(corpus, idCol, textCol, "corpus_id", "sh_c")
       .withColumn("bands_c",
         graft.functions.GraftFunctions.minhash_bands(col("sh_c"), numPerm, bands))
@@ -781,7 +772,6 @@ object EventStreams {
                                   textCol: String, tag: String,
                                   tau: Double): DataFrame = {
     val spark = stream.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val (_, st) = Dedup.indexTables(tag)
     val g = Dedup.requiredIntProps(spark, st, Seq(Dedup.MinhashNumPermProp,
       Dedup.MinhashBandsProp), "minhashDedupStreamPersisted")

@@ -48,13 +48,8 @@ object Tables {
   def parquet(spark: SparkSession, path: String): DataFrame =
     schemas.read(spark, path)
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // the catalog is every query's entry point, so it also installs the
-    // native function surface (idempotent) — queries built from these
-    // scans can use expr("exact_percentile(...)") etc. unconditionally
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
-  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")
@@ -63,27 +58,29 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame     = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame   = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
-  /** events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
-    * reader rejects; read nanos as long (legacy conf) and convert to a
-    * microsecond TimestampType with integer division (ns values exceed
-    * 2^53, so a double division would corrupt them). Truncation toward
-    * zero matches DuckDB's ns→µs cast for post-1970 data. */
+  /** events.parquet carries TIMESTAMP(NANOS). Depending on the reader it
+    * surfaces as nanos in a LONG (older readers under the legacy
+    * `nanosAsLong` conf) or as a micros-truncated TIMESTAMP_NTZ; either
+    * way `ts` comes back as a microsecond TimestampType. The LONG branch
+    * divides as integers (ns values exceed 2^53, so a double division
+    * would corrupt them); truncation toward zero matches DuckDB's ns→µs
+    * cast for post-1970 data. The conf is left as the caller set it: it
+    * is part of every table's schema-cache key, so setting it here would
+    * make each table loaded earlier in the session infer once more. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>
-        // newer readers ignore nanosAsLong and surface TIMESTAMP(NANOS)
-        // as a micros-truncated TIMESTAMP_NTZ; ops downstream use
-        // unix_micros, which requires TimestampType — cast NTZ → TZ.
+        // ops downstream use unix_micros, which requires TimestampType
+        // — cast NTZ → TZ.
         // The cast is only epoch-correct when the session zone is UTC.
         // Every session this library owns (Verify/Bench/PlanAudit/specs)
         // pins it, but this is a public entry point: a caller-built
         // session in another zone would silently shift every epoch, so
-        // pin the conf here too (session-wide, like nanosAsLong above —
-        // timestamps in this library are UTC by contract).
+        // pin the conf here too (session-wide — timestamps in this
+        // library are UTC by contract).
         s.conf.set("spark.sql.session.timeZone", "UTC")
         raw.withColumn("ts",
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
@@ -98,11 +95,14 @@ object Tables {
 
   /** Register every table as a temp view (analog of the reference's
     * `Table.query` raw-SQL path, base.py:1616). */
-  def registerViews(spark: SparkSession, dir: String): Unit =
+  def registerViews(spark: SparkSession, dir: String): Unit = {
+    // SQL over these views may name a native function
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     all.foreach { n =>
       val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
       df.createOrReplaceTempView(n)
     }
+  }
 }
 
 /** The parquet schema cache behind [[Tables.parquet]]: an LRU of at most

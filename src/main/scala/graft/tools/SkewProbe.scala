@@ -128,15 +128,7 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val threshold = sys.env.getOrElse("SPARK_GRAFT_SKEW_THRESHOLD", "8MB")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val r = run(spark, sfDir, skewThreshold = threshold)
     val line =
       f"""{"metric":"skew_probe","sf":"$sfDir","n_big":${r.nBig},""" +

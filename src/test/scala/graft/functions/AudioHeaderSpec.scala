@@ -30,7 +30,6 @@ class AudioHeaderSpec extends SparkSpec {
   }
 
   private def parse(b: Array[Byte]) = {
-    GraftFunctions.ensureRegistered(spark)
     Seq(Tuple1(b)).toDF("p")
       .select(GraftFunctions.audio_header(col("p")).as("h"))
       .select("h.format", "h.channels", "h.sample_rate", "h.bits",
@@ -48,7 +47,6 @@ class AudioHeaderSpec extends SparkSpec {
   }
 
   test("foreign, truncated, and fmt-less payloads are null; dataless is 0") {
-    GraftFunctions.ensureRegistered(spark)
     val rows = Seq(
       "not audio at all".getBytes("UTF-8"),
       wav(1, 8000, 16, 10).take(10),

@@ -11,7 +11,6 @@ class BloomFilterSpec extends SparkSpec {
   private val M = 1 << 12
 
   test("no false negatives: every inserted key probes true") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val keys = (1 to 500).map(i => s"key_$i")
     val bf = keys.toDF("k").repartition(7)
       .agg(BloomSketch.bloom(K, M)(col("k")).as("bf"))

@@ -7,7 +7,6 @@ class CharPairsSpec extends SparkSpec {
   import spark.implicits._
 
   private def pairsOf(s: String): Seq[String] = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     Seq(s).toDF("t")
       .select(GraftFunctions.char_pairs(col("t")).as("p"))
       .as[Seq[String]].head()

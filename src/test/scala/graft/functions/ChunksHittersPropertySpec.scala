@@ -11,7 +11,6 @@ class ChunksHittersPropertySpec extends SparkSpec {
   import spark.implicits._
 
   test("word_chunks invariants hold over randomized texts") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(2027)
     val cases = (1 to 200).map { _ =>
       val n = rnd.nextInt(40)

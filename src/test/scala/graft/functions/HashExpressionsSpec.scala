@@ -8,7 +8,6 @@ class HashExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("rolling_hash matches the definition, through codegen") {
-    GraftFunctions.ensureRegistered(spark)
     def ref(s: String): Long =
       s.foldLeft(0L)((acc, c) => (acc * 31 + c.toLong) % 1000000007L)
     val inputs = Seq("", "a", "abc", "the quick brown fox", "x" * 5000)
@@ -20,7 +19,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("byte_histogram counts every byte into its bin, through codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val payloads = Seq(
       Array[Byte](0, 31, 32, -1, -128),        // bins 0,0,1,7,4 at width 32
       Array.empty[Byte],
@@ -39,7 +37,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("marker_counts: one pass scores all vocabularies, through codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val vocabs = Seq(Seq("the", "a"), Seq("der", "die"), Seq("a", "der"))
     val df = Seq(
       (1L, Seq("the", "a", "the", "zz")),
@@ -69,7 +66,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("simhash64: identical token sets collide, disjoint ones differ") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq(
       (1L, Seq("a", "b", "c", "d")),
       (2L, Seq("a", "b", "c", "d")),
@@ -81,7 +77,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("simhash_wide: part 0 == simhash64, parts independent, through codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(13)
     val toksSeq = Seq.fill(50)(Seq.fill(40)(s"w${rnd.nextInt(60)}"))
     val df = toksSeq.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "toks")
@@ -117,7 +112,6 @@ class HashExpressionsSpec extends SparkSpec {
 
 
   test("ham_xor equals the zip_with/aggregate HOF form, through codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(17)
     val rows = Seq.fill(60)((Array.fill(16)(rnd.nextLong()), Array.fill(16)(rnd.nextLong()))) ++
       Seq((Array.fill(16)(7L), Array.fill(16)(7L)))            // identical -> 0
@@ -145,7 +139,6 @@ class HashExpressionsSpec extends SparkSpec {
 
 
   test("srp_sketch is scale-invariant, word-stable vs seeds, through codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(23)
     val vecs = Seq.fill(40)(Array.fill(16)(rnd.nextGaussian()))
     val df = vecs.map(v => (v, v.map(_ * 2.5))).toDF("v", "v25")
@@ -167,7 +160,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("srp_signature is scale-invariant and seed-sensitive, through codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(11)
     val vecs = Seq.fill(50)(Array.fill(64)(rnd.nextGaussian()))
     val df = vecs.map(v => (v, v.map(_ * 1.5), v.map(_ * 0.01))).toDF("v", "v15", "v001")
@@ -189,7 +181,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("vec_mat_cosines agrees with the pairwise cosine definition") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(13)
     val mat = Array.fill(7)(Array.fill(16)(rnd.nextGaussian()))
     val vecs = Seq.fill(20)(Array.fill(16)(rnd.nextGaussian()))

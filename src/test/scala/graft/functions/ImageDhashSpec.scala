@@ -16,7 +16,6 @@ class ImageDhashSpec extends SparkSpec {
       "img_id", "src", "shift", "bump")
 
   private def hashOf(rows: Seq[(Long, Long, Long, Long)]): Map[Long, Seq[Long]] = {
-    GraftFunctions.ensureRegistered(spark)
     bmps(rows).select(col("img_id"),
         GraftFunctions.image_dhash(col("payload"), 17, 8).as("h"))
       .as[(Long, Seq[Long])].collect().toMap
@@ -74,7 +73,6 @@ class ImageDhashSpec extends SparkSpec {
 
   test("top-down BMPs (negative height) hash identically to bottom-up; " +
        "padded rows parse; garbage is NULL, never a throw") {
-    GraftFunctions.ensureRegistered(spark)
     val bu = bmps(Seq((1L, 5L, 0L, 0L))).select("payload")
       .as[Array[Byte]].head()
     // flip to top-down: height := -16 (LE32 at offset 22), rows reversed

@@ -57,7 +57,6 @@ class Mp4HeaderSpec extends SparkSpec {
   }
 
   private def parse(b: Array[Byte]) = {
-    GraftFunctions.ensureRegistered(spark)
     Seq(Tuple1(b)).toDF("p")
       .select(GraftFunctions.mp4_header(col("p")).as("h"))
       .select("h.format", "h.brand", "h.timescale", "h.duration_ms",
@@ -84,7 +83,6 @@ class Mp4HeaderSpec extends SparkSpec {
   }
 
   test("foreign, truncated, and mvhd-less payloads are null") {
-    GraftFunctions.ensureRegistered(spark)
     val good = mp4(ftyp(), wrap("moov", mvhd(0, 1000, 1000L),
       wrap("trak", tkhd(0, 1, 100, 100))))
     val rows = Seq(

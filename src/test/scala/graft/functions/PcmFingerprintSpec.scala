@@ -18,7 +18,6 @@ class PcmFingerprintSpec extends SparkSpec {
       "aud_id", "src", "gain", "bump")
 
   private def hashOf(rows: Seq[(Long, Long, Long, Long)]): Map[Long, Seq[Long]] = {
-    GraftFunctions.ensureRegistered(spark)
     wavs(rows).select(col("aud_id"),
         GraftFunctions.pcm_fingerprint(col("payload"), 17, 8).as("h"))
       .as[(Long, Seq[Long])].collect().toMap
@@ -72,7 +71,6 @@ class PcmFingerprintSpec extends SparkSpec {
 
   test("foreign/truncated/non-PCM payloads are NULL, never a throw; " +
        "trailing remainder samples are ignored (K floor)") {
-    GraftFunctions.ensureRegistered(spark)
     val wav = wavs(Seq((1L, 5L, 0L, 0L))).select("payload")
       .as[Array[Byte]].head()
     assert(PcmFingerprintImpl.compute(wav, 17, 8) != null)

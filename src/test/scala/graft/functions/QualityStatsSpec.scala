@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class QualityStatsSpec extends SparkSpec {
 
   private def both(df: org.apache.spark.sql.DataFrame) = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val fused = df.select((col("doc_id") +:
       TextAnalysis.qualityCols(col("text"))): _*).orderBy("doc_id").collect()
     val composed = df.select((col("doc_id") +:

@@ -19,7 +19,6 @@ class VideoDhashSpec extends SparkSpec {
       "vid_id", "src", "shift", "bump")
 
   private def hashOf(rows: Seq[(Long, Long, Long, Long)]): Map[Long, Seq[Long]] = {
-    GraftFunctions.ensureRegistered(spark)
     videos(rows).select(col("vid_id"),
         GraftFunctions.video_dhash(col("payload"), Frames, 17, 8).as("h"))
       .as[(Long, Seq[Long])].collect().toMap
@@ -63,7 +62,6 @@ class VideoDhashSpec extends SparkSpec {
       "different sources must not alias")
     // order sensitivity: a container holding the same 4 frames in a
     // different order must hash differently (concat, not XOR)
-    GraftFunctions.ensureRegistered(spark)
     val frames = (0 until Frames).map(f =>
       BmpSynthImpl.build(42L * Frames + f, 0L, 0L))
     def container(fs: Seq[Array[Byte]]): Array[Byte] = {
@@ -85,7 +83,6 @@ class VideoDhashSpec extends SparkSpec {
   }
 
   test("foreign/truncated/miscounted payloads are NULL, never a throw") {
-    GraftFunctions.ensureRegistered(spark)
     val ok = videos(Seq((1L, 5L, 0L, 0L))).select("payload")
       .as[Array[Byte]].head()
     assert(VideoDhashImpl.compute(ok, Frames, 17, 8) != null)

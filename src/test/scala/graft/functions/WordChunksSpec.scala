@@ -7,7 +7,6 @@ class WordChunksSpec extends SparkSpec {
   import spark.implicits._
 
   private def chunksOf(text: String, size: Int, stride: Int): Seq[String] = {
-    GraftFunctions.ensureRegistered(spark)
     Seq(text).toDF("t")
       .select(GraftFunctions.word_chunks(col("t"), size, stride).as("c"))
       .head().getSeq[String](0)
@@ -41,7 +40,6 @@ class WordChunksSpec extends SparkSpec {
   }
 
   test("nfc_normalize composes decomposed text, idempotent, null-safe") {
-    GraftFunctions.ensureRegistered(spark)
     val composed = "Caf\u00e9"       // e-acute as one code point
     val decomposed = "Cafe\u0301"   // e + combining acute
     val out = Seq((1L, decomposed), (2L, composed), (3L, null))

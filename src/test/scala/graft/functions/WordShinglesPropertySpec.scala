@@ -14,7 +14,6 @@ class WordShinglesPropertySpec extends SparkSpec {
   import spark.implicits._
 
   test("native word_shingles ≡ builtin-function shingles for random inputs") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(2026)
     val vocab = Vector("a", "bb", "ccc", "", "x", "yy", "a") // dupes + empty
     val texts = (1 to 300).map { _ =>
@@ -33,7 +32,6 @@ class WordShinglesPropertySpec extends SparkSpec {
   }
 
   test("native word_ngrams ≡ driver-side sliding windows for random inputs") {
-    GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(2027)
     val vocab = Vector("a", "bb", "ccc", "", "x", "yy", "a")
     val texts = (1 to 300).map { _ =>

@@ -69,7 +69,6 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // no pair output at all: the three short docs must NOT collide
     assert(Dedup.minhashPairs(short, "doc_id", "text", tau = 0.1).count() == 0)
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val sigs = short.select(
       graft.functions.GraftFunctions.minhash_bands(
         graft.functions.GraftFunctions.word_shingles(col("text"), 3), 128, 32).as("s"))

@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
 class QualitySelectionSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftFunctions.ensureRegistered(spark)
 
   // ---------------------------------------------------------- word_ngrams
 

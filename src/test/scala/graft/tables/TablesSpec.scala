@@ -70,8 +70,7 @@ class TablesSpec extends SparkSpec {
 
   test("registerViews over unchanged tables runs no Spark job") {
     withConf(NanosAsLong) {
-      // events sets nanosAsLong, which is part of every table's key: set
-      // it first so the warm-up loads every table under the same key
+      // nanosAsLong is part of every table's key: one value for both passes
       spark.conf.set(NanosAsLong, "true")
       Tables.registerViews(spark, sf())
       assert(jobsIn {
@@ -133,6 +132,17 @@ class TablesSpec extends SparkSpec {
       spark.conf.unset(NanosAsLong)
       assert(ts() == unset)
       assert(unset.nonEmpty)
+    }
+  }
+
+  test("events leaves nanosAsLong alone, so tables loaded before it stay cached") {
+    withConf(NanosAsLong) {
+      spark.conf.unset(NanosAsLong)
+      val before = spark.conf.getOption(NanosAsLong)
+      Tables.load(spark, sf(), "lineitem").schema
+      Tables.events(spark, sf()).schema
+      assert(spark.conf.getOption(NanosAsLong) == before)
+      assert(jobsIn(Tables.load(spark, sf(), "lineitem").schema) == 0)
     }
   }
 
