@@ -243,15 +243,32 @@ object Dedup {
     * cheaper than the banding rebuild it guards. */
   private[graft] def corpusFingerprint(corpus: DataFrame, idCol: String,
                                 textCol: String): String = {
-    // decimal(38,0) sum: a long sum of random 64-bit hashes overflows
-    // (an error under ANSI arithmetic), and decimal keeps the sum
-    // EXACT so the append-time fingerprint merge is purely additive
-    val r = corpus.agg(count(lit(1)).as("n"),
+    val aggs = fingerprintAggs(idCol, textCol)
+    val r = corpus.agg(aggs.head, aggs.last).head()
+    fingerprintOf(r.getLong(0), r.getDecimal(1))
+  }
+
+  // decimal(38,0) sum: a long sum of random 64-bit hashes overflows (an
+  // error under ANSI arithmetic), and decimal keeps the sum EXACT so the
+  // append-time fingerprint merge is purely additive
+  private def fingerprintAggs(idCol: String, textCol: String): Seq[Column] =
+    Seq(count(lit(1)).as("n"),
       sum(xxhash64(col(idCol), col(textCol)).cast("decimal(38,0)")).as("h"))
-      .head()
-    val h = if (r.isNullAt(1)) BigInt(0)
-            else BigInt(r.getDecimal(1).toBigInteger)
-    s"${r.getLong(0)}:$h"
+
+  private def fingerprintOf(n: Long, h: java.math.BigDecimal): String =
+    s"$n:${if (h == null) BigInt(0) else BigInt(h.toBigInteger)}"
+
+  /** localCheckpoint `df`, observing its [[corpusFingerprint]] in the
+    * same job: the observation sits in the freeze's result stage, so it
+    * is exact under task retry and costs no job of its own. */
+  private[operators] def freezeFingerprinted(df: DataFrame, idCol: String,
+                                             textCol: String): (DataFrame, String) = {
+    val o = org.apache.spark.sql.Observation()
+    val aggs = fingerprintAggs(idCol, textCol)
+    val snap = df.observe(o, aggs.head, aggs.last).localCheckpoint()
+    val m = o.get
+    (snap, fingerprintOf(m("n").asInstanceOf[Long],
+      m("h").asInstanceOf[java.math.BigDecimal]))
   }
 
   /** r17 optimization round (guide §1.2 per-task work, §5 caching):
@@ -304,12 +321,18 @@ object Dedup {
                                table: String): Option[String] =
     tableProps(spark, table).get(FingerprintProp)
 
-  private[operators] def setTableFingerprint(spark: org.apache.spark.sql.SparkSession,
-                                  table: String, fp: String): Unit = {
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$FingerprintProp' = '$fp')")
+  /** Set `props` on `table` in one ALTER (a catalog write, no job). */
+  private[operators] def setTableProps(spark: org.apache.spark.sql.SparkSession,
+      table: String, props: Seq[(String, String)]): Unit = {
+    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
+      props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
     ()
   }
+
+  // a maintained stream's record on an index's primary table
+  // ([[PersistedIndex]]): last committed batch id and the intent marker
+  private[graft] val CommittedProp = "graft.stream.committed"
+  private[graft] val PendingProp = "graft.stream.pending"
 
   /** PERSISTED band-signature index (judge r12 ask #2) — the storage
     * side of [[minhashIncrementalPersisted]]: the corpus's banded
@@ -324,7 +347,7 @@ object Dedup {
     * co-partitioned on (band, h) and the exact-Jaccard verify reads the
     * shingle table co-partitioned on corpus_id — the incremental path
     * scales with the BATCH, not the corpus. Lifecycle contract (lease,
-    * fingerprint, commits table): [[PersistedIndex]]. */
+    * fingerprint, stream record): [[PersistedIndex]]. */
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
                         tag: String, numPerm: Int = 128, bands: Int = 32,
                         maxBucket: Int = DefaultMaxBucket,
@@ -463,18 +486,19 @@ object Dedup {
     * so the merged value equals the union corpus's fingerprint and
     * `ensure*` keeps verifying over corpus ∪ admitted). The previous
     * value is read from the FIRST table (all index tables carry the
-    * same fingerprint by construction). */
+    * same fingerprint by construction), and that table is set LAST, in
+    * one ALTER with `extra`: until then it still holds the previous
+    * state's fingerprint. */
   private[operators] def mergeTableFingerprints(
       spark: org.apache.spark.sql.SparkSession,
-      tables: Seq[String], add: String): Unit = {
-    val merged = tableFingerprint(spark, tables.head) match {
-      case Some(p) =>
-        val Array(pn, ph) = p.split(":")
-        val Array(an, ah) = add.split(":")
-        s"${pn.toLong + an.toLong}:${BigInt(ph) + BigInt(ah)}"
-      case None => add
+      tables: Seq[String], add: String,
+      extra: Seq[(String, String)] = Nil): Unit = {
+    val merged = tableFingerprint(spark, tables.head).fold(add) { p =>
+      val (Array(pn, ph), Array(an, ah)) = (p.split(":"), add.split(":"))
+      s"${pn.toLong + an.toLong}:${BigInt(ph) + BigInt(ah)}"
     }
-    tables.foreach(setTableFingerprint(spark, _, merged))
+    tables.tail.foreach(setTableProps(spark, _, Seq(FingerprintProp -> merged)))
+    setTableProps(spark, tables.head, (FingerprintProp -> merged) +: extra)
   }
 
   /** [[minhashIncremental]] against the PERSISTED index: identical
@@ -486,7 +510,16 @@ object Dedup {
     * zero ShuffleExchange above either index scan). */
   def minhashIncrementalPersisted(batch: DataFrame, idCol: String,
                                   textCol: String, tag: String,
-                                  tau: Double): DataFrame = {
+                                  tau: Double): DataFrame =
+    minhashPersistedPairs(batch, idCol, textCol, tag, tau)
+      .orderBy("batch_id", "corpus_id")
+
+  /** [[minhashIncrementalPersisted]] unordered, for the maintained
+    * stream, which freezes its matches: the sort would cost it two jobs
+    * (a range-bounds sample and its shuffle) for an order no one reads. */
+  private[graft] def minhashPersistedPairs(batch: DataFrame, idCol: String,
+                                           textCol: String, tag: String,
+                                           tau: Double): DataFrame = {
     val spark = batch.sparkSession
     val (bt, st) = indexTables(tag)
     // geometry FROM the recorded table properties (advisor r14 — the
@@ -513,7 +546,6 @@ object Dedup {
         col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
       .filter(col("jaccard") >= tau)
       .select("batch_id", "corpus_id", "jaccard")
-      .orderBy("batch_id", "corpus_id")
   }
 
   /** Index COMPACTION (judge r14 ask #3 — the small-file decay of
@@ -635,7 +667,8 @@ object Dedup {
                                table: String, props: Seq[String],
                                write: (DataFrame, String) => Unit): Unit = {
     val all = tableProps(spark, table)
-    val carried = (props :+ FingerprintProp).flatMap(k => all.get(k).map(k -> _))
+    val carried = (props :+ FingerprintProp :+ CommittedProp :+ PendingProp)
+      .flatMap(k => all.get(k).map(k -> _))
     val tmp = table + "_c"
     val old = table + "_o"
     dropStaleTable(spark, tmp)
@@ -645,9 +678,7 @@ object Dedup {
     // post-rename SET left a crash window where the live table existed
     // without its geometry/fingerprint and recovery no-op'd — index
     // bricked until a manual rebuild)
-    if (carried.nonEmpty)
-      spark.sql(s"ALTER TABLE $tmp SET TBLPROPERTIES (" +
-        carried.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
+    if (carried.nonEmpty) setTableProps(spark, tmp, carried)
     spark.sql(s"ALTER TABLE $table RENAME TO $old")
     spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
     // repair the LIVE table's partition metadata before anything else:
@@ -745,77 +776,15 @@ object Dedup {
     PersistedIndex.embed(tag).remove(removed, idCol, vecCol,
       "removeFromEmbedIndex")
 
-  // ------------------------------------- streaming commit guard (durable)
-
-  /** Name of the durable committed-batch-id table that rides next to a
-    * maintained streaming index (judge r15 ask #5 — the foreachBatch
-    * idempotent-sink pattern done for real; the r15 in-memory Set died
-    * with the JVM). One row per fully-applied micro-batch: (batch_id,
-    * fingerprint AFTER that batch), seeded with (-1, fingerprint at
-    * stream start). Storing the post-batch fingerprint makes crash
-    * recovery EXACT: after purging an uncommitted batch's partial rows,
-    * the index contents equal base + committed batches, and the last
-    * committed row's fingerprint is that state's fingerprint — nothing
-    * is recomputed, nothing drifts. Coherence and id-uniqueness
-    * contracts: [[PersistedIndex]]. */
-  private[graft] def commitsTableName(indexTable: String): String =
-    indexTable + "_commits"
-
-  /** Create-if-absent the commits table for `indexTable`, seeded with
-    * the sentinel (-1, current index fingerprint). Returns its name. */
-  private[graft] def ensureCommitsTable(
-      spark: org.apache.spark.sql.SparkSession, indexTable: String): String = {
-    val ct = commitsTableName(indexTable)
-    if (!spark.catalog.tableExists(ct)) {
-      import spark.implicits._
-      val fp = tableFingerprint(spark, indexTable).getOrElse("0:0")
-      Seq((-1L, fp)).toDF("batch_id", "fp")
-        .write.format("parquet").saveAsTable(ct)
-    }
-    ct
-  }
-
-  /** Whether `id` is recorded as fully applied. */
-  private[graft] def committedBatch(spark: org.apache.spark.sql.SparkSession,
-                                    ct: String, id: Long): Boolean =
-    !spark.table(ct).filter(col("batch_id") === id).isEmpty
-
-  /** The fingerprint of the last fully-applied state. */
-  private[graft] def lastCommittedFp(spark: org.apache.spark.sql.SparkSession,
-                                     ct: String): String =
-    spark.table(ct).orderBy(col("batch_id").desc).head().getString(1)
-
   /** localCheckpoint unless `df` is ALREADY a checkpointed/RDD-rooted
-    * frame (the maintained-stream batch loops freeze their snapshot
-    * before calling the append entry points — re-freezing a frozen
-    * frame is one wasted driver-floor job per micro-batch). */
+    * frame (the maintained ANN stream serves its frozen snapshot —
+    * re-freezing a frozen frame is one wasted driver-floor job per
+    * micro-batch). */
   private[graft] def ensureFrozen(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
       case _: org.apache.spark.sql.execution.LogicalRDD => df
       case _ => df.localCheckpoint()
     }
-
-  /** [[committedBatch]] AND [[lastCommittedFp]] from ONE commits-table
-    * read (judge r17 ask #3 — the maintained micro-batch loop paid two
-    * driver-floor jobs per batch over the same tiny table): returns
-    * (already committed?, fingerprint of the last fully-applied state).
-    * batch_id is unique by the id-uniqueness contract, so max_by is
-    * deterministic and equals the orderBy-desc head. */
-  private[graft] def commitsProbe(spark: org.apache.spark.sql.SparkSession,
-                                  ct: String, id: Long): (Boolean, String) = {
-    val row = spark.table(ct)
-      .agg(max(when(col("batch_id") === id, lit(1))).as("hit"),
-        max_by(col("fp"), col("batch_id")).as("fp")).head()
-    (!row.isNullAt(0), row.getString(1))
-  }
-
-  /** Record `id` as fully applied at fingerprint `fp`. */
-  private[graft] def recordCommit(spark: org.apache.spark.sql.SparkSession,
-                                  ct: String, id: Long, fp: String): Unit = {
-    import spark.implicits._
-    Seq((id, fp)).toDF("batch_id", "fp")
-      .write.format("parquet").mode("append").saveAsTable(ct)
-  }
 
   // -------------------------------------------------------------- SimHash
 
@@ -1869,7 +1838,7 @@ object Dedup {
   private[graft] val EmbedBitsProp = "graft.embed.bits"
   private[graft] val EmbedTablesProp = "graft.embed.tables"
 
-  private def tableProps(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def tableProps(spark: org.apache.spark.sql.SparkSession,
                          table: String): Map[String, String] =
     spark.sql(s"SHOW TBLPROPERTIES $table").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -1932,7 +1901,15 @@ object Dedup {
     * daily-vector-ingest contract. */
   def embedIncrementalPersisted(batch: DataFrame, idCol: String,
                                 vecCol: String, tag: String,
-                                tau: Double): DataFrame = {
+                                tau: Double): DataFrame =
+    embedPersistedPairs(batch, idCol, vecCol, tag, tau)
+      .orderBy("batch_id", "corpus_id")
+
+  /** [[embedIncrementalPersisted]] unordered, for the maintained stream
+    * (see [[minhashPersistedPairs]]). */
+  private[graft] def embedPersistedPairs(batch: DataFrame, idCol: String,
+                                         vecCol: String, tag: String,
+                                         tau: Double): DataFrame = {
     val spark = batch.sparkSession
     val (sigT, vecT) = embedIndexTables(tag)
     val g = requiredIntProps(spark, sigT, Seq(EmbedBitsProp, EmbedTablesProp),
@@ -1961,7 +1938,6 @@ object Dedup {
       .select(col("batch_id"), col("corpus_id"),
         (Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
       .filter(col("cos") >= tau)
-      .orderBy("batch_id", "corpus_id")
   }
 
   /** Vector-side index MAINTENANCE (judge r14 ask #1 — the symmetric

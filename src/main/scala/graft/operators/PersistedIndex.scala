@@ -36,11 +36,19 @@ private[graft] final case class IndexTable(name: String, keys: Seq[String],
   *    tables must then exist and the geometry is read ONCE from the
   *    primary table's properties, so no caller can disagree with the
   *    stored layout.
-  *  - COMMITS GUARD: a maintained stream records one (batch id,
-  *    post-batch fingerprint) row per applied batch in the
-  *    [[Dedup.commitsTableName]] table, read under the lease. A write
-  *    or a removal drops that table; it reseeds from the index's
-  *    then-current fingerprint at the next stream start.
+  *  - COMMIT RECORD: a maintained stream keeps its record in the
+  *    primary table's properties, read under the lease with no Spark
+  *    job. `graft.stream.committed` is the last committed batch id; it
+  *    is set in the primary's fingerprint-merge ALTER, which is the
+  *    append's last step, so the primary's fingerprint is always the
+  *    last committed state's. foreachBatch ids are monotone, so a batch
+  *    whose id is ≤ the committed one is a no-op. `graft.stream.pending`,
+  *    the intent marker, is set to the batch id before the first table
+  *    write; a marker newer than the commit means an attempt crashed
+  *    somewhere between its first write and its commit, and only then
+  *    does the replay probe for and purge that attempt's rows. Both
+  *    keys travel with every rewrite ([[Dedup.swapRewriteTable]]),
+  *    survive removal and compaction, and vanish with a fresh write.
   *  - ID UNIQUENESS: the crash purge treats any id of the replayed
   *    batch already in the index as residue of an uncommitted attempt,
   *    so maintained-stream ids must be globally unique: disjoint from
@@ -63,21 +71,21 @@ private[graft] final case class PersistedIndex(
     encode: (DataFrame, String, String, Map[String, Int]) => DataFrame,
     tap: DataFrame => DataFrame = identity) {
 
-  /** The lease key, commits-table owner and geometry holder. */
+  /** The lease key, stream-record and geometry holder. */
   def primary: String = tables.head.name
 
   private def fingerprinted: Seq[String] = tables.map(_.name) ++ frozen
 
-  /** Write the index from scratch: drop stale tables (the commits table
-    * too), encode once, write each table in its layout, run `sides`
-    * (the family's frozen tables), then stamp fingerprint and geometry. */
+  /** Write the index from scratch: drop stale tables (and with them
+    * any stream record), encode once, write each table in its layout,
+    * run `sides` (the family's frozen tables), then stamp fingerprint
+    * and geometry. */
   def write(corpus: DataFrame, idCol: String, valueCol: String,
             geom: Map[String, Int], sides: () => Unit = () => ()): Unit = {
     val spark = corpus.sparkSession
     // a previous JVM may have left a managed location behind with no
     // catalog entry: dropStaleTable removes both forms
-    (fingerprinted :+ Dedup.commitsTableName(primary))
-      .foreach(Dedup.dropStaleTable(spark, _))
+    fingerprinted.foreach(Dedup.dropStaleTable(spark, _))
     // the signatures are consumed once per table: spread and cache them
     // so they are computed once, in parallel
     val (signed, release) = Dedup.spreadBounded(
@@ -87,10 +95,9 @@ private[graft] final case class PersistedIndex(
         save(t, t.name, cap(t, t.rows(signed), geom), "overwrite", geom))
       sides()
       val fp = Dedup.corpusFingerprint(corpus, idCol, valueCol)
-      fingerprinted.foreach(Dedup.setTableFingerprint(spark, _, fp))
-      val props = geom.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ")
-      tables.foreach(t =>
-        spark.sql(s"ALTER TABLE ${t.name} SET TBLPROPERTIES ($props)"))
+      fingerprinted.foreach(Dedup.setTableProps(spark, _, Seq(Dedup.FingerprintProp -> fp)))
+      tables.foreach(t => Dedup.setTableProps(spark, t.name,
+        geom.map { case (k, v) => k -> v.toString }.toSeq))
     } finally release()
   }
 
@@ -122,68 +129,85 @@ private[graft] final case class PersistedIndex(
   /** Append `admitted` under the lease; returns its frozen snapshot. */
   def append(admitted: DataFrame, idCol: String, valueCol: String,
              what: String): DataFrame =
-    maintain(admitted.sparkSession, what)(
-      appendWith(_, admitted, idCol, valueCol))
+    maintain(admitted.sparkSession, what)(appendWith(_, admitted, idCol,
+      valueCol, PersistedIndex.Phases(admitted.sparkSession, what)))
 
   /** The append body, for a caller already inside [[maintain]]. The
-    * input is frozen first: an admitted frame usually derives from a
-    * dedup that reads these very tables, and would re-resolve after the
-    * first table's write. A capped table's new rows rank AFTER the rows
+    * input is frozen first, its fingerprint delta observed by that same
+    * job: an admitted frame usually derives from a dedup that reads
+    * these very tables, and would re-resolve after the first table's
+    * write. With a maintained stream's `batch` id, the intent marker is
+    * set before the first write and the commit is recorded with the
+    * fingerprint merge. A capped table's new rows rank AFTER the rows
     * already indexed under their key, so earlier-indexed ids win and no
     * key exceeds the cap. */
   def appendWith(geom: Map[String, Int], admitted: DataFrame, idCol: String,
-                 valueCol: String): DataFrame = {
+                 valueCol: String, phase: PersistedIndex.Phases,
+                 batch: Option[Long] = None): DataFrame = {
     val spark = admitted.sparkSession
-    val snap = Dedup.ensureFrozen(admitted)
-    val signed = encode(snap, idCol, valueCol, geom)
+    val (snap, delta, signed) = phase("admit") {
+      val (snap, delta) = Dedup.freezeFingerprinted(admitted, idCol, valueCol)
+      (snap, delta, encode(snap, idCol, valueCol, geom))
+    }
+    batch.foreach(id => Dedup.setTableProps(spark, primary,
+      Seq(Dedup.PendingProp -> id.toString)))
     tables.foreach { t =>
       val rows = t.rows(signed)
       val kept = if (!t.capped) rows else {
-        val keys = t.keys
-        val max = geom(Dedup.MaxBucketProp)
-        // per-key occupancy: a partial-agg count grouped on the table's
-        // own bucket keys (no Exchange)
-        val have = spark.table(t.name).groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__have"))
-        Dedup.cappedOffsetIds(Dedup.cappedTopIds(rows, keys, max)
-            .join(have, keys, "left")
-            .withColumn("__have", coalesce(col("__have"), lit(0L))), keys, max)
+        // occupancy of the batch's own keys only: the semi-join and the
+        // count both keep the index table's bucketing (no index Exchange)
+        val keys = t.keys.map(col)
+        val have = spark.table(t.name).join(rows.select(keys: _*), t.keys, "left_semi")
+          .groupBy(keys: _*).agg(count(lit(1)).as("__have"))
+        // the batch is clustered on the keys once, before the occupancy
+        // join: both of the cap's windows then run without an Exchange
+        Dedup.cappedOffsetIds(rows.repartition(keys: _*).join(have, t.keys, "left")
+            .withColumn("__have", coalesce(col("__have"), lit(0L))),
+            t.keys, geom(Dedup.MaxBucketProp))
           .select(rows.columns.map(col): _*)
       }
-      save(t, t.name, kept, "append", geom)
+      phase(s"append:${t.name}")(save(t, t.name, kept, "append", geom))
     }
-    Dedup.mergeTableFingerprints(spark, fingerprinted,
-      Dedup.corpusFingerprint(snap, idCol, valueCol))
+    phase("commit")(Dedup.mergeTableFingerprints(spark, fingerprinted, delta,
+      batch.map(Dedup.CommittedProp -> _.toString).toSeq))
     snap
+  }
+
+  /** The maintained stream's record on the primary table. */
+  def streamRecord(spark: SparkSession): PersistedIndex.StreamRecord = {
+    val props = Dedup.tableProps(spark, primary)
+    def id(k: String) = props.get(k).map(_.toLong)
+    PersistedIndex.StreamRecord(id(Dedup.CommittedProp), id(Dedup.PendingProp))
   }
 
   /** Purge the `removed` rows, passed exactly as indexed, by an
     * anti-join rewrite of every data table; the fingerprint is
-    * subtracted and the commits table dropped. Rows a removed id
-    * displaced under a cap do not resurrect (a rebuild restores them).
-    * Returns the number of ids purged. */
+    * subtracted. Rows a removed id displaced under a cap do not
+    * resurrect (a rebuild restores them). Returns the number of ids
+    * purged. */
   def remove(removed: DataFrame, idCol: String, valueCol: String,
              what: String): Long = {
     val spark = removed.sparkSession
+    val phase = PersistedIndex.Phases(spark, what)
     maintain(spark, what) { geom =>
-      // read once per table rewrite and once for the fingerprint delta
-      val snap = removed.localCheckpoint()
+      // read once per table rewrite; the freeze observes the row count
+      // and the fingerprint delta
+      val (snap, delta) = phase("freeze")(Dedup.freezeFingerprinted(removed, idCol, valueCol))
       val ids = snap.select(col(idCol).cast("long").as(this.idCol))
       val byId = tables.find(_.keys == Seq(this.idCol)).get.name
-      val purged = spark.table(byId).join(ids, Seq(this.idCol), "left_semi").count()
+      val purged = phase("probe")(
+        spark.table(byId).join(ids, Seq(this.idCol), "left_semi").count())
       // the fingerprint subtracts the WHOLE removal set: a row that was
       // never indexed (or a duplicate) would silently corrupt it
-      val removedCount = snap.count()
-      require(purged == removedCount,
-        s"$what: $removedCount removal rows but $purged matched indexed " +
+      val Array(dn, dh) = delta.split(":")
+      require(purged == dn.toLong,
+        s"$what: $dn removal rows but $purged matched indexed " +
         s"rows in '$tag' — `removed` must carry exactly the indexed " +
         "(id, value) rows, no extras and no duplicates")
-      tables.foreach(rewrite(spark, _, geom,
-        _.join(ids, Seq(this.idCol), "left_anti")))
-      val Array(dn, dh) = Dedup.corpusFingerprint(snap, idCol, valueCol).split(":")
-      Dedup.mergeTableFingerprints(spark, fingerprinted,
-        s"${-dn.toLong}:${-BigInt(dh)}")
-      Dedup.dropStaleTable(spark, Dedup.commitsTableName(primary))
+      tables.foreach(t => phase(s"rewrite:${t.name}")(rewrite(spark, t, geom,
+        _.join(ids, Seq(this.idCol), "left_anti"))))
+      phase("commit")(Dedup.mergeTableFingerprints(spark, fingerprinted,
+        s"${-dn.toLong}:${-BigInt(dh)}"))
       purged
     }
   }
@@ -192,27 +216,28 @@ private[graft] final case class PersistedIndex(
     * re-apply the cap — idempotent, since appends preserve it),
     * collapsing the files appends left behind; properties carry over
     * verbatim. */
-  def compact(spark: SparkSession, what: String): Unit =
-    maintain(spark, what)(geom =>
-      tables.foreach(t => rewrite(spark, t, geom, cap(t, _, geom))))
+  def compact(spark: SparkSession, what: String): Unit = {
+    val phase = PersistedIndex.Phases(spark, what)
+    maintain(spark, what)(geom => tables.foreach(t =>
+      phase(s"rewrite:${t.name}")(rewrite(spark, t, geom, cap(t, _, geom)))))
+  }
 
-  /** Crash-recovery purge for a maintained batch, inside [[maintain]]:
-    * if an uncommitted attempt left any of `ids` in the data tables (an
-    * append is several writes plus a fingerprint merge, so a crash can
-    * land any prefix), rewrite them out and reset every fingerprint to
-    * `fp`, the last committed state. One probe job; `ids` is frozen only
-    * when a purge runs. Returns true when it ran. */
+  /** Crash-recovery purge for a maintained batch whose earlier attempt
+    * set the intent marker and never committed, inside [[maintain]]: if
+    * that attempt left any of `ids` in the data tables (an append is
+    * several writes, so a crash can land any prefix), rewrite them out.
+    * Every fingerprint is reset to the primary table's, which only the
+    * commit moves. One probe job; `ids` is frozen only when a rewrite
+    * runs. */
   def purgeUncommitted(spark: SparkSession, geom: Map[String, Int],
-                       ids: DataFrame, fp: String): Boolean = {
-    val hit = !tables.map(t => spark.table(t.name).select(idCol))
-      .reduce(_ unionByName _)
-      .join(ids, Seq(idCol), "left_semi").isEmpty
-    if (hit) {
+                       ids: DataFrame): Unit = {
+    if (!tables.map(t => spark.table(t.name).select(idCol)).reduce(_ unionByName _)
+        .join(ids, Seq(idCol), "left_semi").isEmpty) {
       val idsS = ids.localCheckpoint()
       tables.foreach(rewrite(spark, _, geom, _.join(idsS, Seq(idCol), "left_anti")))
-      fingerprinted.foreach(Dedup.setTableFingerprint(spark, _, fp))
     }
-    hit
+    Dedup.tableFingerprint(spark, primary).foreach(fp => fingerprinted.tail
+      .foreach(Dedup.setTableProps(spark, _, Seq(Dedup.FingerprintProp -> fp))))
   }
 
   private def cap(t: IndexTable, rows: DataFrame,
@@ -257,8 +282,32 @@ private[graft] final case class PersistedIndex(
   }
 }
 
-/** The three families' descriptions. */
 private[graft] object PersistedIndex {
+
+  /** A maintained stream's record: the last committed batch id and the
+    * intent marker, the id of the last batch whose append began. */
+  final case class StreamRecord(committed: Option[Long], pending: Option[Long]) {
+    /** Whether batch `id` is already applied (ids are monotone). */
+    def done(id: Long): Boolean = committed.exists(_ >= id)
+    /** Whether an attempt crashed between its marker and its commit. */
+    def crashed: Boolean = pending.exists(p => committed.forall(_ < p))
+  }
+
+  /** Labels each job of one operator's phase `<operator>:<phase>` in
+    * `spark.job.description`, restoring the caller's label after. Each
+    * phase first calls `fault` with its name (a test's crash point). */
+  final case class Phases(spark: SparkSession, operator: String,
+                          fault: String => Unit = _ => ()) {
+    def apply[T](phase: String)(body: => T): T = {
+      fault(phase)
+      val (sc, key) = (spark.sparkContext, "spark.job.description")
+      val prev = sc.getLocalProperty(key)
+      sc.setLocalProperty(key, s"$operator:$phase")
+      try body finally sc.setLocalProperty(key, prev)
+    }
+  }
+
+  // ---------------------------------------- the three families' descriptions
 
   /** MinHash: `…_bands` (corpus_id, band, h) bucketed and capped on
     * (band, h); `…_shingles` (corpus_id, sh, bandsig) bucketed on

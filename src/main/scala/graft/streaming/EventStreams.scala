@@ -811,35 +811,35 @@ object EventStreams {
     * is the restart-capable sink AND the only place maintenance can
     * live (the append is a batch table write, not a streaming
     * transform); the per-batch work is [[maintainedBatch]], with its
-    * durable commits guard, crash purge, single-writer and
+    * durable commit record, crash purge, single-writer and
     * globally-unique-id contracts ([[graft.operators.PersistedIndex]]).
-    * `onMatches` receives a FROZEN DataFrame (no driver collect in the
-    * maintenance path; write it to a sink table, or collect only in
-    * bounded test fixtures). Returns the started query; callers own the
-    * checkpoint lifecycle. */
+    * `onMatches` receives a FROZEN, unordered DataFrame (no driver
+    * collect in the maintenance path; write it to a sink table, or
+    * collect only in bounded test fixtures). Returns the started query;
+    * callers own the checkpoint lifecycle. */
   def minhashDedupStreamMaintained(docs: DataFrame, idCol: String,
       textCol: String, tag: String, tau: Double, checkpointDir: String,
       onMatches: (Long, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val index = PersistedIndex.minhash(tag)
-    startMaintained(docs, checkpointDir, index.primary) { (df, id) =>
+    startMaintained(docs, checkpointDir) { (df, id) =>
       maintainedBatch(index, df, id, idCol, textCol, onMatches)(dedupStep(
-        Dedup.minhashIncrementalPersisted(_, idCol, textCol, tag, tau), idCol))
+        Dedup.minhashPersistedPairs(_, idCol, textCol, tag, tau), idCol))
     }
   }
 
   /** The vector twin of [[minhashDedupStreamMaintained]] (judge r15 ask
     * #2): each micro-batch dedups against the persisted SRP index via
-    * Dedup.embedIncrementalPersisted, hands the frozen matches out, and
+    * Dedup.embedPersistedPairs, hands the frozen matches out, and
     * appends the admitted vectors back. */
   def embedDedupStreamMaintained(stream: DataFrame, idCol: String,
       vecCol: String, tag: String, tau: Double, checkpointDir: String,
       onMatches: (Long, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val index = PersistedIndex.embed(tag)
-    startMaintained(stream, checkpointDir, index.primary) { (df, id) =>
+    startMaintained(stream, checkpointDir) { (df, id) =>
       maintainedBatch(index, df, id, idCol, vecCol, onMatches)(dedupStep(
-        Dedup.embedIncrementalPersisted(_, idCol, vecCol, tag, tau), idCol))
+        Dedup.embedPersistedPairs(_, idCol, vecCol, tag, tau), idCol))
     }
   }
 
@@ -855,8 +855,7 @@ object EventStreams {
       onServed: (Long, DataFrame) => Unit,
       nprobe: Int = 4, overfetch: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintained(stream, checkpointDir,
-        Similarity.annIndexTables(tag)._1) { (df, id) =>
+    startMaintained(stream, checkpointDir) { (df, id) =>
       lazy val books = Similarity.loadIndexCodebooks(df.sparkSession, tag)
       maintainedBatch(PersistedIndex.ann(tag, books), df, id, idCol, vecCol,
           onServed) { snap =>
@@ -865,18 +864,14 @@ object EventStreams {
       }
     }
 
-  /** Start a maintained stream: seed the commits table of the index's
-    * primary table with its current fingerprint, then run `batch` per
-    * micro-batch. */
-  private def startMaintained(stream: DataFrame, checkpointDir: String,
-                              primary: String)(batch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Dedup.ensureCommitsTable(stream.sparkSession, primary)
+  /** Start a maintained stream that runs `batch` per micro-batch. */
+  private def startMaintained(stream: DataFrame, checkpointDir: String)
+                             (batch: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (df: DataFrame, id: Long) => batch(df, id) }
       .start()
-  }
 
   /** The dedup families' step: freeze the batch's matches against the
     * pre-append index; admit the rows that matched nothing. */
@@ -888,37 +883,38 @@ object EventStreams {
   }
 
   /** One maintained micro-batch of any index family (package-private so
-    * the crash specs can drive it with a fault injected between append
-    * and commit — the state lives entirely in tables, so a direct call
-    * is equivalent to a fresh JVM's replay). ONE lease spans
-    * guard → purge → serve/dedup → append → commit, and the commits
-    * guard is read under it: a batch another writer committed before
-    * this one took the lease is a no-op, and a commit can never land
-    * between the guard read and the purge (which would otherwise reset
-    * the fingerprints to a stale value). `step` maps the frozen batch to
-    * (the FROZEN frame handed to `onOut`, the rows to append); it runs
-    * against the pre-append index, after a prior crashed attempt's
-    * partial rows are purged, so it reads exactly base + committed
-    * batches. */
+    * the crash specs can drive it with a fault injected at a phase — the
+    * state lives entirely in tables, so a direct call is equivalent to a
+    * fresh JVM's replay). ONE lease spans guard → purge → step → out →
+    * append → commit, and the stream record is read under it: a batch
+    * another writer committed before this one took the lease is a no-op,
+    * and a commit can never land between the guard read and the purge.
+    * A healthy batch runs no guard, purge or commit job: the record and
+    * the intent marker are table properties, the fingerprint delta is
+    * observed by the admitted rows' freeze, and the probe for a crashed
+    * attempt's rows runs only when its marker is found. `step` maps the
+    * frozen batch to (the FROZEN frame handed to `onOut`, the rows to
+    * append); it runs against the pre-append index, after a prior
+    * crashed attempt's partial rows are purged, so it reads exactly base
+    * + committed batches. Every phase's jobs are labeled
+    * `maintainedBatch:<phase>`, and `fault` is called with each phase's
+    * name before it runs. */
   private[graft] def maintainedBatch(index: PersistedIndex, df: DataFrame,
       id: Long, idCol: String, valueCol: String,
       onOut: (Long, DataFrame) => Unit,
-      crashBeforeCommit: () => Unit = () => ())
+      fault: String => Unit = _ => ())
       (step: DataFrame => (DataFrame, DataFrame)): Unit = {
     val spark = df.sparkSession
+    val phase = PersistedIndex.Phases(spark, "maintainedBatch", fault)
     index.maintain(spark, "maintainedBatch") { geom =>
-      val ct = Dedup.ensureCommitsTable(spark, index.primary)
-      val (done, lastFp) = Dedup.commitsProbe(spark, ct, id)
-      if (!done) {
-        val snap = df.localCheckpoint()
-        index.purgeUncommitted(spark, geom,
-          snap.select(col(idCol).cast("long").as(index.idCol)), lastFp)
-        val (out, admitted) = step(snap)
-        onOut(id, out)
-        index.appendWith(geom, admitted, idCol, valueCol)
-        crashBeforeCommit()
-        Dedup.recordCommit(spark, ct, id,
-          Dedup.tableFingerprint(spark, index.primary).getOrElse("0:0"))
+      val record = phase("guard")(index.streamRecord(spark))
+      if (!record.done(id)) {
+        val snap = phase("step")(df.localCheckpoint())
+        if (record.crashed) phase("purge")(index.purgeUncommitted(spark, geom,
+          snap.select(col(idCol).cast("long").as(index.idCol))))
+        val (out, admitted) = phase("step")(step(snap))
+        phase("out")(onOut(id, out))
+        index.appendWith(geom, admitted, idCol, valueCol, phase, Some(id))
       }
     }
   }

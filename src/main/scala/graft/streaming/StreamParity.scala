@@ -402,8 +402,7 @@ object StreamParity {
       }
       rm(new java.io.File(ckpt))
       val (bt, st) = Dedup.indexTables(tag)
-      Seq(bt, st, Dedup.commitsTableName(bt))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq(bt, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
     }
   }
@@ -421,8 +420,8 @@ object StreamParity {
     * exactly the phase-1 admissions — they match ONLY via the appended
     * index rows. Same failure surface as the text twin (append lost /
     * offsets lost / double-append), plus the durable commit guard: the
-    * commits table, not an in-memory set, is what makes the phase-2
-    * replay skip committed batches. */
+    * index's stream record, not an in-memory set, is what makes the
+    * phase-2 replay skip committed batches. */
   def embedMaintainedParity(spark: SparkSession, sfDir: String,
                             sliceVecs: Int = 400,
                             tau: Double = 0.995): DataFrame = {
@@ -479,8 +478,7 @@ object StreamParity {
       }
       rm(new java.io.File(ckpt))
       val (sigT, vecT) = Dedup.embedIndexTables(tag)
-      Seq(sigT, vecT, Dedup.commitsTableName(sigT))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq(sigT, vecT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
     }
   }
@@ -572,8 +570,7 @@ object StreamParity {
       }
       rm(new java.io.File(ckpt))
       val (codesT, vecsT, coarseT, pqT) = Similarity.annIndexTables(tag)
-      (Seq(codesT, vecsT, coarseT, pqT) :+ Dedup.commitsTableName(codesT))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq(codesT, vecsT, coarseT, pqT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
     }
   }

@@ -110,9 +110,9 @@ object Tables {
 private[tables] final class ParquetSchemas(bound: Int) {
   private type Key = (String, Seq[Option[String]], Seq[Byte])
 
-  private val cache = new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
+  private val cache = new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) { lru =>
     override def removeEldestEntry(e: java.util.Map.Entry[Key, StructType]): Boolean =
-      size() > bound
+      lru.size() > bound
   }
 
   def size: Int = cache.synchronized(cache.size)

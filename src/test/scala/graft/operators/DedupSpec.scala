@@ -22,22 +22,27 @@ class DedupSpec extends SparkSpec {
       (6L, d1)).toDF("doc_id", "text")
   }
 
-  test("commitsProbe equals (committedBatch, lastCommittedFp) — the " +
-       "merged single-job guard read (r18)") {
-    val idx = "cp_spec_idx_" + System.nanoTime()
-    Seq((1L, "x")).toDF("corpus_id", "t")
-      .write.format("parquet").saveAsTable(idx)
+  test("the stream record: ids up to the committed one are done, a " +
+       "marker newer than the commit is a crashed attempt, and both keys " +
+       "survive a compaction's rewrite swap") {
+    val tag = "record_" + System.nanoTime()
+    Dedup.writeMinhashIndex(docs, "doc_id", "text", tag)
+    val index = PersistedIndex.minhash(tag)
     try {
-      val ct = Dedup.ensureCommitsTable(spark, idx)
-      Dedup.recordCommit(spark, ct, 3L, "3:30")
-      Dedup.recordCommit(spark, ct, 7L, "7:70")
-      for (id <- Seq(-1L, 0L, 3L, 7L, 8L)) {
-        val probe = Dedup.commitsProbe(spark, ct, id)
-        assert(probe == (Dedup.committedBatch(spark, ct, id),
-          Dedup.lastCommittedFp(spark, ct)), s"probe mismatch at $id: $probe")
-      }
-    } finally Seq(idx, Dedup.commitsTableName(idx))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      def record = index.streamRecord(spark)
+      def mark(k: String, id: Long) =
+        Dedup.setTableProps(spark, index.primary, Seq(k -> id.toString))
+      assert(record == PersistedIndex.StreamRecord(None, None))
+      assert(!record.done(0L) && !record.crashed)
+      mark(Dedup.PendingProp, 3L)
+      assert(record.crashed && !record.done(3L))
+      mark(Dedup.CommittedProp, 3L)
+      assert(!record.crashed && record.done(3L) && record.done(0L) && !record.done(4L))
+      mark(Dedup.PendingProp, 7L)
+      assert(record.crashed && !record.done(7L))
+      Dedup.compactMinhashIndex(spark, tag)
+      assert(record == PersistedIndex.StreamRecord(Some(3L), Some(7L)))
+    } finally index.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
   }
 
   test("exact dedup collapses identical texts") {
@@ -908,6 +913,30 @@ class DedupSpec extends SparkSpec {
         .as[(Long, Int, Long)].collect().toSet
       assert(salted == unsalted, s"cap=$cap offset winners diverged")
     }
+  }
+
+  test("cappedOffsetIds(cappedTopIds(x)) == cappedOffsetIds(x): the " +
+       "one-pass capped append keeps the stacked pass's winners") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // per key: an occupancy `__have` (constant within the key) and a
+    // run of distinct ids; the cap is drawn independently
+    val key = for {
+      have <- Gen.choose(0L, 12L)
+      n <- Gen.choose(0, 30)
+    } yield (have, n)
+    val prop = Prop.forAll(Gen.listOfN(4, key), Gen.choose(1, 10)) { (keys, cap) =>
+      val rnd = new scala.util.Random(keys.hashCode)
+      val fresh = rnd.shuffle((1L to 200L).toList).iterator
+      val rows = keys.zipWithIndex.flatMap { case ((have, n), k) =>
+        Seq.fill(n)((fresh.next(), k % 2, (k / 2).toLong, have)) }
+      val x = rows.toDF("corpus_id", "band", "h", "__have")
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.select("corpus_id", "band", "h").as[(Long, Int, Long)].collect().toSet
+      ids(Dedup.cappedOffsetIds(Dedup.cappedTopIds(x, Seq("band", "h"), cap),
+        Seq("band", "h"), cap)) == ids(Dedup.cappedOffsetIds(x, Seq("band", "h"), cap))
+    }
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(r.passed, r)
   }
 
   test("appendEmbedIndex closes the vector daily loop: batch-2 copies of " +

@@ -3,7 +3,9 @@ package graft.operators
 import graft.SparkSpec
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The [[PersistedIndex]] lifecycle contract, run unchanged over all
   * three index families (MinHash, SRP, IVF-PQ). */
@@ -48,7 +50,7 @@ class PersistedIndexSpec extends SparkSpec {
       (r, t) => Dedup.removeFromMinhashIndex(r, "doc_id", "text", t),
       t => Dedup.compactMinhashIndex(spark, t),
       t => Dedup.minhashIncrementalPersisted(docCopies, "doc_id", "text", t, 0.5),
-      t => EventStreams.dedupStep(Dedup.minhashIncrementalPersisted(
+      t => EventStreams.dedupStep(Dedup.minhashPersistedPairs(
         _, "doc_id", "text", t, 0.5), "doc_id")),
     Family("srp", "vec_id", "embedding", vecs(1 to 30), vecs(100 to 105),
       PersistedIndex.embed,
@@ -58,7 +60,7 @@ class PersistedIndexSpec extends SparkSpec {
       (r, t) => Dedup.removeFromEmbedIndex(r, "vec_id", "embedding", t),
       t => Dedup.compactEmbedIndex(spark, t),
       t => Dedup.embedIncrementalPersisted(vecCopies, "vec_id", "embedding", t, 0.99),
-      t => EventStreams.dedupStep(Dedup.embedIncrementalPersisted(
+      t => EventStreams.dedupStep(Dedup.embedPersistedPairs(
         _, "vec_id", "embedding", t, 0.99), "vec_id")),
     Family("ivfpq", "vec_id", "embedding", vecs(1 to 40), vecs(100 to 105),
       t => PersistedIndex.ann(t, Similarity.loadIndexCodebooks(spark, t)),
@@ -77,8 +79,7 @@ class PersistedIndexSpec extends SparkSpec {
     f.write(f.corpus, tag)
     val index = f.index(tag)
     try body(tag, index)
-    finally (index.tables.map(_.name) ++ index.frozen :+
-        Dedup.commitsTableName(index.primary) :+ Similarity.annStatsTable(tag))
+    finally (index.tables.map(_.name) ++ index.frozen :+ Similarity.annStatsTable(tag))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
@@ -99,6 +100,31 @@ class PersistedIndexSpec extends SparkSpec {
     val out = fs.create(path, false)
     out.writeLong(System.currentTimeMillis()); out.close()
     try body finally { fs.delete(path, false); () }
+  }
+
+  /** The `spark.job.description` of every job `body` runs, in order. */
+  private def jobLabels(body: => Unit): Seq[String] = {
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        labels.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the listener bus delivers in order: once a sentinel job's start
+      // arrives, every job of `body` has been seen
+      sc.setJobDescription("sentinel")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!labels.contains("sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    labels.asScala.toSeq.takeWhile(_ != "sentinel")
   }
 
   for (f <- families) {
@@ -158,13 +184,12 @@ class PersistedIndexSpec extends SparkSpec {
         def batch(df: DataFrame, id: Long): Unit =
           EventStreams.maintainedBatch(index, df, id, f.idCol, f.valueCol,
             (_, _) => handedOut += 1)(f.step(tag))
-        val ct = Dedup.commitsTableName(index.primary)
         // a batch that cannot take the lease reads nothing: not even the
-        // commits table is created before the lease
+        // intent marker is set before the lease
         leaseHeldElsewhere(index.primary) {
           intercept[IllegalStateException](batch(f.extra, 7L))
         }
-        assert(!spark.catalog.tableExists(ct))
+        assert(index.streamRecord(spark) == PersistedIndex.StreamRecord(None, None))
         // another writer commits batch 7
         batch(f.extra, 7L)
         assert(handedOut == 1)
@@ -173,6 +198,64 @@ class PersistedIndexSpec extends SparkSpec {
         batch(f.extra, 7L)
         assert(handedOut == 1, "a committed batch was served again")
         assert(counts(index) == n && fingerprints(index) == fp)
+      }
+    }
+
+    test(s"${f.name}: a healthy maintained batch labels every job " +
+         "maintainedBatch:<phase> and runs no guard, purge or commit job; " +
+         "removal and compaction label theirs") {
+      withIndex(f) { (tag, index) =>
+        val labels = jobLabels(EventStreams.maintainedBatch(index, f.extra, 0L,
+          f.idCol, f.valueCol, (_, out) => out.collect(): Unit)(f.step(tag)))
+        info(s"${labels.size} jobs: ${labels.groupBy(identity).view.mapValues(_.size).toMap}")
+        assert(labels.nonEmpty && labels.forall(_.startsWith("maintainedBatch:")), labels)
+        assert(!labels.exists(l => Seq(":guard", ":purge", ":commit").exists(l.endsWith)),
+          labels)
+        if (f.name == "minhash") assert(labels.size <= 20, labels)
+        val upkeep = jobLabels {
+          f.remove(f.corpus.filter(col(f.idCol) === 1), tag)
+          f.compact(tag)
+        }
+        assert(upkeep.nonEmpty && upkeep.forall(l =>
+          Seq("removeFrom", "compact").exists(l.startsWith) && l.contains(":")), upkeep)
+      }
+    }
+
+    test(s"${f.name}: a batch that crashed after its first table's write " +
+         "is purged on replay after a compaction and a removal: no double " +
+         "append, exact fingerprint; a compacted commit stays a no-op") {
+      withIndex(f) { (tag, index) =>
+        def batch(fault: String => Unit = _ => ()): Unit =
+          EventStreams.maintainedBatch(index, f.extra, 0L, f.idCol, f.valueCol,
+            (_, _) => (), fault)(f.step(tag))
+        val second = s"append:${index.tables(1).name}"
+        val boom = intercept[RuntimeException](batch(p =>
+          if (p == second) throw new RuntimeException("boom")))
+        assert(boom.getMessage == "boom")
+        assert(index.streamRecord(spark) == PersistedIndex.StreamRecord(None, Some(0L)))
+        val extraIds = f.extra.select(col(f.idCol).cast("long")).as[Long].collect().toSeq
+        def batchRows(t: String) = spark.table(t).filter(col(index.idCol).isin(extraIds: _*))
+        assert(batchRows(index.primary).count() > 0, "the crash left no first-table rows")
+        f.compact(tag)
+        val gone = f.corpus.filter(col(f.idCol) <= 2)
+        assert(f.remove(gone, tag) == 2L)
+        batch()
+        assert(index.streamRecord(spark) == PersistedIndex.StreamRecord(Some(0L), Some(0L)))
+        for (t <- index.tables.map(_.name))
+          assert(batchRows(t).count() == batchRows(t).distinct().count(),
+            s"double append in $t")
+        val byId = index.tables.find(_.keys == Seq(index.idCol)).get.name
+        val admitted = batchRows(byId).select(index.idCol).as[Long].collect().toSeq
+        assert(admitted.nonEmpty && admitted.distinct.size == admitted.size)
+        val now = f.corpus.filter(col(f.idCol) > 2)
+          .unionByName(f.extra.filter(col(f.idCol).isin(admitted: _*)))
+        val fp = Dedup.corpusFingerprint(now, f.idCol, f.valueCol)
+        assert(fingerprints(index).forall(_.contains(fp)), fingerprints(index))
+        // the committed id travels with the compaction's rewrite too
+        f.compact(tag)
+        val n = counts(index)
+        batch()
+        assert(counts(index) == n && fingerprints(index).forall(_.contains(fp)))
       }
     }
   }

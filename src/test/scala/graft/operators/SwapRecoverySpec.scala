@@ -23,14 +23,14 @@ class SwapRecoverySpec extends SparkSpec {
     // original (cell-partitioned, like the ANN codes table)
     Seq((1L, 1, 10), (2L, 2, 20), (3L, 3, 30)).toDF("vid", "cell", "code")
       .write.format("parquet").partitionBy("cell").saveAsTable(t)
-    Dedup.setTableFingerprint(spark, t, "3:111")
+    Dedup.setTableProps(spark, t, Seq(Dedup.FingerprintProp -> "3:111"))
     // crash state: original parked, rewrite renamed in (props set on _c
     // BEFORE the dance — the fixed swapRewriteTable order), park alive
     spark.sql(s"ALTER TABLE $t RENAME TO ${t}_o")
     Seq((2L, 2, 20), (3L, 3, 30)).toDF("vid", "cell", "code")
       .repartition(col("cell"))
       .write.format("parquet").partitionBy("cell").saveAsTable(t + "_c")
-    Dedup.setTableFingerprint(spark, t + "_c", "2:97")
+    Dedup.setTableProps(spark, t + "_c", Seq(Dedup.FingerprintProp -> "2:97"))
     spark.sql(s"ALTER TABLE ${t}_c RENAME TO $t")
     spark.catalog.refreshTable(t)
     // the hazard this spec pins: without recovery, the live partitioned

@@ -1126,22 +1126,25 @@ class EventStreamsSpec extends SparkSpec {
   // one maintained batch per family, driven through the single
   // EventStreams.maintainedBatch with the step its public starter uses
   private def mhStep(tag: String) = EventStreams.dedupStep(
-    graft.operators.Dedup.minhashIncrementalPersisted(_, "doc_id", "text",
+    graft.operators.Dedup.minhashPersistedPairs(_, "doc_id", "text",
       tag, 0.5), "doc_id") _
   private def embStep(tag: String) = EventStreams.dedupStep(
-    graft.operators.Dedup.embedIncrementalPersisted(_, "vec_id",
+    graft.operators.Dedup.embedPersistedPairs(_, "vec_id",
       "embedding", tag, 0.999), "vec_id") _
   private def annBatch(df: org.apache.spark.sql.DataFrame, id: Long,
       tag: String, onS: (Long, org.apache.spark.sql.DataFrame) => Unit,
-      crashBeforeCommit: () => Unit = () => ()): Unit = {
+      fault: String => Unit = _ => ()): Unit = {
     lazy val books = graft.operators.Similarity.loadIndexCodebooks(spark, tag)
     EventStreams.maintainedBatch(PersistedIndex.ann(tag, books), df, id,
-        "vec_id", "embedding", onS, crashBeforeCommit) { snap =>
+        "vec_id", "embedding", onS, fault) { snap =>
       (graft.operators.Similarity.annIvfPqServe(snap, "vec_id", "embedding",
         tag, k = 1, nprobe = 4, overfetch = 4, preloaded = Some(books))
         .localCheckpoint(), snap)
     }
   }
+  // a fault hook that crashes the batch as it enters `phase`
+  private def crashAt(phase: String): String => Unit =
+    p => if (p == phase) throw new RuntimeException("boom")
 
   test("maintainedMinhashBatch crash recovery (judge r15 ask #5): a crash " +
        "after the index append but before the commit row does not " +
@@ -1160,7 +1163,7 @@ class EventStreamsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     Dedup.writeMinhashIndex(corpus, "doc_id", "text", tag)
     val (bt, st) = Dedup.indexTables(tag)
-    val ct = Dedup.commitsTableName(bt)
+    val index = PersistedIndex.minhash(tag)
     val matches = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     def onM(id: Long, out: org.apache.spark.sql.DataFrame): Unit = {
       matches ++= out.select("batch_id", "corpus_id")
@@ -1172,12 +1175,12 @@ class EventStreamsSpec extends SparkSpec {
     val boom = intercept[RuntimeException] {
       EventStreams.maintainedBatch(PersistedIndex.minhash(tag), b0, 0L,
         "doc_id", "text", onM,
-        crashBeforeCommit = () => throw new RuntimeException("boom"))(mhStep(tag))
+        fault = crashAt("commit"))(mhStep(tag))
     }
     assert(boom.getMessage == "boom")
     // the dangerous state: the append landed, the commit row did not
     assert(spark.table(st).filter(col("corpus_id") === 100L).count() == 1)
-    assert(spark.table(ct).filter(col("batch_id") === 0L).isEmpty)
+    assert(index.streamRecord(spark) == PersistedIndex.StreamRecord(None, Some(0L)))
     // replay — a fresh call shares NOTHING in memory with the crashed
     // one (all guard state is in tables), i.e. a new JVM's replay
     matches.clear()
@@ -1209,7 +1212,7 @@ class EventStreamsSpec extends SparkSpec {
       "doc_id", "text", onM)(mhStep(tag))
     assert(matches.isEmpty && spark.table(st).count() == stBefore,
       "committed batch replayed")
-    Seq(bt, st, ct).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Seq(bt, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("maintainedEmbedBatch crash recovery: the vector twin heals a " +
@@ -1227,7 +1230,7 @@ class EventStreamsSpec extends SparkSpec {
     Dedup.writeEmbedIndex(corpus, "vec_id", "embedding", tag,
       bits = 8, tables = 4)
     val (sigT, vecT) = Dedup.embedIndexTables(tag)
-    val ct = Dedup.commitsTableName(sigT)
+    val index = PersistedIndex.embed(tag)
     val matches = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     def onM(id: Long, out: org.apache.spark.sql.DataFrame): Unit = {
       matches ++= out.select("batch_id", "corpus_id")
@@ -1240,10 +1243,10 @@ class EventStreamsSpec extends SparkSpec {
     intercept[RuntimeException] {
       EventStreams.maintainedBatch(PersistedIndex.embed(tag), b0, 0L,
         "vec_id", "embedding", onM,
-        crashBeforeCommit = () => throw new RuntimeException("boom"))(embStep(tag))
+        fault = crashAt("commit"))(embStep(tag))
     }
     assert(spark.table(vecT).filter(col("corpus_id") === 100L).count() == 1)
-    assert(spark.table(ct).filter(col("batch_id") === 0L).isEmpty)
+    assert(index.streamRecord(spark) == PersistedIndex.StreamRecord(None, Some(0L)))
     matches.clear()
     EventStreams.maintainedBatch(PersistedIndex.embed(tag), b0, 0L,
       "vec_id", "embedding", onM)(embStep(tag))
@@ -1256,7 +1259,7 @@ class EventStreamsSpec extends SparkSpec {
       Seq((200L, vec(999).map(_ * 2.0))).toDF("vec_id", "embedding"), 1L,
       "vec_id", "embedding", onM)(embStep(tag))
     assert(matches.toSeq == Seq((200L, 100L)), s"got $matches")
-    Seq(sigT, vecT, ct).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Seq(sigT, vecT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("maintainedAnnBatch crash recovery (judge r16 ask #3): the ANN " +
@@ -1274,7 +1277,7 @@ class EventStreamsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     Similarity.writeAnnIndex(corpus, "vec_id", "embedding", tag)
     val (codesT, vecsT, coarseT, pqT) = Similarity.annIndexTables(tag)
-    val ct = Dedup.commitsTableName(codesT)
+    val index = PersistedIndex.ann(tag, Similarity.loadIndexCodebooks(spark, tag))
     val served = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     def onS(id: Long, out: org.apache.spark.sql.DataFrame): Unit = {
       served ++= out.select("query_id", "neighbor_id")
@@ -1287,11 +1290,11 @@ class EventStreamsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     intercept[RuntimeException] {
       annBatch(b0, 0L, tag, onS,
-        crashBeforeCommit = () => throw new RuntimeException("boom"))
+        fault = crashAt("commit"))
     }
     // the crash landed the insert but not the commit row
     assert(spark.table(vecsT).filter(col("vid") === 100L).count() == 1)
-    assert(spark.table(ct).filter(col("batch_id") === 0L).isEmpty)
+    assert(index.streamRecord(spark) == PersistedIndex.StreamRecord(None, Some(0L)))
     served.clear()
     annBatch(b0, 0L, tag, onS)
     assert(served.toSet == Set((100L, 3L), (101L, served.toMap.apply(101L))),
@@ -1313,7 +1316,7 @@ class EventStreamsSpec extends SparkSpec {
       Seq((200L, vec(999).map(_ * 2.0))).toDF("vec_id", "embedding"), 1L,
       tag, onS)
     assert(served.toSeq == Seq((200L, 101L)), s"got $served")
-    (Seq(codesT, vecsT, coarseT, pqT) :+ ct)
+    Seq(codesT, vecsT, coarseT, pqT)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }
