@@ -312,12 +312,18 @@ private[graft] object PersistedIndex {
   /** MinHash: `…_bands` (corpus_id, band, h) bucketed and capped on
     * (band, h); `…_shingles` (corpus_id, sh, bandsig) bucketed on
     * corpus_id — the shingle table also stores the full band signature
-    * that the streaming twin's first-colliding-band rule needs. */
+    * that the streaming twin's first-colliding-band rule needs. The
+    * bands are exploded from an expression, not the bare `bandsig`
+    * column: Spark infers `size(bandsig) > 0 AND isnotnull(bandsig)` for
+    * a generator over an attribute and pushes it below the projection,
+    * which would run `minhash_bands` three times per doc (a null
+    * signature explodes to no rows either way). */
   def minhash(tag: String): PersistedIndex = {
     val (bt, st) = Dedup.indexTables(tag)
     PersistedIndex(tag,
       Seq(IndexTable(bt, Seq("band", "h"), _.select(col("corpus_id"),
-            posexplode(col("bandsig")).as(Seq("band", "h"))), capped = true),
+            posexplode(coalesce(col("bandsig"), typedLit(Array.empty[Long])))
+              .as(Seq("band", "h"))), capped = true),
           IndexTable(st, Seq("corpus_id"), identity)),
       "corpus_id", Nil,
       Seq(Dedup.MinhashNumPermProp, Dedup.MinhashBandsProp,

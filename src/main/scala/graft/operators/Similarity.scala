@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.vec_mat_cosines
 
 /** Similarity search over embedding columns (SURVEY.md §2.2).
   *
@@ -31,23 +32,78 @@ object Similarity {
   private def sub(c: Column, s: Int, dsub: Int): Column =
     slice(c, s * dsub + 1, dsub)
 
+  /** (vid, v, nrm) rows: the ids, the vectors as array<double>, their norms. */
+  private def vectors(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+
+  /** The unit vector v / nrm of a (vid, v, nrm) row. */
+  private def unitVec: Column = transform(col("v"), x => x / col("nrm"))
+
+  /** (query_id, qv, qnrm) and (query_id, qu) views of (vid, v, nrm) query rows. */
+  private def queryRows(q: DataFrame): DataFrame =
+    q.select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
+  private def queryUnits(q: DataFrame): DataFrame =
+    q.select(col("vid").as("query_id"), unitVec.as("qu"))
+
+  /** The PQ entry points' preamble: the (vid, v, nrm) rows, their unit
+    * vectors (vid, u) and the sub-vector width dim / m. One aggregate
+    * reads the dimension and checks the input's shape, so an empty
+    * corpus, a null vector or ragged vectors fail here by name. */
+  private def pqInput(emb: DataFrame, idCol: String, vecCol: String, m: Int,
+                      what: String): (DataFrame, DataFrame, Int) = {
+    val e = vectors(emb, idCol, vecCol)
+    val shape = e.agg(count(lit(1)), count(col("v")),
+      min(size(col("v"))), max(size(col("v")))).head()
+    val n = shape.getLong(0)
+    require(n > 0, s"$what needs at least one vector in $vecCol, got none")
+    require(shape.getLong(1) == n,
+      s"$what: ${n - shape.getLong(1)} of $n vectors in $vecCol are null")
+    val dim = shape.getInt(2)
+    require(dim == shape.getInt(3),
+      s"$what needs vectors of one dimension in $vecCol, got $dim to ${shape.getInt(3)}")
+    require(dim > 0 && dim % m == 0, s"$what: dim $dim must be divisible by m=$m")
+    (e, e.select(col("vid"), unitVec.as("u")), dim / m)
+  }
+
+  /** Adds the int column `name`: the 1-based position of the first
+    * maximum (`pick` = "array_max") or minimum ("array_min") of the
+    * array `scores` — the nearest codebook row, ties to the lowest. */
+  private def withNearest(df: DataFrame, name: String, scores: Column,
+                          pick: String = "array_max"): DataFrame =
+    df.withColumn("__s", scores)
+      .withColumn(name, expr(s"array_position(__s, $pick(__s))").cast("int"))
+      .drop("__s")
+
+  /** The `n` rows first in md5("<vid>:<seed>") order (vid tie-break) —
+    * the seeded sample every codebook starts from, a keyed hash order the
+    * DuckDB oracle can replay — as driver arrays of column `x`. */
+  private def seededSample(df: DataFrame, x: String, n: Int,
+                           seed: Long): Array[Array[Double]] =
+    df.orderBy(md5(concat_ws(":", col("vid"), lit(seed))), col("vid"))
+      .limit(n).select(x).collect().map(_.getSeq[Double](0).toArray)
+
+  /** Exact cosine of each (query_id, qv, qnrm) × (vid, v, nrm) pair,
+    * ranked per query (ties to the lower neighbor id): the top k as
+    * (query_id, rank, neighbor_id, cos). */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
+    pairs.select(col("query_id"), col("vid").as("neighbor_id"),
+        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "neighbor_id", "cos")
+      .orderBy("query_id", "rank")
+  }
+
   /** Brute-force cosine top-k: broadcast the (small) query set against the
     * corpus, rank per query with a window, keep k. The window shuffles by
     * query id — k·|queries| rows survive. Self-matches excluded. */
   def annTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryIds: Seq[Long], k: Int): DataFrame = {
-    val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val q = e.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val scored = e.join(broadcast(q), col("vid") =!= col("query_id"))
-      .select(col("query_id"), col("vid").as("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
+    val e = vectors(emb, idCol, vecCol)
+    val q = queryRows(e.filter(col("vid").isin(queryIds: _*)))
+    topK(e.join(broadcast(q), col("vid") =!= col("query_id")), k)
   }
 
   /** Deterministic spherical-k-means codebook (judge r4 ask #3), built
@@ -83,13 +139,9 @@ object Similarity {
     // DuckDB oracle (md5 exists in both engines; xxhash64 does not), so
     // iters = 0 codebooks are cross-engine reproducible — the operating
     // point the drift-report oracle replays
-    val init: Array[Array[Double]] = e
-      .orderBy(md5(concat_ws(":", col("vid"), lit(seed))), col("vid"))
-      .limit(nlist).select("v").collect().map(_.getSeq[Double](0).toArray)
+    val init = seededSample(e, "v", nlist, seed)
     (0 until iters).foldLeft(init) { (cb, _) =>
-      val sums = e
-        .withColumn("sims", graft.functions.GraftFunctions.vec_mat_cosines(col("v"), cb))
-        .withColumn("cell", expr("array_position(sims, array_max(sims))").cast("int"))
+      val sums = withNearest(e, "cell", vec_mat_cosines(col("v"), cb))
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy("cell", "pos")
         .agg(sum(col("x").cast("decimal(38,18)")).as("s"), count(lit(1)).as("n"))
@@ -105,6 +157,18 @@ object Similarity {
       next
     }
   }
+
+  /** The `nprobe` cells of highest cosine between `vec` and the coarse
+    * codebook, per `query_id` of `q` (ties to the lower cell): q's
+    * columns plus the 1-based `cell` and its cosine `sim`. */
+  private def probeCells(q: DataFrame, vec: Column, coarse: Array[Array[Double]],
+                         nprobe: Int): DataFrame =
+    q.select(col("*"), posexplode(vec_mat_cosines(vec, coarse)).as(Seq("cellIdx", "sim")))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("sim").desc, col("cellIdx"))))
+      .filter(col("rk") <= nprobe)
+      .withColumn("cell", col("cellIdx") + 1)
+      .drop("cellIdx", "rk")
 
   /** IVF-style ANN: partition the corpus into `nlist` cells around coarse
     * centroids, probe the `nprobe` nearest cells per query, rank
@@ -126,31 +190,156 @@ object Similarity {
              queryIds: Seq[Long], k: Int,
              nlist: Int = 16, nprobe: Int = 4,
              kmeansIters: Int = 2, seed: Long = 42L): DataFrame = {
-    val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+    val e = vectors(emb, idCol, vecCol)
     val codebook: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
-    def withSims(df: DataFrame) = df.withColumn("sims",
-      graft.functions.GraftFunctions.vec_mat_cosines(col("v"), codebook))
-    val corpus = withSims(e)
-      .withColumn("cell", expr("array_position(sims, array_max(sims))").cast("int"))
-      .drop("sims")
-    val probes = withSims(e.filter(col("vid").isin(queryIds: _*)))
-      .select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
-        posexplode(col("sims")).as(Seq("cellIdx", "sim")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("cellIdx"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qnrm"),
-        (col("cellIdx") + 1).as("cell"))
-    val cand = corpus.join(broadcast(probes), Seq("cell"))
-      .filter(col("vid") =!= col("query_id"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.select(col("query_id"), col("vid").as("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
+    val corpus = withNearest(e, "cell", vec_mat_cosines(col("v"), codebook))
+    val probes = probeCells(queryRows(e.filter(col("vid").isin(queryIds: _*))),
+      col("qv"), codebook, nprobe).select("query_id", "qv", "qnrm", "cell")
+    topK(corpus.join(broadcast(probes), Seq("cell"))
+      .filter(col("vid") =!= col("query_id")), k)
+  }
+
+  /** All M per-subspace codebooks of the array column `x` trained
+    * TOGETHER: one init job and one corpus scan per Lloyd iteration,
+    * instead of [[kmeansCodebook]]'s (1 + iters) jobs × M subspaces —
+    * per-iteration each row contributes its (sub, cell, pos, x)
+    * coordinates to a single partial-aggregated groupBy whose output is
+    * bounded at m·ksub·dsub sums. Same determinism discipline:
+    * seeded-hash init (the same sampled rows seed every subspace),
+    * exact-decimal coordinate sums. Assignment is [[pqCodes]]': cosine
+    * for unit vectors, EUCLIDEAN (`euclid`) for residuals — residuals
+    * are displacement vectors, not directions, and their MAGNITUDE is
+    * the information a residual coder exists to keep. */
+  private[graft] def pqCodebooks(df: DataFrame, x: String, m: Int, dsub: Int,
+      ksub: Int, iters: Int, seed: Long,
+      euclid: Boolean = false): Array[Array[Array[Double]]] = {
+    val initRows = seededSample(df, x, ksub, seed)
+    require(initRows.length >= ksub,
+      s"PQ needs at least ksub=$ksub vectors to seed each sub-codebook, " +
+      s"got ${initRows.length}")
+    val init: Array[Array[Array[Double]]] = Array.tabulate(m, ksub) { (s, j) =>
+      initRows(j).slice(s * dsub, (s + 1) * dsub)
+    }
+    (0 until iters).foldLeft(init) { (cbs, _) =>
+      val sums = pqCodes(df, col(x), cbs, euclid)
+        .select(posexplode(col(x)).as(Seq("pos", "xv")), col("__codes"))
+        .withColumn("sub", (col("pos") / dsub).cast("int"))
+        .groupBy(col("sub"), element_at(col("__codes"), col("sub") + 1).as("cell"),
+          col("pos"))
+        .agg(sum(col("xv").cast("decimal(38,18)")).as("s"), count(lit(1)).as("n"))
+        .collect()
+      val next = cbs.map(_.map(_.clone()))
+      sums.foreach { r =>
+        val (s, cell, pos) = (r.getInt(0), r.getInt(1), r.getInt(2))
+        next(s)(cell - 1)(pos - s * dsub) =
+          r.getDecimal(3).doubleValue() / r.getLong(4)
+      }
+      next
+    }
+  }
+
+  /** Adds the PQ codes `__codes` of the array column `x` (one 1-based
+    * code per subspace): the nearest sub-codebook row by cosine (native
+    * `vec_mat_cosines` argmax), or with `euclid` by Euclidean distance
+    * ([[l2DistancesCol]] argmin). */
+  private def pqCodes(df: DataFrame, x: Column, codebooks: Array[Array[Array[Double]]],
+                      euclid: Boolean = false): DataFrame = {
+    val dsub = codebooks(0)(0).length
+    val cs = codebooks.indices.map(s => s"__c$s")
+    codebooks.indices.foldLeft(df) { (d, s) =>
+      if (euclid) withNearest(d, cs(s), l2DistancesCol(sub(x, s, dsub), codebooks(s)),
+        "array_min")
+      else withNearest(d, cs(s), vec_mat_cosines(sub(x, s, dsub), codebooks(s)))
+    }.withColumn("__codes", array(cs.map(col): _*)).drop(cs: _*)
+  }
+
+  /** Array of ||x − c_j||² − |x|² values (one per codebook row), as a
+    * scan-side Column over the array column `x`: |c_j|² − 2·dot(x, c_j)
+    * with dot via the native `vec_mat_cosines` (dot = cos·|x|·|c|) and
+    * the |c_j| norms as driver literals — the |x|² term is constant per
+    * row, so `array_min` over this array is the Euclidean argmin.
+    * A zero `x` (cosine undefined) short-circuits to the |c_j|² array,
+    * so a vector exactly on its centroid assigns to the smallest |c|. */
+  private def l2DistancesCol(x: Column, cb: Array[Array[Double]]): Column = {
+    val cn = cb.map(c => math.sqrt(c.map(v => v * v).sum))
+    val cn2Arr = array(cn.map(n => lit(n * n)): _*)
+    val cnArr = array(cn.map(lit): _*)
+    val xn = sqrt(dot(x, x))
+    when(xn === 0d, cn2Arr).otherwise(
+      zip_with(
+        zip_with(vec_mat_cosines(x, cb), cnArr, (si, ci) => si * ci * xn),
+        cn2Arr, (p, c2) => c2 - lit(2d) * p))
+  }
+
+  /** The (sub, code, centroid) rows of PQ codebooks (codes 1-based, as
+    * array_position returns them): the tiny relation every LUT is built
+    * from and the `…_pq` table stores. */
+  private def codebookRows(spark: SparkSession,
+                           codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
+    (for (s <- codebooks.indices; j <- codebooks(s).indices)
+      yield (s, j + 1, codebooks(s)(j).toSeq)).toDF("sub", "code", "centroid")
+  }
+
+  /** The (cell, centroid) rows of a coarse codebook (cells 1-based). */
+  private def cellRows(spark: SparkSession, coarse: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    coarse.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }.toSeq
+      .toDF("cell", "centroid")
+  }
+
+  /** The IVF-ADC core (Jégou et al. 2011 §IV) every PQ path runs:
+    *  - LUT: per query, dot(q̂_s, centroid) for every (sub, code) of the
+    *    PQ `codebooks` — a crossJoin of the query unit vectors with the
+    *    tiny codebook relation, broadcast (M·ksub rows per query);
+    *  - ADC: the `codes` rows (vid, sub, code[, cell]) are gated first by
+    *    the broadcast (query_id, cell[, cellterm]) `probes` when given, so
+    *    unprobed cells die at the join before any aggregation (without
+    *    probes every code row scores against every query); a (query,
+    *    vid)'s approximate score is the exact-decimal sum of its LUT
+    *    values — order-independent, so bit-stable under any partitioning
+    *    — plus the probed cell's `cellterm` when the probes carry one
+    *    (every row of a (query, vid) group shares the one cell, so max()
+    *    reads the constant);
+    *  - `selfExclude` (the queries are corpus rows) drops vid = query_id
+    *    before the sum, and the one-column `allowed` relation of
+    *    permitted ids semi-joins the scores BEFORE the overfetch window,
+    *    so the window always yields k·overfetch survivors;
+    *  - RERANK: the top overfetch·k per query by approximate score (ties
+    *    to the lower vid) fetch their TRUE vectors from `corpus` (vid, v,
+    *    nrm) by id — full floats are touched only for the candidate set —
+    *    and exact cosine decides ([[topK]]): brute force's answer at any
+    *    complete-recall operating point, a recall/throughput dial
+    *    elsewhere.
+    * `q` holds the (vid, v, nrm) query rows. */
+  private def adc(q: DataFrame, corpus: DataFrame, codes: DataFrame,
+                  codebooks: Array[Array[Array[Double]]], probes: Option[DataFrame],
+                  k: Int, overfetch: Int, selfExclude: Boolean = true,
+                  allowed: Option[DataFrame] = None): DataFrame = {
+    val dsub = codebooks(0)(0).length
+    val lutExpr = codebooks.indices.foldLeft(lit(null).cast("double")) { (acc, s) =>
+      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
+        .otherwise(acc)
+    }
+    val lut = broadcast(queryUnits(q).crossJoin(codebookRows(q.sparkSession, codebooks))
+      .select(col("query_id"), col("sub"), col("code"), lutExpr.as("lutv")))
+    def exclude(df: DataFrame) =
+      if (selfExclude) df.filter(col("vid") =!= col("query_id")) else df
+    val scored = probes.fold(exclude(codes.join(lut, Seq("sub", "code")))) { p =>
+      exclude(codes.join(broadcast(p), Seq("cell")))
+        .join(lut, Seq("query_id", "sub", "code"))
+    }
+    val lutSum = sum(col("lutv").cast("decimal(38,18)"))
+    val approx = scored.groupBy(col("query_id"), col("vid")).agg(
+      (if (probes.exists(_.columns.contains("cellterm")))
+        lutSum + max(col("cellterm").cast("decimal(38,18)")) else lutSum).as("approx"))
+    val kept = allowed.fold(approx)(a => approx.join(
+      a.select(col(a.columns.head).cast("long").as("vid")), Seq("vid"), "left_semi"))
+    val wA = Window.partitionBy("query_id").orderBy(col("approx").desc, col("vid"))
+    val cand = kept.withColumn("ark", row_number().over(wA))
+      .filter(col("ark") <= k * overfetch)
+      .select("query_id", "vid")
+    topK(cand.join(corpus, "vid").join(broadcast(queryRows(q)), "query_id"), k)
   }
 
   /** Product-quantization ANN (Jégou et al. 2011, "Product quantization
@@ -163,208 +352,30 @@ object Similarity {
     * Spark-first shape, all stages declarative:
     *  - TRAIN: split the UNIT-NORMALIZED vector into M subspaces; per
     *    subspace a deterministic spherical-k-means codebook
-    *    ([[kmeansCodebook]], ksub centroids). Quantizing unit vectors
+    *    ([[pqCodebooks]], ksub centroids). Quantizing unit vectors
     *    makes the approximate score norm-invariant (a scaled copy of a
     *    query gets exactly the query's own codes), which is what cosine
     *    retrieval needs.
     *  - ENCODE: per subspace, scan-side argmax-cosine against the sub-
-    *    codebook (native `vec_mat_cosines`) → the PQ table (vid, codes).
-    *  - SCORE (ADC): per query, a lookup table of dot(q̂_m, centroid_j)
-    *    (M·ksub values, built by a crossJoin of the broadcast query set
-    *    with the tiny codebook relation); approximate cosine of vector x
-    *    = Σ_m LUT[m, code_m(x)], an equi-join of the exploded code table
-    *    with the broadcast LUT + a partial-aggregated DECIMAL sum (order-
-    *    independent — bit-stable scores under any partitioning).
-    *  - RERANK: top overfetch·k candidates per query by approximate score
-    *    fetch their TRUE vectors back by id (the compact-store discipline:
-    *    full floats are touched only for the candidate set) and exact
-    *    cosine decides — the superset-prefilter + exact-verify pattern
-    *    the repo's dedup/decontamination paths use, so at a complete-
-    *    recall operating point the output is exactly brute force's.
+    *    codebook ([[pqCodes]]) → the PQ table (vid, sub, code).
+    *  - SCORE, RERANK: [[adc]] over every code row — the superset-
+    *    prefilter + exact-verify pattern the repo's dedup/decontamination
+    *    paths use, so at a complete-recall operating point the output is
+    *    exactly brute force's.
     *
-    * One bounded driver probe reads the dimension from a single row (the
-    * codebook geometry needs it before any plan is built). */
-  /** All M per-subspace codebooks trained TOGETHER: one init job and one
-    * corpus scan per Lloyd iteration, instead of [[kmeansCodebook]]'s
-    * (1 + iters) jobs × M subspaces — per-iteration each row contributes
-    * its (sub, cell, pos, x) coordinates to a single partial-aggregated
-    * groupBy whose output is bounded at m·ksub·dsub sums. Same
-    * determinism discipline: seeded-hash init (the same sampled rows
-    * seed every subspace), exact-decimal coordinate sums. */
-  private def pqCodebooks(unit: DataFrame, m: Int, dsub: Int, ksub: Int,
-                          iters: Int, seed: Long): Array[Array[Array[Double]]] = {
-    val initRows: Array[Array[Double]] = unit
-      .orderBy(md5(concat_ws(":", col("vid"), lit(seed))), col("vid"))
-      .limit(ksub).select("u").collect().map(_.getSeq[Double](0).toArray)
-    require(initRows.length >= ksub,
-      s"PQ needs at least ksub=$ksub vectors to seed each sub-codebook, " +
-      s"got ${initRows.length}")
-    val init: Array[Array[Array[Double]]] = Array.tabulate(m, ksub) { (s, j) =>
-      initRows(j).slice(s * dsub, (s + 1) * dsub)
-    }
-    (0 until iters).foldLeft(init) { (cbs, _) =>
-      val assigned = (0 until m).foldLeft(unit) { (df, s) =>
-        val sims = graft.functions.GraftFunctions.vec_mat_cosines(
-          slice(col("u"), s * dsub + 1, dsub), cbs(s))
-        df.withColumn(s"__sims$s", sims)
-          .withColumn(s"__cell$s",
-            expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
-          .drop(s"__sims$s")
-      }
-      val sums = assigned
-        .select(posexplode(col("u")).as(Seq("pos", "x")) +:
-          (0 until m).map(s => col(s"__cell$s")): _*)
-        .withColumn("sub", (col("pos") / dsub).cast("int"))
-        .withColumn("cell",
-          (0 until m).foldLeft(lit(null).cast("int")) { (acc, s) =>
-            when(col("sub") === s, col(s"__cell$s")).otherwise(acc)
-          })
-        .groupBy("sub", "cell", "pos")
-        .agg(sum(col("x").cast("decimal(38,18)")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cbs.map(_.map(_.clone()))
-      sums.foreach { r =>
-        val (s, cell, pos) = (r.getInt(0), r.getInt(1), r.getInt(2))
-        next(s)(cell - 1)(pos - s * dsub) =
-          r.getDecimal(3).doubleValue() / r.getLong(4)
-      }
-      next
-    }
-  }
-
+    * One driver aggregate reads the dimension and checks the input
+    * ([[pqInput]]; the codebook geometry needs it before any plan is
+    * built). */
   def annPq(emb: DataFrame, idCol: String, vecCol: String,
             queryIds: Seq[Long], k: Int,
             m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
             overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val dim = e.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-    val dsub = dim / m
-    val unit = e.select(col("vid"),
-      transform(col("v"), x => x / col("nrm")).as("u"))
-
-    val codebooks: Array[Array[Array[Double]]] =
-      pqCodebooks(unit, m, dsub, ksub, kmeansIters, seed)
-    // PQ table: (vid, code_0..code_{m-1}) — the compact store
-    val coded = (0 until m).foldLeft(unit) { (df, s) =>
-      df.withColumn(s"__sims$s",
-          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s, dsub), codebooks(s)))
-        .withColumn(s"__c$s",
-          expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
-        .drop(s"__sims$s")
-    }.select(col("vid") +: (0 until m).map(s => col(s"__c$s")): _*)
-
-    // tiny codebook relation (m·ksub rows) for the LUT build
-    val cbRows = for (s <- 0 until m; j <- 0 until ksub)
-      yield (s, j + 1, codebooks(s)(j).toSeq) // +1: array_position is 1-based
-    val cbDf = cbRows.toDF("sub", "code", "centroid")
-    val queries = unit.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("u").as("qu"))
-    val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
-        .otherwise(acc)
-    }
-    val lut = queries.crossJoin(cbDf)
-      .select(col("query_id"), col("sub"), col("code"), lutExpr.as("lutv"))
-
-    // ADC scoring over the code table: equi-join + order-independent sum
-    val codesLong = coded.select(col("vid"),
-      posexplode(array((0 until m).map(s => col(s"__c$s")): _*))
-        .as(Seq("sub", "code")))
-    val approx = codesLong.join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("vid") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vid"))
-      .agg(sum(col("lutv").cast("decimal(38,18)")).as("approx"))
-    val wA = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("vid"))
-    val cand = approx.withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * overfetch)
-      .select("query_id", "vid")
-
-    // exact rerank: true vectors fetched by id for the candidate set only
-    val qFull = e.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wE = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(e, "vid").join(broadcast(qFull), "query_id")
-      .select(col("query_id"), col("vid").as("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
-  }
-
-  /** All M per-subspace RESIDUAL codebooks trained together over
-    * (vid, r) rows — [[pqCodebooks]]'s discipline (seeded md5-ordered
-    * init, one corpus scan per Lloyd iteration, exact-decimal
-    * coordinate sums) with EUCLIDEAN assignment instead of cosine:
-    * residuals are displacement vectors, not directions — their
-    * MAGNITUDE is the information a residual coder exists to keep, so
-    * sub-vectors assign to the centroid minimizing ||r_s − c_j||²
-    * (computed as |c_j|² − 2·dot(r_s, c_j) via the native
-    * `vec_mat_cosines` scan plus driver-literal centroid norms; the
-    * |r_s|² term is constant per row and drops out of the argmin). A
-    * zero residual sub-vector (a vector exactly on its centroid)
-    * assigns to the smallest-|c| centroid — the cosine form would NaN. */
-  private[graft] def pqCodebooksResidual(res: DataFrame, m: Int, dsub: Int,
-      ksub: Int, iters: Int, seed: Long): Array[Array[Array[Double]]] = {
-    val initRows: Array[Array[Double]] = res
-      .orderBy(md5(concat_ws(":", col("vid"), lit(seed))), col("vid"))
-      .limit(ksub).select("r").collect().map(_.getSeq[Double](0).toArray)
-    require(initRows.length >= ksub,
-      s"residual PQ needs at least ksub=$ksub vectors to seed each " +
-      s"sub-codebook, got ${initRows.length}")
-    val init: Array[Array[Array[Double]]] = Array.tabulate(m, ksub) { (s, j) =>
-      initRows(j).slice(s * dsub, (s + 1) * dsub)
-    }
-    (0 until iters).foldLeft(init) { (cbs, _) =>
-      val assigned = (0 until m).foldLeft(res) { (df, s) =>
-        df.withColumn(s"__d$s",
-            l2DistancesCol(slice(col("r"), s * dsub + 1, dsub), cbs(s)))
-          .withColumn(s"__cell$s",
-            expr(s"array_position(__d$s, array_min(__d$s))").cast("int"))
-          .drop(s"__d$s")
-      }
-      val sums = assigned
-        .select(posexplode(col("r")).as(Seq("pos", "x")) +:
-          (0 until m).map(s => col(s"__cell$s")): _*)
-        .withColumn("sub", (col("pos") / dsub).cast("int"))
-        .withColumn("cell",
-          (0 until m).foldLeft(lit(null).cast("int")) { (acc, s) =>
-            when(col("sub") === s, col(s"__cell$s")).otherwise(acc)
-          })
-        .groupBy("sub", "cell", "pos")
-        .agg(sum(col("x").cast("decimal(38,18)")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cbs.map(_.map(_.clone()))
-      sums.foreach { r =>
-        val (s, cell, pos) = (r.getInt(0), r.getInt(1), r.getInt(2))
-        next(s)(cell - 1)(pos - s * dsub) =
-          r.getDecimal(3).doubleValue() / r.getLong(4)
-      }
-      next
-    }
-  }
-
-  /** Array of ||x − c_j||² − |x|² values (one per codebook row), as a
-    * scan-side Column over the array column `x`: |c_j|² − 2·dot(x, c_j)
-    * with dot via the native `vec_mat_cosines` (dot = cos·|x|·|c|) and
-    * the |c_j| norms as driver literals — the |x|² term is constant per
-    * row, so `array_min` over this array is the Euclidean argmin.
-    * A zero `x` (cosine undefined) short-circuits to the |c_j|² array. */
-  private def l2DistancesCol(x: Column, cb: Array[Array[Double]]): Column = {
-    val cn = cb.map(c => math.sqrt(c.map(v => v * v).sum))
-    val cn2Arr = array(cn.map(n => lit(n * n)): _*)
-    val cnArr = array(cn.map(lit): _*)
-    val xn = sqrt(dot(x, x))
-    when(xn === 0d, cn2Arr).otherwise(
-      zip_with(
-        zip_with(graft.functions.GraftFunctions.vec_mat_cosines(x, cb),
-          cnArr, (si, ci) => si * ci * xn),
-        cn2Arr, (p, c2) => c2 - lit(2d) * p))
+    val (e, unit, dsub) = pqInput(emb, idCol, vecCol, m, "annPq")
+    val codebooks = pqCodebooks(unit, "u", m, dsub, ksub, kmeansIters, seed)
+    val codes = pqCodes(unit, col("u"), codebooks)
+      .select(col("vid"), posexplode(col("__codes")).as(Seq("sub", "code")))
+    adc(e.filter(col("vid").isin(queryIds: _*)), e, codes, codebooks, None,
+      k, overfetch)
   }
 
   /** IVF-ADC — the composed production ANN shape (Jégou et al. 2011 §IV:
@@ -379,102 +390,33 @@ object Similarity {
     *    k-means); corpus cell assignment is the same scan-side
     *    `vec_mat_cosines` argmax [[annIvf]] uses (cosine argmax is
     *    scale-invariant, so assigning the UNIT vector is identical);
-    *  - PQ codebooks/encoding/LUT/ADC/decimal sums = [[annPq]]'s,
-    *    quantizing unit vectors directly (not Jégou's residuals — unit
-    *    quantization is what makes approximate COSINE scores
-    *    norm-invariant, the property the planted oracle checks; a
-    *    residual coder would couple codes to the probed cell and break
-    *    it). Sub-codebooks are shared across cells, the standard
-    *    memory/recall trade for non-residual IVFPQ.
+    *  - PQ codebooks/encoding = [[annPq]]'s, quantizing unit vectors
+    *    directly (not Jégou's residuals — unit quantization is what makes
+    *    approximate COSINE scores norm-invariant, the property the
+    *    planted oracle checks; a residual coder would couple codes to the
+    *    probed cell and break it). Sub-codebooks are shared across cells,
+    *    the standard memory/recall trade for non-residual IVFPQ.
     *
-    * Scale shape: the code table carries (vid, cell, m codes); the probe
-    * relation (|queries|·nprobe rows) and the LUT broadcast; the
-    * cell-restricted candidate set comes from an equi-join on `cell`, so
-    * unprobed cells' codes never leave the scan. Exact rerank fetches
-    * true vectors BY ID for the top overfetch·k only — brute force's
-    * answer at any complete-recall operating point (planted corpus), a
-    * recall/throughput dial elsewhere. */
+    * Scale shape: the code table carries (vid, cell, sub, code); the
+    * probe relation (|queries|·nprobe rows, [[probeCells]]) gates it in
+    * [[adc]], so unprobed cells' codes never leave the scan. */
   def annIvfPq(emb: DataFrame, idCol: String, vecCol: String,
                queryIds: Seq[Long], k: Int,
                nlist: Int = 16, nprobe: Int = 4,
                m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
                overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val dim = e.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-    val dsub = dim / m
-    val unit = e.select(col("vid"),
-      transform(col("v"), x => x / col("nrm")).as("u"))
-
+    val (e, unit, dsub) = pqInput(emb, idCol, vecCol, m, "annIvfPq")
     // the two trained codebooks — both bounded driver-resident objects
     val coarse: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
-    val codebooks: Array[Array[Array[Double]]] =
-      pqCodebooks(unit, m, dsub, ksub, kmeansIters, seed)
-    def withCell(df: DataFrame, vec: String) = df
-      .withColumn("__cs", graft.functions.GraftFunctions.vec_mat_cosines(col(vec), coarse))
-      .withColumn("cell", expr("array_position(__cs, array_max(__cs))").cast("int"))
-
-    // compact store: (vid, cell, code_0..m-1) — PQ code lists keyed by
-    // IVF cell (at rest this is what you'd bucket/partition by cell)
-    val coded = (0 until m).foldLeft(withCell(unit, "u").drop("__cs")) { (df, s) =>
-      df.withColumn(s"__sims$s",
-          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s, dsub), codebooks(s)))
-        .withColumn(s"__c$s",
-          expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
-        .drop(s"__sims$s")
-    }.select(col("vid") +: col("cell") +: (0 until m).map(s => col(s"__c$s")): _*)
-    val codesLong = coded.select(col("vid"), col("cell"),
-      posexplode(array((0 until m).map(s => col(s"__c$s")): _*))
-        .as(Seq("sub", "code")))
-
-    // query side: nprobe nearest cells per query + the per-query ADC LUT
-    val probes = withCell(unit.filter(col("vid").isin(queryIds: _*)), "u")
-      .select(col("vid").as("query_id"),
-        posexplode(col("__cs")).as(Seq("cellIdx", "sim")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("cellIdx"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), (col("cellIdx") + 1).as("cell"))
-    val cbRows = for (s <- 0 until m; j <- 0 until ksub)
-      yield (s, j + 1, codebooks(s)(j).toSeq)
-    val cbDf = cbRows.toDF("sub", "code", "centroid")
-    val queries = unit.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("u").as("qu"))
-    val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
-        .otherwise(acc)
-    }
-    val lut = queries.crossJoin(cbDf)
-      .select(col("query_id"), col("sub"), col("code"), lutExpr.as("lutv"))
-
-    // ADC over PROBED CELLS ONLY: the broadcast (query, cell) pairs gate
-    // the code table before any aggregation — unprobed cells die at the
-    // join; then the same order-independent decimal sum as annPq
-    val approx = codesLong.join(broadcast(probes), Seq("cell"))
-      .filter(col("vid") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("vid"))
-      .agg(sum(col("lutv").cast("decimal(38,18)")).as("approx"))
-    val wA = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("vid"))
-    val cand = approx.withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * overfetch)
-      .select("query_id", "vid")
-
-    // exact rerank: true vectors fetched by id for the candidate set only
-    val qFull = e.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wE = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(e, "vid").join(broadcast(qFull), "query_id")
-      .select(col("query_id"), col("vid").as("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
+    val codebooks = pqCodebooks(unit, "u", m, dsub, ksub, kmeansIters, seed)
+    // compact store: PQ code lists keyed by IVF cell (at rest this is
+    // what the persisted index partitions by cell)
+    val codes = pqCodes(withNearest(unit, "cell", vec_mat_cosines(col("u"), coarse)),
+        col("u"), codebooks)
+      .select(col("vid"), col("cell"), posexplode(col("__codes")).as(Seq("sub", "code")))
+    val q = e.filter(col("vid").isin(queryIds: _*))
+    adc(q, e, codes, codebooks, Some(probeCells(queryUnits(q), col("qu"), coarse,
+      nprobe).select("query_id", "cell")), k, overfetch)
   }
 
   /** IVF-ADC with RESIDUAL quantization (judge r16 ask #4 — Jégou et
@@ -482,12 +424,12 @@ object Similarity {
     * residual y − q₁(y) of the coarse cell assignment, not the vector
     * itself): each unit vector's displacement from its cell's
     * unit-projected centroid is PQ-coded by per-subspace EUCLIDEAN
-    * codebooks ([[pqCodebooksResidual]]), and ADC scores decompose as
-    * dot(q, ŷ) = dot(q, c/|c|) + Σ_s dot(q_s, rescb_s(code_s))
+    * codebooks ([[pqCodebooks]] with `euclid`), and ADC scores decompose
+    * as dot(q, ŷ) = dot(q, c/|c|) + Σ_s dot(q_s, rescb_s(code_s))
     * — the per-(query, cell) term rides on the probe relation, the
     * per-subspace terms come from the residual LUT, both summed in the
-    * exact-decimal discipline. Overfetch and exact rerank are
-    * [[annIvfPq]]'s verbatim.
+    * exact-decimal discipline by [[adc]], which also runs the overfetch
+    * and exact rerank.
     *
     * WHY both variants exist: [[annIvfPq]] quantizes unit vectors
     * directly, which makes approximate scores norm-invariant — a scaled
@@ -510,16 +452,7 @@ object Similarity {
                        nlist: Int = 16, nprobe: Int = 4,
                        m: Int = 4, ksub: Int = 8, kmeansIters: Int = 2,
                        overfetch: Int = 4, seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val dim = e.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-    val dsub = dim / m
-    val unit = e.select(col("vid"),
-      transform(col("v"), x => x / col("nrm")).as("u"))
-
+    val (e, unit, dsub) = pqInput(emb, idCol, vecCol, m, "annIvfPqResidual")
     val coarse: Array[Array[Double]] = kmeansCodebook(e, nlist, kmeansIters, seed)
     // residuals live in the UNIT space, so the cell anchor must too:
     // the coarse centroid (a mean of raw vectors, norm ~ |corpus|-scale)
@@ -532,81 +465,23 @@ object Similarity {
     val unitCoarse = coarse.map { c =>
       val n = math.sqrt(c.map(v => v * v).sum); c.map(_ / n)
     }
-    val coarseDf = unitCoarse.zipWithIndex
-      .map { case (c, i) => (i + 1, c.toSeq) }.toSeq.toDF("cell", "centroid")
-    def withCell(df: DataFrame) = df
-      .withColumn("__cs", graft.functions.GraftFunctions.vec_mat_cosines(col("u"), coarse))
-      .withColumn("cell", expr("array_position(__cs, array_max(__cs))").cast("int"))
-
     // residual relation: r = u − c_unit(cell) — computed once, feeds
     // both codebook training and encoding (training is iters scans of
     // this plan; the residual join is a broadcast of nlist rows)
-    val res = withCell(unit).drop("__cs")
-      .join(broadcast(coarseDf), Seq("cell"))
+    val res = withNearest(unit, "cell", vec_mat_cosines(col("u"), coarse))
+      .join(broadcast(cellRows(emb.sparkSession, unitCoarse)), Seq("cell"))
       .select(col("vid"), col("cell"),
         zip_with(col("u"), col("centroid"), (x, c) => x - c).as("r"))
-    val rescbs: Array[Array[Array[Double]]] =
-      pqCodebooksResidual(res.select("vid", "r"), m, dsub, ksub,
-        kmeansIters, seed)
-
-    // encode: per-subspace Euclidean argmin over the residual codebooks
-    val coded = (0 until m).foldLeft(res) { (df, s) =>
-      df.withColumn(s"__d$s", l2DistancesCol(sub(col("r"), s, dsub), rescbs(s)))
-        .withColumn(s"__c$s",
-          expr(s"array_position(__d$s, array_min(__d$s))").cast("int"))
-        .drop(s"__d$s")
-    }.select(col("vid") +: col("cell") +: (0 until m).map(s => col(s"__c$s")): _*)
-    val codesLong = coded.select(col("vid"), col("cell"),
-      posexplode(array((0 until m).map(s => col(s"__c$s")): _*))
-        .as(Seq("sub", "code")))
-
+    val rescbs = pqCodebooks(res.select("vid", "r"), "r", m, dsub, ksub,
+      kmeansIters, seed, euclid = true)
+    val codes = pqCodes(res, col("r"), rescbs, euclid = true)
+      .select(col("vid"), col("cell"), posexplode(col("__codes")).as(Seq("sub", "code")))
     // probes carry the per-(query, cell) centroid term of the ADC
     // decomposition: dot(q, c/|c|) = the probe cosine itself (|q| = 1)
-    val probes = withCell(unit.filter(col("vid").isin(queryIds: _*)))
-      .select(col("vid").as("query_id"),
-        posexplode(col("__cs")).as(Seq("cellIdx", "sim")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("cellIdx"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), (col("cellIdx") + 1).as("cell"),
-        col("sim").as("cellterm"))
-    val cbRows = for (s <- 0 until m; j <- 0 until ksub)
-      yield (s, j + 1, rescbs(s)(j).toSeq)
-    val cbDf = cbRows.toDF("sub", "code", "centroid")
-    val queries = unit.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("u").as("qu"))
-    val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
-        .otherwise(acc)
-    }
-    val lut = queries.crossJoin(cbDf)
-      .select(col("query_id"), col("sub"), col("code"), lutExpr.as("lutv"))
-
-    // ADC over probed cells: Σ_s LUT + the cell's centroid term (every
-    // row of a (query, vid) group shares the one probed cell, so max()
-    // reads the constant); same order-independent decimal sums
-    val approx = codesLong.join(broadcast(probes), Seq("cell"))
-      .filter(col("vid") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("vid"))
-      .agg((sum(col("lutv").cast("decimal(38,18)")) +
-        max(col("cellterm").cast("decimal(38,18)"))).as("approx"))
-    val wA = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("vid"))
-    val cand = approx.withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * overfetch)
-      .select("query_id", "vid")
-
-    val qFull = e.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wE = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(e, "vid").join(broadcast(qFull), "query_id")
-      .select(col("query_id"), col("vid").as("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
+    val q = e.filter(col("vid").isin(queryIds: _*))
+    val probes = probeCells(queryUnits(q), col("qu"), coarse, nprobe)
+      .select(col("query_id"), col("cell"), col("sim").as("cellterm"))
+    adc(q, e, codes, rescbs, Some(probes), k, overfetch)
   }
 
   // ------------------------------------------------ persisted ANN index
@@ -625,8 +500,7 @@ object Similarity {
   private[operators] val AnnNlistProp = "graft.ann.nlist"
 
   /** The coarse (nlist × dim) and PQ (m × ksub × dsub) codebooks. */
-  private[graft] type Codebooks =
-    (Array[Array[Double]], Array[Array[Array[Double]]])
+  type Codebooks = (Array[Array[Double]], Array[Array[Array[Double]]])
 
   /** The drift-baseline stats table riding next to a persisted ANN
     * index (judge r16 ask #5): per-cell occupancy and exact-micro
@@ -652,7 +526,7 @@ object Similarity {
     * left-fold dots and multiplies the norms before the divide
     * (VecDotImpl / VecMatCosinesImpl share the accumulation order). */
   private def qerrMicrosVecCol(u: Column, coarse: Array[Array[Double]]): Column =
-    transform(graft.functions.GraftFunctions.vec_mat_cosines(u, coarse),
+    transform(vec_mat_cosines(u, coarse),
       c => round((lit(1d) - c) * lit(1000000d)).cast("long"))
 
   /** Coarse-cell assignment for the PERSISTED index family
@@ -691,8 +565,8 @@ object Similarity {
     *  - `…_coarse` / `…_pq`: the two trained codebooks (nlist·dim and
     *    m·ksub·dsub rows — bounded, the broadcast-codebook shape made
     *    durable).
-    * Training is [[kmeansCodebook]]/[[pqCodebooks]] verbatim (same
-    * seeded determinism); geometry (m, ksub, nlist) is recorded as
+    * Training is [[annIvfPq]]'s ([[kmeansCodebook]] and [[pqCodebooks]],
+    * same seeded determinism); geometry (m, ksub, nlist) is recorded as
     * table properties so the read path cannot disagree. The write-time
     * drift baseline ([[annStatsTable]]) rides the codes write via
     * observe() for the bounded nlist of a serving index — no second
@@ -703,28 +577,20 @@ object Similarity {
                     seed: Long = 42L, buckets: Int = 32): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
+    val (e, unit, dsub) = pqInput(emb, idCol, vecCol, m, "writeAnnIndex")
     val (_, _, coarseT, pqT) = annIndexTables(tag)
     val statsT = annStatsTable(tag)
     Dedup.dropStaleTable(spark, statsT)
-    val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val dim = e.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-    val unit = e.select(col("vid"),
-      transform(col("v"), x => x / col("nrm")).as("u"))
     val books: Codebooks = (kmeansCodebook(e, nlist, kmeansIters, seed),
-      pqCodebooks(unit, m, dim / m, ksub, kmeansIters, seed))
+      pqCodebooks(unit, "u", m, dsub, ksub, kmeansIters, seed))
     val obs = if (nlist <= 128) Some(new org.apache.spark.sql.Observation()) else None
     val index = PersistedIndex.ann(tag, books, obs.map(_ -> nlist))
     val geom = Map(AnnMProp -> m, AnnKsubProp -> ksub, AnnNlistProp -> nlist,
       Dedup.BucketsProp -> buckets)
     index.write(emb, idCol, vecCol, geom, () => {
-      books._1.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }.toSeq
-        .toDF("cell", "centroid").coalesce(1)
+      cellRows(spark, books._1).coalesce(1)
         .write.format("parquet").mode("overwrite").saveAsTable(coarseT)
-      (for (s <- 0 until m; j <- 0 until ksub)
-        yield (s, j + 1, books._2(s)(j).toSeq)).toDF("sub", "code", "centroid")
-        .coalesce(1)
+      codebookRows(spark, books._2).coalesce(1)
         .write.format("parquet").mode("overwrite").saveAsTable(pqT)
     })
     // the drift baseline the codes write already aggregated (or, above
@@ -750,19 +616,8 @@ object Similarity {
     * codes `__codes`, all against the given (frozen) codebooks. */
   private[operators] def annEncode(df: DataFrame, idCol: String,
                                    vecCol: String, books: Codebooks): DataFrame = {
-    val (coarse, codebooks) = books
-    val dsub = codebooks(0)(0).length
-    val unit = df.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("u", transform(col("v"), x => x / col("nrm")))
-    codebooks.indices.foldLeft(withQuantizedCell(unit, coarse)) { (df, s) =>
-      df.withColumn(s"__sims$s",
-          graft.functions.GraftFunctions.vec_mat_cosines(sub(col("u"), s, dsub), codebooks(s)))
-        .withColumn(s"__c$s",
-          expr(s"array_position(__sims$s, array_max(__sims$s))").cast("int"))
-        .drop(s"__sims$s")
-    }.withColumn("__codes", array(codebooks.indices.map(s => col(s"__c$s")): _*))
-      .drop("u" +: codebooks.indices.map(s => s"__c$s"): _*)
+    val e = vectors(df, idCol, vecCol).withColumn("u", unitVec)
+    pqCodes(withQuantizedCell(e, books._1), col("u"), books._2).drop("u")
   }
 
   /** ANN index INSERTS (judge r14 ask #2a — the serving index was
@@ -780,8 +635,7 @@ object Similarity {
     * tag). */
   def appendAnnIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                      tag: String,
-                     preloaded: Option[(Array[Array[Double]],
-                       Array[Array[Array[Double]]])] = None): DataFrame =
+                     preloaded: Option[Codebooks] = None): DataFrame =
     PersistedIndex.ann(tag, preloaded.getOrElse(
         loadIndexCodebooks(newVecs.sparkSession, tag)))
       .append(newVecs, idCol, vecCol, "appendAnnIndex")
@@ -804,8 +658,7 @@ object Similarity {
     * untouched (bounded, never appended). Serve results are bit-equal
     * before/after with per-cell file counts collapsed to one write's
     * worth. */
-  def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
-                      tag: String): Unit =
+  def compactAnnIndex(spark: SparkSession, tag: String): Unit =
     PersistedIndex.ann(tag, loadIndexCodebooks(spark, tag))
       .compact(spark, "compactAnnIndex")
 
@@ -833,8 +686,7 @@ object Similarity {
     * report is vs the WRITE-time snapshot; removeFrom* purges shrink
     * n_now below the baseline for affected cells (negative n_appended
     * — visible, not hidden), and compaction leaves it unchanged. */
-  def annDriftReport(spark: org.apache.spark.sql.SparkSession,
-                     tag: String): DataFrame = {
+  def annDriftReport(spark: SparkSession, tag: String): DataFrame = {
     val (codesT, vecsT, coarseT, _) = annIndexTables(tag)
     val statsT = annStatsTable(tag)
     Seq(codesT, vecsT).foreach(Dedup.recoverSwappedTable(spark, _))
@@ -842,8 +694,7 @@ object Similarity {
       s"annDriftReport: no index (or pre-stats index) for tag '$tag'")
     val cells = spark.table(codesT).filter(col("sub") === 0)
       .select(col("vid"), col("cell"))
-    val u = spark.table(vecsT)
-      .select(col("vid"), transform(col("v"), x => x / col("nrm")).as("u"))
+    val u = spark.table(vecsT).select(col("vid"), unitVec.as("u"))
     val now = u.join(cells, Seq("vid"))
       .join(broadcast(spark.table(coarseT)), Seq("cell"))
       .select(col("cell"), qerrMicrosCol(col("u"), col("centroid")).as("q"))
@@ -859,43 +710,29 @@ object Similarity {
       .orderBy("cell")
   }
 
-  /** The two persisted codebooks, loaded as the bounded driver matrices
+  /** The persisted index's two codebooks, as the bounded driver matrices
     * every serve/insert call scores against (nlist·dim and m·ksub·dsub
-    * rows — the broadcast-codebook shape). */
-  private def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
-                            coarseT: String, pqT: String, m: Int, ksub: Int)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val coarse: Array[Array[Double]] = spark.table(coarseT)
-      .orderBy("cell").collect()
-      .map(_.getSeq[Double](1).toArray)
-    val codebooks: Array[Array[Array[Double]]] = {
-      val rows = spark.table(pqT).orderBy("sub", "code").collect()
-      Array.tabulate(m, ksub) { (s, j) =>
-        rows(s * ksub + j).getSeq[Double](2).toArray
-      }
-    }
-    (coarse, codebooks)
-  }
-
-  /** The persisted index's two codebooks with geometry read from the
-    * recorded table properties — the load a maintained micro-batch does
-    * ONCE and hands to both its serve and append halves (the codebooks
-    * are frozen per tag, so one collect serves the whole batch). */
-  private[graft] def loadIndexCodebooks(
-      spark: org.apache.spark.sql.SparkSession, tag: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    * rows — the broadcast-codebook shape), with the geometry read from
+    * the recorded table properties. A maintained micro-batch loads them
+    * ONCE and hands them to both its serve and append halves (the
+    * codebooks are frozen per tag). */
+  private[graft] def loadIndexCodebooks(spark: SparkSession, tag: String): Codebooks = {
     val (codesT, _, coarseT, pqT) = annIndexTables(tag)
-    val m = Dedup.requiredIntProp(spark, codesT, AnnMProp, "loadIndexCodebooks")
-    val ksub = Dedup.requiredIntProp(spark, codesT, AnnKsubProp,
+    val g = Dedup.requiredIntProps(spark, codesT, Seq(AnnMProp, AnnKsubProp),
       "loadIndexCodebooks")
-    loadCodebooks(spark, coarseT, pqT, m, ksub)
+    val coarse = spark.table(coarseT).orderBy("cell").collect()
+      .map(_.getSeq[Double](1).toArray)
+    val pq = spark.table(pqT).orderBy("sub", "code").collect()
+    (coarse, Array.tabulate(g(AnnMProp), g(AnnKsubProp)) { (s, j) =>
+      pq(s * g(AnnKsubProp) + j).getSeq[Double](2).toArray
+    })
   }
 
   /** Build the serving index only when `tag` has no CURRENT tables
     * (corpus-fingerprint staleness check by default, the
     * ensureMinhashIndex contract). Returns the tag. */
   def ensureAnnIndex(emb: => DataFrame, idCol: String, vecCol: String,
-                     tag: String, spark: org.apache.spark.sql.SparkSession,
+                     tag: String, spark: SparkSession,
                      nlist: Int = 16, m: Int = 4, ksub: Int = 8,
                      kmeansIters: Int = 2, seed: Long = 42L,
                      buckets: Int = 32,
@@ -904,76 +741,38 @@ object Similarity {
       emb, idCol, vecCol, verifyFingerprint)(writeAnnIndex(emb, idCol,
         vecCol, tag, nlist, m, ksub, kmeansIters, seed, buckets))
 
-  /** [[annIvfPq]] SERVED from the persisted index: no training, no
-    * corpus re-encode — the query batch reads its vectors from the
-    * bucketed `…_vecs` table, probes its `nprobe` nearest cells against
-    * the loaded coarse codebook (bounded driver collect, the broadcast
-    * discipline), and the probed cells become a PARTITION-PRUNING
-    * filter on the `…_codes` scan: unprobed cells never leave disk.
-    * ADC scoring, overfetch and exact rerank are [[annIvfPq]]'s
-    * verbatim (same decimal sums, same windows); geometry comes FROM
-    * the recorded table properties. Per-query-batch cost is flat in
-    * corpus layout work — the vector-DB serving contract. */
-  def annIvfPqPersisted(spark: org.apache.spark.sql.SparkSession,
-                        tag: String, queryIds: Seq[Long], k: Int,
-                        nprobe: Int = 4, overfetch: Int = 4): DataFrame = {
+  /** [[adc]] over the persisted index for the (vid, v, nrm) query rows
+    * `q`: no training, no corpus re-encode. The probe selection
+    * (|queries|·nprobe rows, [[probeCells]] against the loaded coarse
+    * codebook) is a bounded driver collect — the query batch is the
+    * tiny side by contract — that buys a PARTITION-PRUNING `cell IN (…)`
+    * literal on the `…_codes` scan: unprobed cells never leave disk.
+    * The rerank reads the vid-bucketed `…_vecs` table. */
+  private def serveIndex(q: DataFrame, tag: String, k: Int, nprobe: Int,
+                         overfetch: Int, selfExclude: Boolean,
+                         allowed: Option[DataFrame], books: Codebooks): DataFrame = {
+    val spark = q.sparkSession
     import spark.implicits._
-    val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    val m = Dedup.requiredIntProp(spark, codesT, AnnMProp, "annIvfPqPersisted")
-    val ksub = Dedup.requiredIntProp(spark, codesT, AnnKsubProp, "annIvfPqPersisted")
-    val (coarse, codebooks) = loadCodebooks(spark, coarseT, pqT, m, ksub)
-    val dsub = codebooks(0)(0).length
-    val e = spark.table(vecsT) // (vid, v, nrm)
-    val unitQ = e.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid"), transform(col("v"), x => x / col("nrm")).as("u"))
-    // probe selection: |queries|·nprobe rows — a bounded driver collect
-    // (queryIds is the tiny side by contract) that buys the partition-
-    // pruning literal below
-    val probeRows = unitQ
-      .withColumn("__cs", graft.functions.GraftFunctions.vec_mat_cosines(col("u"), coarse))
-      .select(col("vid").as("query_id"),
-        posexplode(col("__cs")).as(Seq("cellIdx", "sim")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("cellIdx"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), (col("cellIdx") + 1).as("cell"))
-      .as[(Long, Int)].collect().toSeq
-    val probedCells = probeRows.map(_._2).distinct
-    val probes = probeRows.toDF("query_id", "cell")
-    val cbRows = for (s <- 0 until m; j <- 0 until ksub)
-      yield (s, j + 1, codebooks(s)(j).toSeq)
-    val cbDf = cbRows.toDF("sub", "code", "centroid")
-    val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
-        .otherwise(acc)
-    }
-    val lut = unitQ.select(col("vid").as("query_id"), col("u").as("qu"))
-      .crossJoin(cbDf)
-      .select(col("query_id"), col("sub"), col("code"), lutExpr.as("lutv"))
-    // ADC over PROBED PARTITIONS ONLY: the isin literal prunes the scan
-    val approx = spark.table(codesT)
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vid") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("vid"))
-      .agg(sum(col("lutv").cast("decimal(38,18)")).as("approx"))
-    val wA = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("vid"))
-    val cand = approx.withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * overfetch)
-      .select("query_id", "vid")
-    val qFull = e.filter(col("vid").isin(queryIds: _*))
-      .select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wE = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(e, "vid").join(broadcast(qFull), "query_id")
-      .select(col("query_id"), col("vid").as("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
+    val (codesT, vecsT, _, _) = annIndexTables(tag)
+    val probes = probeCells(queryUnits(q), col("qu"), books._1, nprobe)
+      .select("query_id", "cell").as[(Long, Int)].collect().toSeq
+    adc(q, spark.table(vecsT),
+      spark.table(codesT).filter(col("cell").isin(probes.map(_._2).distinct: _*)),
+      books._2, Some(probes.toDF("query_id", "cell")), k, overfetch, selfExclude,
+      allowed)
   }
+
+  /** [[annIvfPq]] SERVED from the persisted index ([[serveIndex]]): the
+    * queries are the `…_vecs` rows of `queryIds`, so self-matches are
+    * excluded; geometry comes FROM the recorded table properties.
+    * Per-query-batch cost is flat in corpus layout work — the vector-DB
+    * serving contract. */
+  def annIvfPqPersisted(spark: SparkSession,
+                        tag: String, queryIds: Seq[Long], k: Int,
+                        nprobe: Int = 4, overfetch: Int = 4): DataFrame =
+    serveIndex(spark.table(annIndexTables(tag)._2).filter(col("vid").isin(queryIds: _*)),
+      tag, k, nprobe, overfetch, selfExclude = true, None,
+      loadIndexCodebooks(spark, tag))
 
   /** QUERY-BY-VECTOR serving (judge r14 ask #2b — the other half of the
     * vector-DB contract: [[annIvfPqPersisted]] only accepts query ids
@@ -981,14 +780,10 @@ object Similarity {
     * NEW vectors). `queries` is a DataFrame of (id, raw vector) rows —
     * a bounded query batch by contract (its cell probes and LUTs are
     * driver-collected/broadcast, the same discipline as the id-keyed
-    * path). The pipeline is [[annIvfPqPersisted]]'s verbatim with the
-    * query relation swapped: probe nprobe nearest cells per query
-    * against the loaded coarse codebook, prune the cell-partitioned
-    * code scan to the probed cells (partition-pruning isin literal),
-    * ADC against the broadcast LUT, overfetch, exact rerank against the
-    * vid-bucketed vecs table. No self-exclusion is applied — the
-    * queries are not corpus rows, and a stored duplicate of a query
-    * vector is exactly what a dedup-flavored serve wants returned.
+    * path), run through the same [[serveIndex]] → [[adc]] pipeline. No
+    * self-exclusion is applied — the queries are not corpus rows, and a
+    * stored duplicate of a query vector is exactly what a dedup-flavored
+    * serve wants returned.
     *
     * FILTERED serving (judge r15 ask #7 — real vector serving carries a
     * metadata predicate, "top-k among docs with lang=en"): `allowed`,
@@ -1006,83 +801,23 @@ object Similarity {
                     tag: String, k: Int,
                     nprobe: Int = 4, overfetch: Int = 4,
                     allowed: Option[DataFrame] = None,
-                    preloaded: Option[(Array[Array[Double]],
-                      Array[Array[Array[Double]]])] = None): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
+                    preloaded: Option[Codebooks] = None): DataFrame = {
     // a multi-column relation passed by mistake would otherwise be
     // silently narrowed to its first column — serving against the wrong
     // id set with no error (advisor r16)
     allowed.foreach(a => require(a.columns.length == 1,
       s"annIvfPqServe: `allowed` must be a ONE-column relation of " +
       s"permitted neighbor ids, got (${a.columns.mkString(", ")})"))
-    val (codesT, vecsT, coarseT, pqT) = annIndexTables(tag)
-    val m = Dedup.requiredIntProp(spark, codesT, AnnMProp, "annIvfPqServe")
-    val ksub = Dedup.requiredIntProp(spark, codesT, AnnKsubProp, "annIvfPqServe")
-    val (coarse, codebooks) =
-      preloaded.getOrElse(loadCodebooks(spark, coarseT, pqT, m, ksub))
-    val dsub = codebooks(0)(0).length
     // bounded batch; frozen so probe/LUT/rerank agree. The freeze happens
     // at the RAW batch (skipped when the caller already froze it — the
     // maintained loop does); the cast/nrm projection above it is
     // deterministic, so re-evaluating it per consumer changes nothing.
-    val q = Dedup.ensureFrozen(queries)
-      .select(col(idCol).cast("long").as("vid"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val unitQ = q.select(col("vid"),
-      transform(col("v"), x => x / col("nrm")).as("u"))
-    val probeRows = unitQ
-      .withColumn("__cs", graft.functions.GraftFunctions.vec_mat_cosines(col("u"), coarse))
-      .select(col("vid").as("query_id"),
-        posexplode(col("__cs")).as(Seq("cellIdx", "sim")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("cellIdx"))))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), (col("cellIdx") + 1).as("cell"))
-      .as[(Long, Int)].collect().toSeq
-    val probedCells = probeRows.map(_._2).distinct
-    val probes = probeRows.toDF("query_id", "cell")
-    val cbRows = for (s <- 0 until m; j <- 0 until ksub)
-      yield (s, j + 1, codebooks(s)(j).toSeq)
-    val cbDf = cbRows.toDF("sub", "code", "centroid")
-    val lutExpr = (0 until m).foldLeft(lit(null).cast("double")) { (acc, s) =>
-      when(col("sub") === s, dot(sub(col("qu"), s, dsub), col("centroid")))
-        .otherwise(acc)
-    }
-    val lut = unitQ.select(col("vid").as("query_id"), col("u").as("qu"))
-      .crossJoin(cbDf)
-      .select(col("query_id"), col("sub"), col("code"), lutExpr.as("lutv"))
-    val approx = spark.table(codesT)
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("vid"))
-      .agg(sum(col("lutv").cast("decimal(38,18)")).as("approx"))
-    // metadata filter BEFORE the overfetch window (see scaladoc): the
-    // k·overfetch candidates handed to the exact rerank are survivors
-    val approxF = allowed match {
-      case Some(a) =>
-        val ids = a.select(col(a.columns.head).cast("long").as("vid"))
-        approx.join(ids, Seq("vid"), "left_semi")
-      case None => approx
-    }
-    val wA = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("vid"))
-    val cand = approxF.withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * overfetch)
-      .select("query_id", "vid")
-    val qFull = q.select(col("vid").as("query_id"), col("v").as("qv"),
-      col("nrm").as("qnrm"))
-    val wE = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(spark.table(vecsT), "vid").join(broadcast(qFull), "query_id")
-      .select(col("query_id"), col("vid").as("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
+    val books = preloaded.getOrElse(loadIndexCodebooks(queries.sparkSession, tag))
+    val q = vectors(Dedup.ensureFrozen(queries)
+      .withColumn(idCol, col(idCol).cast("long")), idCol, vecCol)
+    serveIndex(q, tag, k, nprobe, overfetch, selfExclude = false, allowed, books)
   }
+
 
   /** Per-label centroid vectors in LONG format (label, pos, c) — class
     * prototypes for nearest-centroid classification / domain quality
@@ -1142,7 +877,7 @@ object Similarity {
     val (labelVals, mat) = centroidSnapshot(emb, vecCol, labelCol)
     val labelArr = array(labelVals.map(v => lit(v)).toIndexedSeq: _*)
     emb.select(col(labelCol).as("true_label"),
-        graft.functions.GraftFunctions.vec_mat_cosines(
+        vec_mat_cosines(
           col(vecCol).cast("array<double>"), mat).as("__sims"))
       .withColumn("pred_label", element_at(labelArr,
         expr("array_position(__sims, array_max(__sims))").cast("int")))
@@ -1211,9 +946,7 @@ object Similarity {
              numPlanes: Int = 16, bands: Int = 4): DataFrame = {
     val bits = numPlanes / bands
     val mask = (1L << bits) - 1
-    val e = emb.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v"),
-      srpSignature(col(vecCol).cast("array<double>"), numPlanes).as("sig"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+    val e = vectors(emb, idCol, vecCol).withColumn("sig", srpSignature(col("v"), numPlanes))
     val banded = e.select(col("vid"), col("v"), col("nrm"),
       posexplode(array((0 until bands).map(b =>
         shiftright(col("sig"), b * bits).bitwiseAND(lit(mask))): _*))
@@ -1221,18 +954,9 @@ object Similarity {
     val q = banded.filter(col("vid").isin(queryIds: _*))
       .select(col("vid").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
         col("band"), col("bv"))
-    val cand = banded.join(broadcast(q),
-        Seq("band", "bv"))
+    topK(banded.join(broadcast(q), Seq("band", "bv"))
       .filter(col("vid") =!= col("query_id"))
-      .select(col("query_id"), col("vid").as("neighbor_id"), col("qv"), col("qnrm"),
-        col("v"), col("nrm"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
+      .select("query_id", "vid", "qv", "qnrm", "v", "nrm")
+      .dropDuplicates("query_id", "vid"), k)
   }
 }

@@ -874,11 +874,14 @@ object EventStreams {
       .start()
 
   /** The dedup families' step: freeze the batch's matches against the
-    * pre-append index; admit the rows that matched nothing. */
+    * pre-append index; admit the rows that matched nothing. The matched
+    * ids are bounded by the batch, so they are broadcast: the planner
+    * would otherwise pick a sort-merge join over the two frozen frames
+    * (a shuffle of each side) and AQE would switch it at runtime. */
   private[graft] def dedupStep(dedup: DataFrame => DataFrame, idCol: String)
                               (snap: DataFrame): (DataFrame, DataFrame) = {
     val hits = dedup(snap).localCheckpoint()
-    (hits, snap.join(hits.select("batch_id").distinct(),
+    (hits, snap.join(broadcast(hits.select("batch_id").distinct()),
       snap(idCol) === col("batch_id"), "left_anti"))
   }
 

@@ -127,6 +127,44 @@ class PersistedIndexSpec extends SparkSpec {
     labels.asScala.toSeq.takeWhile(_ != "sentinel")
   }
 
+  /** The number of `MinHashBands` expressions in the executed plan of
+    * every action `body` runs that has one, in order. */
+  private def minhashBandsPerPlan(body: => Unit): Seq[Int] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val helper = new AdaptiveSparkPlanHelper {}
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var sentinel = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val n = helper.collect(qe.executedPlan)(p => p).map(_.expressions
+          .map(_.collect { case m: graft.functions.MinHashBands => m }.size).sum).sum
+        if (n > 0) counts.add(n)
+        if (qe.executedPlan.toString.contains("minhash_sentinel")) sentinel = true
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit("minhash_sentinel").as("s")).collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!sentinel && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    counts.asScala.toSeq
+  }
+
+  test("minhash: an append evaluates each doc's band signature once in " +
+       "every table's write plan") {
+    val f = families.head
+    withIndex(f) { (tag, _) =>
+      val perPlan = minhashBandsPerPlan(f.append(f.extra, tag): Unit)
+      info(s"MinHashBands per write plan: $perPlan")
+      assert(perPlan.size == 2 && perPlan.forall(_ == 1), perPlan)
+    }
+  }
+
   for (f <- families) {
     test(s"${f.name}: while the lease is held, append, remove and compact " +
          "fail fast and leave the index unchanged") {
@@ -211,7 +249,7 @@ class PersistedIndexSpec extends SparkSpec {
         assert(labels.nonEmpty && labels.forall(_.startsWith("maintainedBatch:")), labels)
         assert(!labels.exists(l => Seq(":guard", ":purge", ":commit").exists(l.endsWith)),
           labels)
-        if (f.name == "minhash") assert(labels.size <= 20, labels)
+        if (f.name == "minhash") assert(labels.size <= 12, labels)
         val upkeep = jobLabels {
           f.remove(f.corpus.filter(col(f.idCol) === 1), tag)
           f.compact(tag)

@@ -406,12 +406,26 @@ class SimilaritySpec extends SparkSpec {
     assert(rRes >= 0.35, s"residual ADC recall collapsed: $rRes")
   }
 
-  test("annIvfPqResidual at overfetch = 1 serves exactly the " +
-       "independently replayed residual-ADC top-k (the arithmetic pin: " +
-       "cell assignment, residual codes, LUT + centroid-term " +
-       "composition)") {
+  // The ADC arithmetic pin, one row per coder: at overfetch = 1 the
+  // rerank receives exactly the ADC top-k, so each op must serve the
+  // top-k of an independent spec-side replay of its cell assignment,
+  // codes, LUT and decimal sum (plus the residual centroid term).
+  Seq(
+    "annPq" -> ("annPq at overfetch = 1 serves exactly the independently " +
+      "replayed unit-ADC top-k (the arithmetic pin: codes, LUT " +
+      "composition over every corpus row)"),
+    "annIvfPq" -> ("annIvfPq at overfetch = 1 serves exactly the " +
+      "independently replayed unit-ADC top-k (the arithmetic pin: cell " +
+      "assignment, codes, LUT composition over the probed cells)"),
+    "annIvfPqResidual" -> ("annIvfPqResidual at overfetch = 1 serves exactly the " +
+      "independently replayed residual-ADC top-k (the arithmetic pin: " +
+      "cell assignment, residual codes, LUT + centroid-term " +
+      "composition)")
+  ).foreach { case (coder, title) => test(title) {
     val dim = 8; val m = 4; val dsub = dim / m
     val nlist = 4; val ksub = 4; val nprobe = 2; val k = 5
+    val ivf = coder != "annPq"
+    val residual = coder == "annIvfPqResidual"
     val emb = clusteredCorpus(n = 60, dim = dim, nClusters = 4,
       spread = 0.3)
     val e = emb.select(org.apache.spark.sql.functions.col("vec_id").as("vid"),
@@ -428,8 +442,11 @@ class SimilaritySpec extends SparkSpec {
     def nrm(a: Seq[Double]): Double = math.sqrt(dotf(a, a))
     def vmcos(v: Seq[Double], row: Seq[Double]): Double =
       dotf(v, row) / (nrm(v) * nrm(row))
-    val coarse = Similarity.kmeansCodebook(e, nlist, iters = 2)
-      .map(_.toSeq)
+    // every ADC term enters the op's sum as a decimal(38,18) cast
+    def dec(d: Double): BigDecimal =
+      BigDecimal(d).setScale(18, BigDecimal.RoundingMode.HALF_UP)
+    val coarse = if (ivf) Similarity.kmeansCodebook(e, nlist, iters = 2)
+      .map(_.toSeq).toSeq else Seq.empty[Seq[Double]]
     val rows = emb.collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
     val unit = rows.map { case (vid, v) => (vid, v.map(_ / nrm(v))) }
@@ -437,60 +454,95 @@ class SimilaritySpec extends SparkSpec {
       vals.indexOf(pick(vals)) + 1 // 1-based, first hit — array_position
     val unitCoarse = coarse.map(c => c.map(_ / nrm(c)))
     val cellOf = unit.map { case (vid, u) =>
-      vid -> argFirst(coarse.map(c => vmcos(u, c)), _.max)
+      vid -> (if (ivf) argFirst(coarse.map(c => vmcos(u, c)), _.max) else 0)
     }.toMap
-    val resOf = unit.map { case (vid, u) =>
-      vid -> u.zip(unitCoarse(cellOf(vid) - 1)).map { case (x, c) => x - c }
+    // the coded vector: the unit vector, or its residual from the
+    // unit-projected cell centroid
+    val codedOf = unit.map { case (vid, u) =>
+      vid -> (if (residual)
+        u.zip(unitCoarse(cellOf(vid) - 1)).map { case (x, c) => x - c } else u)
     }.toMap
-    // residual codebooks from the op's own trainer (deterministic), the
-    // CODE ASSIGNMENT replayed independently: Euclidean argmin via
-    // |c|^2 - 2*cos*|r|*|c| exactly as l2DistancesCol composes it
-    import org.apache.spark.sql.functions.{col, broadcast}
+    // PQ codebooks from the op's own trainer (deterministic), the CODE
+    // ASSIGNMENT replayed independently: cosine argmax for unit vectors,
+    // Euclidean argmin via |c|^2 - 2*cos*|r|*|c| for residuals, exactly
+    // as l2DistancesCol composes it
     val spark2 = spark
     import spark2.implicits._
-    val resDf = resOf.toSeq.map { case (vid, r) => (vid, r) }
-      .toDF("vid", "r")
-    val rescbs = Similarity.pqCodebooksResidual(resDf, m, dsub, ksub,
-      iters = 2, seed = 42L).map(_.map(_.toSeq))
-    def codesOf(r: Seq[Double]): Seq[Int] = (0 until m).map { s =>
-      val rs = r.slice(s * dsub, (s + 1) * dsub)
-      val xn = nrm(rs)
-      val d = rescbs(s).map { c =>
-        val cnV = nrm(c)
-        if (xn == 0d) cnV * cnV
-        else cnV * cnV - 2d * (vmcos(rs, c) * cnV * xn)
-      }
-      argFirst(d, _.min)
+    val codedDf = codedOf.toSeq.toDF("vid", "x")
+    val cbs = Similarity.pqCodebooks(codedDf, "x", m, dsub, ksub,
+      iters = 2, seed = 42L, euclid = residual).map(_.map(_.toSeq))
+    def codesOf(x: Seq[Double]): Seq[Int] = (0 until m).map { s =>
+      val xs = x.slice(s * dsub, (s + 1) * dsub)
+      if (residual) {
+        val xn = nrm(xs)
+        argFirst(cbs(s).map { c =>
+          val cnV = nrm(c)
+          if (xn == 0d) cnV * cnV
+          else cnV * cnV - 2d * (vmcos(xs, c) * cnV * xn)
+        }, _.min)
+      } else argFirst(cbs(s).map(c => vmcos(xs, c)), _.max)
     }
     val qids = (0L until 8L).toSeq
     val expected = qids.map { q =>
       val qu = unit.find(_._1 == q).get._2
-      val sims = coarse.map(c => vmcos(qu, c))
-      val probed = sims.zipWithIndex.sortBy { case (s, i) => (-s, i) }
-        .take(nprobe).map { case (s, i) => (i + 1, s) } // cellterm = sim
-      val cells = probed.map(_._1).toSet
+      // probed cell -> its ADC term (the probe cosine for residuals)
+      val probed: Map[Int, Double] =
+        if (!ivf) Map(0 -> 0d)
+        else coarse.map(c => vmcos(qu, c)).zipWithIndex
+          .sortBy { case (s, i) => (-s, i) }.take(nprobe)
+          .map { case (s, i) => (i + 1) -> (if (residual) s else 0d) }.toMap
       val scored = rows.filter { case (vid, _) =>
-        vid != q && cells.contains(cellOf(vid)) }
+        vid != q && probed.contains(cellOf(vid)) }
         .map { case (vid, _) =>
-          val cellterm = probed.find(_._1 == cellOf(vid)).get._2
-          val lutSum = codesOf(resOf(vid)).zipWithIndex.map {
-            case (code, s) => dotf(qu.slice(s * dsub, (s + 1) * dsub),
-              rescbs(s)(code - 1))
-          }.sum
-          (vid, cellterm + lutSum)
+          (vid, dec(probed(cellOf(vid))) + codesOf(codedOf(vid)).zipWithIndex.map {
+            case (code, s) => dec(dotf(qu.slice(s * dsub, (s + 1) * dsub),
+              cbs(s)(code - 1)))
+          }.sum)
         }
       q -> scored.sortBy { case (vid, a) => (-a, vid) }.take(k)
         .map(_._1).toSet
     }.toMap
-    val got = Similarity.annIvfPqResidual(emb, "vec_id", "embedding",
-      qids, k, nlist = nlist, nprobe = nprobe, m = m, ksub = ksub,
-      overfetch = 1)
-      .select("query_id", "neighbor_id").collect()
+    val served = coder match {
+      case "annPq" => Similarity.annPq(emb, "vec_id", "embedding", qids, k,
+        m = m, ksub = ksub, overfetch = 1)
+      case "annIvfPq" => Similarity.annIvfPq(emb, "vec_id", "embedding",
+        qids, k, nlist = nlist, nprobe = nprobe, m = m, ksub = ksub,
+        overfetch = 1)
+      case _ => Similarity.annIvfPqResidual(emb, "vec_id", "embedding",
+        qids, k, nlist = nlist, nprobe = nprobe, m = m, ksub = ksub,
+        overfetch = 1)
+    }
+    val got = served.select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).map { case (q, ns) => q -> ns.map(_._2).toSet }
     qids.foreach { q =>
       assert(got(q) == expected(q),
         s"query $q: op served ${got(q)}, replay says ${expected(q)}")
+    }
+  }}
+
+  test("the PQ entry points reject an empty corpus, a null vector and " +
+       "ragged vectors by name, before any training") {
+    val spark2 = spark
+    import spark2.implicits._
+    def corpus(vs: Option[Seq[Double]]*) =
+      vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
+    val inputs = Seq(
+      "empty" -> (corpus(), "at least one vector"),
+      "null vector" -> (corpus(Some(Seq.fill(8)(1d)), None), "null"),
+      "ragged" -> (corpus(Some(Seq.fill(8)(1d)), Some(Seq.fill(6)(1d))),
+        "one dimension"))
+    val entries = Seq[(String, org.apache.spark.sql.DataFrame => Unit)](
+      "annPq" -> (df => Similarity.annPq(df, "vec_id", "embedding", Seq(0L), 3)),
+      "annIvfPq" -> (df => Similarity.annIvfPq(df, "vec_id", "embedding", Seq(0L), 3)),
+      "annIvfPqResidual" -> (df => Similarity.annIvfPqResidual(df, "vec_id",
+        "embedding", Seq(0L), 3)),
+      "writeAnnIndex" -> (df => Similarity.writeAnnIndex(df, "vec_id",
+        "embedding", "degenerate_input")))
+    for ((what, run) <- entries; (input, (df, why)) <- inputs) {
+      val err = intercept[IllegalArgumentException](run(df))
+      assert(err.getMessage.contains(what) && err.getMessage.contains(why),
+        s"$what on $input: ${err.getMessage}")
     }
   }
 }
