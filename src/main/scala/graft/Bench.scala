@@ -43,13 +43,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // the default 100-entry generated-class cache thrashes when ~67
-    // queries' codegen units cycle through it once per interleaved
-    // pass, re-paying Janino compilation (~0.1-0.2 s/query/pass) that
-    // the consecutive-reps protocol never saw; size it to hold the
-    // whole suite so passes 2+ measure execution, not compilation
-    val spark = GraftSession.local(GraftSession.cpus,
-      "spark.sql.codegen.cache.maxEntries" -> "10000")
+    val spark = GraftSession.local(GraftSession.cpus)
     // Warm-up: JIT/codegen caches + first-touch parquet footers, so the
     // per-query numbers measure the plans rather than JVM startup.
     Seq("q1_agg", "q_text_tokens", "q_events_window", "q_ann_topk")

@@ -34,9 +34,10 @@ object Dedup {
   }
 
   /** Exact-Jaccard verification: attach both docs' full shingle sets to
-    * each candidate pair, compute |∩| / |∪|, keep pairs ≥ tau. Shared by
-    * the MinHash and prefix-filtered n-gram paths so their (oracle-checked)
-    * output schema and semantics cannot drift apart. */
+    * each candidate pair, compute |∩| / |∪|, keep pairs ≥ tau. The
+    * (doc_a, doc_b, jaccard) rows are the schema of [[ngramJaccardPairs]],
+    * so the banded MinHash pairs grade directly against the exact ones
+    * (see [[minhashRecallReport]]). */
   private def verifyJaccard(cand: DataFrame, sh: DataFrame, tau: Double): DataFrame =
     cand
       .join(sh.select(col("doc_id"), col("sh").as("sh_a")), col("doc_a") === col("doc_id"))
@@ -137,8 +138,7 @@ object Dedup {
   def minhashRecallReport(docs: DataFrame, idCol: String, textCol: String,
                           tau: Double, numPerm: Int = 128,
                           bands: Int = 4): DataFrame = {
-    val truth = ngramJaccardPairs(docs, idCol, textCol, w = 3, tau = tau,
-      prefixFilter = false)
+    val truth = ngramJaccardPairs(docs, idCol, textCol, w = 3, tau = tau)
     val caught = minhashPairs(docs, idCol, textCol, tau, numPerm, bands)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("hit"))
     val loBkt = math.floor(tau * 20).toInt
@@ -786,35 +786,88 @@ object Dedup {
       case _ => df.localCheckpoint()
     }
 
-  // -------------------------------------------------------------- SimHash
+  // ------------------------------------------------------ Hamming banding
+
+  /** Pigeonhole Hamming banding — the one chain behind [[simhashPairs]],
+    * [[imageDhashPairs]], [[pcmFingerprintPairs]] and [[videoDhashPairs]].
+    * `sigs` holds an id column `id` and an array<bigint> column `sigs` of
+    * `chunks`·`chunkBits` / 64 words (NULL for an input that cannot be
+    * fingerprinted; such rows never pair). The words split into `chunks`
+    * equal chunks; by pigeonhole any pair within Hamming distance
+    * `maxHamming` < `chunks` shares at least one exact chunk, so the
+    * (chunk, value) equi-join through [[bucketPairs]] has complete recall,
+    * and xor-popcount over the words verifies the true distance — exact
+    * precision. Returns (`outA`, `outB`, hamming), `outA` < `outB`. */
+  private def hammingPairs(sigs: DataFrame, id: String, chunks: Int,
+                           chunkBits: Int, maxHamming: Int, maxBucket: Int,
+                           outA: String, outB: String): DataFrame = {
+    val parts = chunks * chunkBits / 64
+    val words = (0 until parts).map(p => col(s"s$p"))
+    val mask = if (chunkBits == 64) -1L else (1L << chunkBits) - 1
+    val chunkExprs = (0 until chunks).map { k =>
+      shiftright(col(s"s${k * chunkBits / 64}"), k * chunkBits % 64).bitwiseAND(lit(mask))
+    }
+    // the NULL-signature filter sits on the chunk value: a filter on
+    // `sigs` itself is pushed below its alias and evaluates the
+    // fingerprint Expression twice per row
+    val exploded = sigs
+      .select(col(id) +: (0 until parts).map(p =>
+        element_at(col("sigs"), p + 1).as(s"s$p")): _*)
+      .select((col(id) +: words) :+
+        posexplode(array(chunkExprs: _*)).as(Seq("chunk", "cv")): _*)
+      .filter(col("cv").isNotNull)
+    val hamming = (0 until parts).map(p =>
+        bit_count(col(s"__a.s$p").bitwiseXOR(col(s"__b.s$p"))))
+      .reduce(_ + _)
+    bucketPairs(exploded, Seq("chunk", "cv"), struct(col(id) +: words: _*), maxBucket)
+      .filter(col(s"__a.$id") < col(s"__b.$id"))
+      .select(col(s"__a.$id").as(outA), col(s"__b.$id").as(outB),
+        hamming.as("hamming"))
+      .distinct()
+      .filter(col("hamming") <= maxHamming)
+      .orderBy(outA, outB)
+  }
+
+  /** Smallest chunk count (widest chunks — best random-collision
+    * selectivity) that satisfies every pigeonhole-banding constraint
+    * for an `nbits`-wide fingerprint at `maxHamming`: more chunks than
+    * flippable bits, chunks divide the signature evenly, each chunk
+    * fits a 64-bit word, and no chunk straddles two words (the first
+    * power of two above maxHamming alone would reject valid larger
+    * grids: 512 bits at maxHamming 3 would pick 4×128 and throw where
+    * 8×64 is legal). */
+  private def chunkGeometry(nbits: Int, maxHamming: Int): (Int, Int) = {
+    val nChunks = Seq(2, 4, 8, 16, 32, 64)
+      .find(c => c > maxHamming && nbits % c == 0 && nbits / c <= 64 &&
+        64 % (nbits / c) == 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no legal chunk split of $nbits bits for maxHamming=$maxHamming; " +
+        "pass chunks/chunkBits explicitly or widen the fingerprint"))
+    (nChunks, nbits / nChunks)
+  }
 
   /** SimHash near-dup pairs over a `chunks`×`chunkBits`-bit fingerprint
     * (native codegen'd `simhash_wide` Expression — `parts` independent
     * 64-bit simhashes, FNV-1a re-seeded per part; part 0 ≡ the classic
-    * simhash64). The signature splits into `chunks` equal chunks; by
-    * pigeonhole any pair with Hamming distance < chunks shares at least
-    * one exact chunk, so the chunk equi-join has COMPLETE recall whenever
-    * `chunks > maxHamming` (required), and `bit_count` over the parts
-    * verifies the true distance — exact precision.
+    * simhash64), banded by [[hammingPairs]]: the chunk equi-join has
+    * COMPLETE recall whenever `chunks > maxHamming` (required), and
+    * `bit_count` over the parts verifies the true distance — exact
+    * precision. Null text hashes to NULL and cannot pair.
     *
     * Chunk geometry is the scale dial (judge r4 ask #1): random-collision
     * candidates grow as ~chunks·n²/2^chunkBits, so WIDER chunks (a wider
     * signature) buy scale. The r4 fixed 4×16-bit split measured 21× at
-    * the 10× run (1/65536 constant); the default now derives from
-    * maxHamming over a 128-bit fingerprint — maxHamming ≤ 3 → 4×32-bit
-    * chunks (1/2³² constant, effectively linear), ≤ 7 → 8×16, ≤ 15 →
-    * 16×8. Near-miss pairs fall off equally fast: a pair agreeing on a
+    * the 10× run (1/65536 constant); the default is [[chunkGeometry]]
+    * over a 128-bit fingerprint — maxHamming ≤ 3 → 4×32-bit chunks
+    * (1/2³² constant, effectively linear), ≤ 7 → 8×16, ≤ 15 → 16×8.
+    * Near-miss pairs fall off equally fast: a pair agreeing on a
     * fraction p of bits collides on a chunk with probability ~p^chunkBits.
     * The maxBucket cap still bounds the adversarial worst case. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int,
                    chunks: Int = 0, chunkBits: Int = 0,
                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val nChunks =
-      if (chunks > 0) chunks
-      else Seq(2, 4, 8, 16, 32, 64).find(_ > maxHamming).getOrElse(
-        throw new IllegalArgumentException(
-          s"maxHamming=$maxHamming needs > 64 chunks; pass chunks/chunkBits explicitly"))
+    val nChunks = if (chunks > 0) chunks else chunkGeometry(128, maxHamming)._1
     val nBits = if (chunkBits > 0) chunkBits else 128 / nChunks
     require(nChunks > maxHamming,
       s"pigeonhole-complete recall needs chunks > maxHamming " +
@@ -826,100 +879,38 @@ object Dedup {
       s"got $nChunks*$nBits=$totalBits")
     require(64 % nBits == 0,
       s"chunkBits must divide 64 so chunks don't straddle parts, got $nBits")
-    val parts = totalBits / 64
-    val sig = docs.select(col(idCol).as("doc_id"),
-      GraftFunctions.simhash_wide(TextOps.tokens(col(textCol)), parts).as("sigs"))
-      .select(col("doc_id") +: (0 until parts).map(p =>
-        element_at(col("sigs"), p + 1).as(s"s$p")): _*)
-    val mask = if (nBits == 64) -1L else (1L << nBits) - 1
-    val chunkExprs = (0 until nChunks).map { k =>
-      val part = (k * nBits) / 64
-      val off = (k * nBits) % 64
-      shiftright(col(s"s$part"), off).bitwiseAND(lit(mask))
-    }
-    val exploded = sig.select(col("doc_id") +: (0 until parts).map(p => col(s"s$p")) :+
-      posexplode(array(chunkExprs: _*)).as(Seq("chunk", "cv")): _*)
-    val payload = struct(col("doc_id") +: (0 until parts).map(p => col(s"s$p")): _*)
-    val hamming = (0 until parts).map(p =>
-        bit_count(col(s"__a.s$p").bitwiseXOR(col(s"__b.s$p"))))
-      .reduce(_ + _)
-    bucketPairs(exploded, Seq("chunk", "cv"), payload, maxBucket)
-      .filter(col("__a.doc_id") < col("__b.doc_id"))
-      .select(col("__a.doc_id").as("doc_a"), col("__b.doc_id").as("doc_b"),
-        hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("doc_a", "doc_b")
+    hammingPairs(docs.select(col(idCol).as("doc_id"),
+        GraftFunctions.simhash_wide(TextOps.tokens(col(textCol)), totalBits / 64).as("sigs")),
+      "doc_id", nChunks, nBits, maxHamming, maxBucket, "doc_a", "doc_b")
   }
 
   /** Pixel-level image near-dup pairs (judge r13 ask #4): the 128-bit
     * perceptual dHash (native codegen `image_dhash` — real byte
     * arithmetic over a 24-bit BMP's pixel grid, integer BT.601 luma,
     * 17×8 box pooling, horizontal gradient signs) fed through the
-    * [[simhashPairs]] Hamming-banding machinery: the hash splits into
-    * pigeonhole-complete chunks (chunks > maxHamming ⇒ any qualifying
-    * pair shares an exact chunk — recall provably 1), candidates come
-    * from the chunk EQUI-join (never all-pairs), the same maxBucket
-    * hot-bucket cap bounds degenerate exact-dup classes, and
-    * xor-popcount over the words verifies the true distance — exact
-    * precision. With the default maxHamming 3 the geometry is 4×32-bit
-    * chunks: random chunk collisions carry a 1/2³² constant (the
-    * simhash_wide r5 scale fix), where the classic 64-bit dHash would
-    * pay 1/2¹⁶ and turn quadratic at corpus scale.
+    * [[hammingPairs]] banding: pigeonhole-complete chunks (chunks >
+    * maxHamming ⇒ any qualifying pair shares an exact chunk — recall
+    * provably 1), candidates from the chunk EQUI-join (never all-pairs),
+    * the maxBucket hot-bucket cap bounds degenerate exact-dup classes,
+    * and xor-popcount verifies — exact precision. With the default
+    * maxHamming 3 the geometry is 4×32-bit chunks: random chunk
+    * collisions carry a 1/2³² constant (the simhash_wide r5 scale fix),
+    * where the classic 64-bit dHash would pay 1/2¹⁶ and turn quadratic
+    * at corpus scale.
     *
     * Undecodable payloads (truncated / foreign container) hash to NULL
     * and cannot pair — dedup never throws on a dirty crawl. Returns
     * (img_a, img_b, hamming), img_a < img_b. */
-  /** Smallest chunk count (widest chunks — best random-collision
-    * selectivity) that satisfies every pigeonhole-banding constraint
-    * for an `nbits`-wide fingerprint at `maxHamming`: more chunks than
-    * flippable bits, chunks divide the signature evenly, each chunk
-    * fits a 64-bit word, and no chunk straddles two words (advisor r15:
-    * the old first-power-of-two-above-maxHamming pick rejected valid
-    * larger grids, e.g. 512 bits at maxHamming 3 chose 4×128 and threw
-    * where 8×64 is legal). */
-  private def chunkGeometry(nbits: Int, maxHamming: Int): (Int, Int) = {
-    val nChunks = Seq(2, 4, 8, 16, 32, 64)
-      .find(c => c > maxHamming && nbits % c == 0 && nbits / c <= 64 &&
-        64 % (nbits / c) == 0)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no legal chunk split of $nbits bits for maxHamming=$maxHamming; " +
-        "pass chunks/chunkBits explicitly or widen the fingerprint"))
-    (nChunks, nbits / nChunks)
-  }
-
   def imageDhashPairs(imgs: DataFrame, idCol: String, payloadCol: String,
                       maxHamming: Int, gcols: Int = 17, grows: Int = 8,
                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val nbits = (gcols - 1) * grows
     require(nbits % 64 == 0,
       s"dhash grid must pack whole 64-bit words, got $nbits bits")
-    val parts = nbits / 64
     val (nChunks, nBits) = chunkGeometry(nbits, maxHamming)
-    val sig = imgs.select(col(idCol).as("img_id"),
-        GraftFunctions.image_dhash(col(payloadCol), gcols, grows).as("sigs"))
-      .filter(col("sigs").isNotNull)
-      .select(col("img_id") +: (0 until parts).map(p =>
-        element_at(col("sigs"), p + 1).as(s"s$p")): _*)
-    val mask = if (nBits == 64) -1L else (1L << nBits) - 1
-    val chunkExprs = (0 until nChunks).map { k =>
-      val part = (k * nBits) / 64
-      val off = (k * nBits) % 64
-      shiftright(col(s"s$part"), off).bitwiseAND(lit(mask))
-    }
-    val exploded = sig.select(col("img_id") +: (0 until parts).map(p => col(s"s$p")) :+
-      posexplode(array(chunkExprs: _*)).as(Seq("chunk", "cv")): _*)
-    val payload = struct(col("img_id") +: (0 until parts).map(p => col(s"s$p")): _*)
-    val hamming = (0 until parts).map(p =>
-        bit_count(col(s"__a.s$p").bitwiseXOR(col(s"__b.s$p"))))
-      .reduce(_ + _)
-    bucketPairs(exploded, Seq("chunk", "cv"), payload, maxBucket)
-      .filter(col("__a.img_id") < col("__b.img_id"))
-      .select(col("__a.img_id").as("img_a"), col("__b.img_id").as("img_b"),
-        hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("img_a", "img_b")
+    hammingPairs(imgs.select(col(idCol).as("img_id"),
+        GraftFunctions.image_dhash(col(payloadCol), gcols, grows).as("sigs")),
+      "img_id", nChunks, nBits, maxHamming, maxBucket, "img_a", "img_b")
   }
 
   /** Audio CONTENT near-dup pairs (judge r14 ask #6 — the
@@ -927,47 +918,22 @@ object Dedup {
     * fingerprint (native codegen `pcm_fingerprint` — real sample
     * arithmetic over a mono 16-bit RIFF payload: disjoint-pair integer
     * differences pooled into a 17×8 (time-window × phase) energy grid,
-    * gradient signs along time) fed through the same pigeonhole
-    * Hamming-banding machinery: chunks > maxHamming ⇒ recall provably
-    * 1, candidates from the chunk EQUI-join, the maxBucket cap bounds
-    * degenerate exact-dup classes, xor-popcount verifies — exact
-    * precision. GAIN invariance is structural (a global gain scales
-    * every pooled energy by the same integer factor, preserving every
-    * sign), the audio twin of the brightness-shift property.
-    * Undecodable payloads hash to NULL and cannot pair. Returns
-    * (audio_a, audio_b, hamming), audio_a < audio_b. */
+    * gradient signs along time) fed through the same [[hammingPairs]]
+    * banding: recall provably 1, exact precision. GAIN invariance is
+    * structural (a global gain scales every pooled energy by the same
+    * integer factor, preserving every sign), the audio twin of the
+    * brightness-shift property. Undecodable payloads hash to NULL and
+    * cannot pair. Returns (audio_a, audio_b, hamming), audio_a < audio_b. */
   def pcmFingerprintPairs(auds: DataFrame, idCol: String, payloadCol: String,
                           maxHamming: Int, wins: Int = 17, phases: Int = 8,
                           maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val nbits = (wins - 1) * phases
     require(nbits % 64 == 0,
       s"fingerprint grid must pack whole 64-bit words, got $nbits bits")
-    val parts = nbits / 64
     val (nChunks, nBits) = chunkGeometry(nbits, maxHamming)
-    val sig = auds.select(col(idCol).as("audio_id"),
-        GraftFunctions.pcm_fingerprint(col(payloadCol), wins, phases).as("sigs"))
-      .filter(col("sigs").isNotNull)
-      .select(col("audio_id") +: (0 until parts).map(p =>
-        element_at(col("sigs"), p + 1).as(s"s$p")): _*)
-    val mask = if (nBits == 64) -1L else (1L << nBits) - 1
-    val chunkExprs = (0 until nChunks).map { k =>
-      val part = (k * nBits) / 64
-      val off = (k * nBits) % 64
-      shiftright(col(s"s$part"), off).bitwiseAND(lit(mask))
-    }
-    val exploded = sig.select(col("audio_id") +: (0 until parts).map(p => col(s"s$p")) :+
-      posexplode(array(chunkExprs: _*)).as(Seq("chunk", "cv")): _*)
-    val payload = struct(col("audio_id") +: (0 until parts).map(p => col(s"s$p")): _*)
-    val hamming = (0 until parts).map(p =>
-        bit_count(col(s"__a.s$p").bitwiseXOR(col(s"__b.s$p"))))
-      .reduce(_ + _)
-    bucketPairs(exploded, Seq("chunk", "cv"), payload, maxBucket)
-      .filter(col("__a.audio_id") < col("__b.audio_id"))
-      .select(col("__a.audio_id").as("audio_a"), col("__b.audio_id").as("audio_b"),
-        hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("audio_a", "audio_b")
+    hammingPairs(auds.select(col(idCol).as("audio_id"),
+        GraftFunctions.pcm_fingerprint(col(payloadCol), wins, phases).as("sigs")),
+      "audio_id", nChunks, nBits, maxHamming, maxBucket, "audio_a", "audio_b")
   }
 
   /** Video CONTENT near-dup pairs (judge r15 ask #6 — the last rung of
@@ -976,14 +942,11 @@ object Dedup {
     * the `frames` embedded frames with the REAL pixel dHash, and
     * concatenates them into a frames·128-bit signature (order-sensitive
     * and bump-local — see the Expression's scaladoc), which feeds the
-    * SAME pigeonhole Hamming-banding machinery as the image/audio
-    * families: chunks > maxHamming ⇒ recall provably 1, candidates from
-    * the chunk EQUI-join, maxBucket bounds degenerate exact-dup
-    * classes, xor-popcount verifies — exact precision. Whole-video
-    * brightness re-encode is invariant (per-frame dHash property); a
-    * one-frame corruption flips ≤ 2 bits of one segment. Undecodable
-    * payloads hash to NULL and cannot pair. Returns
-    * (video_a, video_b, hamming), video_a < video_b. */
+    * SAME [[hammingPairs]] banding as the image/audio families: recall
+    * provably 1, exact precision. Whole-video brightness re-encode is
+    * invariant (per-frame dHash property); a one-frame corruption flips
+    * ≤ 2 bits of one segment. Undecodable payloads hash to NULL and
+    * cannot pair. Returns (video_a, video_b, hamming), video_a < video_b. */
   def videoDhashPairs(vids: DataFrame, idCol: String, payloadCol: String,
                       maxHamming: Int, frames: Int = 4,
                       gcols: Int = 17, grows: Int = 8,
@@ -991,96 +954,55 @@ object Dedup {
     val nbits = frames * (gcols - 1) * grows
     require(nbits % 64 == 0,
       s"fingerprint must pack whole 64-bit words, got $nbits bits")
-    val parts = nbits / 64
     val (nChunks, nBits) = chunkGeometry(nbits, maxHamming)
-    val sig = vids.select(col(idCol).as("video_id"),
-        GraftFunctions.video_dhash(col(payloadCol), frames, gcols, grows)
-          .as("sigs"))
-      .filter(col("sigs").isNotNull)
-      .select(col("video_id") +: (0 until parts).map(p =>
-        element_at(col("sigs"), p + 1).as(s"s$p")): _*)
-    val mask = if (nBits == 64) -1L else (1L << nBits) - 1
-    val chunkExprs = (0 until nChunks).map { k =>
-      val part = (k * nBits) / 64
-      val off = (k * nBits) % 64
-      shiftright(col(s"s$part"), off).bitwiseAND(lit(mask))
-    }
-    val exploded = sig.select(col("video_id") +: (0 until parts).map(p => col(s"s$p")) :+
-      posexplode(array(chunkExprs: _*)).as(Seq("chunk", "cv")): _*)
-    val payload = struct(col("video_id") +: (0 until parts).map(p => col(s"s$p")): _*)
-    val hamming = (0 until parts).map(p =>
-        bit_count(col(s"__a.s$p").bitwiseXOR(col(s"__b.s$p"))))
-      .reduce(_ + _)
-    bucketPairs(exploded, Seq("chunk", "cv"), payload, maxBucket)
-      .filter(col("__a.video_id") < col("__b.video_id"))
-      .select(col("__a.video_id").as("video_a"), col("__b.video_id").as("video_b"),
-        hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("video_a", "video_b")
+    hammingPairs(vids.select(col(idCol).as("video_id"),
+        GraftFunctions.video_dhash(col(payloadCol), frames, gcols, grows).as("sigs")),
+      "video_id", nChunks, nBits, maxHamming, maxBucket, "video_a", "video_b")
   }
 
   // ------------------------------------------------------- n-gram Jaccard
 
-  /** Exact n-gram Jaccard pairs via a prefix-filtered inverted-index join
-    * (PPJoin-style; Xiao et al. 2008, "Efficient similarity joins for
-    * near duplicate detection").
-    *
-    * Candidate generation indexes only each doc's PREFIX — its
-    * `n - ceil(tau*n) + 1` globally-rarest shingles (global frequency
-    * order): two sets with Jaccard ≥ tau must overlap within both
-    * prefixes, so the filter is complete. Verification then computes
-    * exact Jaccard from the full shingle sets.
-    *
-    * At web-corpus scale (Zipfian shingle frequencies) this is the
-    * load-bearing choice: a plain shared-shingle index generates a
-    * candidate pair-row for every co-occurrence of every common shingle
-    * (quadratic in the hottest posting list), while the prefix index
-    * bounds posting lists to rare shingles.
-    *
-    * `prefixFilter = false` selects the plain count-based index instead:
-    * cheaper when the shingle space is small/uniform so no posting list
-    * is pathologically hot (e.g. narrow-vocabulary corpora, where the
-    * prefix is barely selective and its extra freq/rank stages dominate).
-    * Both strategies are exact and return identical pairs. */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        w: Int, tau: Double,
-                        prefixFilter: Boolean = true): DataFrame = {
+  /** Shared-key pair counts: `inv` holds one (doc_id, `key`) row per
+    * distinct key of a doc; every id-ordered pair of docs that shares a
+    * key bucket is counted once per shared key → (doc_a, doc_b, shared).
+    * The exact inverted-index join behind [[ngramJaccardPairs]],
+    * [[containmentPairs]] and both stages of [[sharedSpanPairs]]. */
+  private def pairCounts(inv: DataFrame, key: String,
+                         maxBucket: Int = DefaultMaxBucket): DataFrame =
+    bucketPairs(inv, Seq(key), col("doc_id"), maxBucket)
+      .filter(col("__a") < col("__b"))
+      .groupBy(col("__a").as("doc_a"), col("__b").as("doc_b"))
+      .agg(count(lit(1)).as("shared"))
+
+  /** (doc_a, doc_b, shared, na, nb): every id-ordered pair of docs that
+    * shares a `w`-shingle, with its shared-shingle count and both docs'
+    * shingle-set sizes — the one pair count that [[ngramJaccardPairs]] and
+    * [[containmentPairs]] score. */
+  private def shingleOverlaps(docs: DataFrame, idCol: String, textCol: String,
+                              w: Int, maxBucket: Int): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
       GraftFunctions.word_shingles(col(textCol), w).as("sh"))
-    val inv = sh.select(col("doc_id"), size(col("sh")).as("n"),
-      explode(col("sh")).as("s"))
-    if (prefixFilter) {
-      val freq = inv.groupBy("s").agg(count(lit(1)).as("f"))
-      val ranked = inv.join(freq, "s")
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("doc_id").orderBy(col("f"), col("s"))))
-      // exact-decimal ceil: double tau*n can land epsilon above the true
-      // product (0.07*100 = 7.000000000000001 → ceil 8), shortening the
-      // prefix below the completeness bound; decimal arithmetic is exact
-      val tauDec = lit(new java.math.BigDecimal(tau.toString))
-      val prefix = ranked.filter(col("rk") <= col("n") - ceil(tauDec * col("n")) + 1)
-      val cand = bucketPairs(prefix.select(col("doc_id"), col("s")), Seq("s"), col("doc_id"))
-        .filter(col("__a") < col("__b"))
-        .select(col("__a").as("doc_a"), col("__b").as("doc_b"))
-        .distinct()
-      verifyJaccard(cand, sh, tau)
-    } else {
-      val sizes = sh.select(col("doc_id"), size(col("sh")).as("n"))
-      bucketPairs(inv.select(col("doc_id"), col("s")), Seq("s"), col("doc_id"))
-        .filter(col("__a") < col("__b"))
-        .groupBy(col("__a").as("doc_a"), col("__b").as("doc_b"))
-        .agg(count(lit(1)).as("shared"))
-        .join(sizes.select(col("doc_id"), col("n").as("na")), col("doc_a") === col("doc_id"))
-        .drop("doc_id")
-        .join(sizes.select(col("doc_id"), col("n").as("nb")), col("doc_b") === col("doc_id"))
-        .drop("doc_id")
-        .withColumn("jaccard", col("shared") / (col("na") + col("nb") - col("shared")))
-        .filter(col("jaccard") >= tau)
-        .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
-    }
+    def sizes(n: String) = sh.select(col("doc_id"), size(col("sh")).as(n))
+    pairCounts(sh.select(col("doc_id"), explode(col("sh")).as("s")), "s", maxBucket)
+      .join(sizes("na"), col("doc_a") === col("doc_id")).drop("doc_id")
+      .join(sizes("nb"), col("doc_b") === col("doc_id")).drop("doc_id")
   }
+
+  /** Exact n-gram Jaccard pairs via a shared-shingle inverted-index join:
+    * every pair of docs sharing a `w`-shingle is counted once per shared
+    * shingle, and Jaccard = shared / (na + nb − shared) from the two
+    * shingle-set sizes — exact and complete for tau > 0 (a pair with no
+    * shared shingle has Jaccard 0) while no shingle is shared by more
+    * than [[DefaultMaxBucket]] docs: the [[bucketPairs]] cap bounds a
+    * pathological posting list, and a doc past it loses that shingle's
+    * count. Deterministic long/long double division ⇒ hard oracle. */
+  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
+                        w: Int, tau: Double): DataFrame =
+    shingleOverlaps(docs, idCol, textCol, w, DefaultMaxBucket)
+      .withColumn("jaccard", col("shared") / (col("na") + col("nb") - col("shared")))
+      .filter(col("jaccard") >= tau)
+      .select("doc_a", "doc_b", "jaccard")
+      .orderBy("doc_a", "doc_b")
 
   /** Directional CONTAINMENT pairs — quote/subset detection: a doc
     * whose shingle set is mostly inside another's (|A∩B| / |A| ≥ tau)
@@ -1088,25 +1010,14 @@ object Dedup {
     * because the container is much longer (the case every symmetric
     * near-dup pass structurally misses; Broder 1997 defines both
     * resemblance AND this containment measure). Same exact
-    * inverted-index machinery as the count-based [[ngramJaccardPairs]]
-    * path — ONE pair count, both directions scored from it — with the
-    * same hot-shingle cap; emits (contained, container, containment).
+    * inverted-index pair count as [[ngramJaccardPairs]] — ONE pair
+    * count, both directions scored from it — with the same hot-shingle
+    * cap; emits (contained, container, containment).
     * Deterministic long/long double division ⇒ hard oracle. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        w: Int, tau: Double,
-                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      GraftFunctions.word_shingles(col(textCol), w).as("sh"))
-    val inv = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-    val sizes = sh.select(col("doc_id"), size(col("sh")).as("n"))
-    bucketPairs(inv, Seq("s"), col("doc_id"), maxBucket)
-      .filter(col("__a") < col("__b"))
-      .groupBy(col("__a").as("doc_a"), col("__b").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.select(col("doc_id"), col("n").as("na")),
-        col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(sizes.select(col("doc_id"), col("n").as("nb")),
-        col("doc_b") === col("doc_id")).drop("doc_id")
+                       maxBucket: Int = DefaultMaxBucket): DataFrame =
+    shingleOverlaps(docs, idCol, textCol, w, maxBucket)
       .select(explode(array(
         struct(col("doc_a").as("contained"), col("doc_b").as("container"),
           (col("shared") / col("na")).as("containment")),
@@ -1117,7 +1028,6 @@ object Dedup {
         col("e.containment").as("containment"))
       .filter(col("containment") >= tau)
       .orderBy("contained", "container")
-  }
 
   /** Exact shared-span pairs — substring-level duplication (Lee et al.
     * 2021, "Deduplicating Training Data Makes Language Models Better",
@@ -1162,12 +1072,8 @@ object Dedup {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
       .select("h")
-    val cand = bucketPairs(inv.select("doc_id", "h").join(kept, "h"),
-        Seq("h"), col("doc_id"))
-      .filter(col("__a") < col("__b"))
-      .groupBy(col("__a").as("doc_a"), col("__b").as("doc_b"))
-      .agg(count(lit(1)).as("n_spans"))
-      .filter(col("n_spans") >= minShared)
+    val cand = pairCounts(inv.select("doc_id", "h").join(kept, "h"), "h")
+      .filter(col("shared") >= minShared)
       .select("doc_a", "doc_b")
     // exact verify: span strings for candidate-pair docs only, same
     // df-kept classes; any exact pair is a hash candidate (superset), so
@@ -1182,11 +1088,9 @@ object Dedup {
         explode(GraftFunctions.word_shingles(col(textCol), w)).as("s"))
       .withColumn("h", xxhash64(col("s")))
       .join(kept, "h")
-    bucketPairs(invC.select(col("doc_id"), col("s")), Seq("s"), col("doc_id"))
-      .filter(col("__a") < col("__b"))
-      .groupBy(col("__a").as("doc_a"), col("__b").as("doc_b"))
-      .agg(count(lit(1)).as("n_spans"))
-      .filter(col("n_spans") >= minShared)
+    pairCounts(invC, "s")
+      .filter(col("shared") >= minShared)
+      .select(col("doc_a"), col("doc_b"), col("shared").as("n_spans"))
       .orderBy("doc_a", "doc_b")
   }
 

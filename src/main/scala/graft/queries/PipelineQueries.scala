@@ -56,6 +56,31 @@ object PipelineQueries {
     e.unionByName(planted)
   }
 
+  /** The exact tau-0.5 3-shingle Jaccard pairs of the documents (null
+    * text as '') — q_dedup_ngram and the pair graph the q_dedup_clusters
+    * family clusters. */
+  private def exactPairs(s: SparkSession, d: String): DataFrame =
+    Dedup.ngramJaccardPairs(
+      Tables.documents(s, d).withColumn("text", coalesce(col("text"), lit(""))),
+      "doc_id", "text", w = 3, tau = 0.5)
+
+  /** The planted media corpus of q_dedup_image, _audio and _video: every
+    * doc id as a source (`id` = doc_id, knob 0, bump 0) plus three copy
+    * classes — exact (every 5th, id + 400000), `knob` = `value` (every
+    * 7th, id + 500000) and one bumped cell (every 9th, id + 600000,
+    * bump 40). Columns (`id`, src, `knob`, bump). */
+  private def plantedCopies(s: SparkSession, d: String, id: String,
+                            knob: String, value: Long): DataFrame = {
+    val ids = Tables.documents(s, d).select(col("doc_id"))
+    def variant(pred: org.apache.spark.sql.Column, off: Long, k: Long, bump: Long) =
+      ids.filter(pred).select((col("doc_id") + off).as(id),
+        col("doc_id").as("src"), lit(k).as(knob), lit(bump).as("bump"))
+    variant(lit(true), 0L, 0L, 0L)
+      .unionByName(variant(col("doc_id") % 5 === 0, 400000L, 0L, 0L))
+      .unionByName(variant(col("doc_id") % 7 === 0, 500000L, value, 0L))
+      .unionByName(variant(col("doc_id") % 9 === 0, 600000L, 0L, 40L))
+  }
+
   /** DuckDB: the same planted corpus as a CTE named `e` (vec_id, v). */
   private def plantedCorpusSql: String = {
     val vals = AnnScales.zipWithIndex
@@ -581,20 +606,11 @@ object PipelineQueries {
     // pairs come from pigeonhole-complete 4x32-bit Hamming banding at
     // maxHamming 3 — recall provably 1, precision exact, and the
     // DuckDB oracle reproduces every hash from the pixel formula alone.
-    "q_dedup_image" -> ((s, d) => {
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-      def variant(pred: org.apache.spark.sql.Column, off: Long,
-                  shift: Long, bump: Long) =
-        ids.filter(pred).select((col("doc_id") + off).as("img_id"),
-          col("doc_id").as("src"), lit(shift).as("shift"), lit(bump).as("bump"))
-      val imgs = variant(lit(true), 0L, 0L, 0L)
-        .unionByName(variant(col("doc_id") % 5 === 0, 400000L, 0L, 0L))
-        .unionByName(variant(col("doc_id") % 7 === 0, 500000L, 16L, 0L))
-        .unionByName(variant(col("doc_id") % 9 === 0, 600000L, 0L, 40L))
+    "q_dedup_image" -> ((s, d) =>
       Dedup.imageDhashPairs(
-        Multimodal.syntheticBmps(imgs, "img_id", "src", "shift", "bump"),
-        "img_id", "payload", maxHamming = 3)
-    }),
+        Multimodal.syntheticBmps(plantedCopies(s, d, "img_id", "shift", 16L),
+          "img_id", "src", "shift", "bump"),
+        "img_id", "payload", maxHamming = 3)),
 
     // AUDIO-content near-dup (judge r14 ask #6 — the q_dedup_image
     // discipline applied to WAV): deterministic mono 16-bit PCM
@@ -609,20 +625,11 @@ object PipelineQueries {
     // 4x32-bit Hamming banding at maxHamming 3 — recall provably 1,
     // precision exact, and the DuckDB oracle reproduces every
     // fingerprint from the sample formula alone.
-    "q_dedup_audio" -> ((s, d) => {
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-      def variant(pred: org.apache.spark.sql.Column, off: Long,
-                  gain: Long, bump: Long) =
-        ids.filter(pred).select((col("doc_id") + off).as("aud_id"),
-          col("doc_id").as("src"), lit(gain).as("gain"), lit(bump).as("bump"))
-      val auds = variant(lit(true), 0L, 0L, 0L)
-        .unionByName(variant(col("doc_id") % 5 === 0, 400000L, 0L, 0L))
-        .unionByName(variant(col("doc_id") % 7 === 0, 500000L, 2L, 0L))
-        .unionByName(variant(col("doc_id") % 9 === 0, 600000L, 0L, 40L))
+    "q_dedup_audio" -> ((s, d) =>
       Dedup.pcmFingerprintPairs(
-        Multimodal.syntheticWavs(auds, "aud_id", "src", "gain", "bump"),
-        "aud_id", "payload", maxHamming = 3)
-    }),
+        Multimodal.syntheticWavs(plantedCopies(s, d, "aud_id", "gain", 2L),
+          "aud_id", "src", "gain", "bump"),
+        "aud_id", "payload", maxHamming = 3)),
 
     // VIDEO-content near-dup (judge r15 ask #6 — the ladder's last
     // rung): deterministic MP4-flavored containers whose mdat holds 4
@@ -637,28 +644,13 @@ object PipelineQueries {
     // from pigeonhole-complete 8x64-bit Hamming banding at maxHamming 3
     // — recall provably 1, precision exact, and the DuckDB oracle
     // reproduces all 512 bits from the (s·4+f) pixel formula alone.
-    "q_dedup_video" -> ((s, d) => {
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-      def variant(pred: org.apache.spark.sql.Column, off: Long,
-                  shift: Long, bump: Long) =
-        ids.filter(pred).select((col("doc_id") + off).as("vid_id"),
-          col("doc_id").as("src"), lit(shift).as("shift"), lit(bump).as("bump"))
-      val vids = variant(lit(true), 0L, 0L, 0L)
-        .unionByName(variant(col("doc_id") % 5 === 0, 400000L, 0L, 0L))
-        .unionByName(variant(col("doc_id") % 7 === 0, 500000L, 16L, 0L))
-        .unionByName(variant(col("doc_id") % 9 === 0, 600000L, 0L, 40L))
+    "q_dedup_video" -> ((s, d) =>
       Dedup.videoDhashPairs(
-        Multimodal.syntheticVideos(vids, "vid_id", "src", "shift", "bump"),
-        "vid_id", "payload", maxHamming = 3)
-    }),
+        Multimodal.syntheticVideos(plantedCopies(s, d, "vid_id", "shift", 16L),
+          "vid_id", "src", "shift", "bump"),
+        "vid_id", "payload", maxHamming = 3)),
 
-    // prefixFilter=false: the synthetic 40-token vocabulary makes every
-    // shingle hot, so the PPJoin prefix index barely prunes here; real
-    // (Zipfian) corpora want the default prefix path.
-    "q_dedup_ngram" -> ((s, d) =>
-      Dedup.ngramJaccardPairs(
-        Tables.documents(s, d).withColumn("text", coalesce(col("text"), lit(""))),
-        "doc_id", "text", w = 3, tau = 0.5, prefixFilter = false)),
+    "q_dedup_ngram" -> ((s, d) => exactPairs(s, d)),
 
     // the dedup capstone: connected components over the exact tau-0.5
     // near-dup pair graph — "keep one doc per duplicate CLUSTER" needs
@@ -666,32 +658,19 @@ object PipelineQueries {
     // (deterministic fixpoint), DuckDB oracle = recursive CTE over the
     // same exact pair SQL
     "q_dedup_clusters" -> ((s, d) =>
-      Dedup.clusters(
-        Dedup.ngramJaccardPairs(
-          Tables.documents(s, d).withColumn("text", coalesce(col("text"), lit(""))),
-          "doc_id", "text", w = 3, tau = 0.5, prefixFilter = false),
-        "doc_a", "doc_b").orderBy("doc_id")),
+      Dedup.clusters(exactPairs(s, d), "doc_a", "doc_b").orderBy("doc_id")),
 
     // the SAME clustering computed by alternating large-star/small-star
     // edge rewrites (Kiveris 2014) — the hub-balanced O(log² n)-round CC
     // whose per-edge rewriting has no pointer-jump self-join; identical
     // deterministic min-labels, so it shares the recursive-CTE oracle
     "q_dedup_clusters_ls" -> ((s, d) =>
-      Dedup.clustersLargeStar(
-        Dedup.ngramJaccardPairs(
-          Tables.documents(s, d).withColumn("text", coalesce(col("text"), lit(""))),
-          "doc_id", "text", w = 3, tau = 0.5, prefixFilter = false),
-        "doc_a", "doc_b").orderBy("doc_id")),
+      Dedup.clustersLargeStar(exactPairs(s, d), "doc_a", "doc_b").orderBy("doc_id")),
 
     // the dedup summary a pipeline publishes: cluster-size histogram
     // over the same clustering as q_dedup_clusters
     "q_dedup_report" -> ((s, d) =>
-      Dedup.clusterSizeReport(
-        Dedup.clusters(
-          Dedup.ngramJaccardPairs(
-            Tables.documents(s, d).withColumn("text", coalesce(col("text"), lit(""))),
-            "doc_id", "text", w = 3, tau = 0.5, prefixFilter = false),
-          "doc_a", "doc_b"))),
+      Dedup.clusterSizeReport(Dedup.clusters(exactPairs(s, d), "doc_a", "doc_b"))),
 
     // directional containment (Broder's second measure): every 13th doc
     // gets a planted half-length excerpt (id + 20000) whose shingles are

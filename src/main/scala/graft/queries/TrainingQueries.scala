@@ -169,8 +169,7 @@ object TrainingQueries {
       val docs = Tables.documents(s, d)
         .withColumn("text", coalesce(col("text"), lit("")))
       val labels = Dedup.clusters(
-        Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-          w = 3, tau = 0.5, prefixFilter = false),
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text", w = 3, tau = 0.5),
         "doc_a", "doc_b")
       val quality = docs.select(col("doc_id").as("qid"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))

@@ -113,9 +113,11 @@ class ImageDhashSpec extends SparkSpec {
        "at maxHamming 3, never a cartesian plan") {
     val rows = (1L to 60L).map(i => (i, i, 0L, 0L)) ++
       Seq((101L, 7L, 12L, 0L), (102L, 7L, 0L, 40L), (103L, 20L, 30L, 0L))
-    val imgs = bmps(rows)
+    // one undecodable payload hashes to NULL and must never pair
+    val imgs = bmps(rows).union(Seq((999L, "notbmp".getBytes)).toDF("img_id", "payload"))
     val got = Dedup.imageDhashPairs(imgs, "img_id", "payload", maxHamming = 3)
       .as[(Long, Long, Int)].collect().toSet
+    assert(!got.exists(p => p._1 == 999L || p._2 == 999L), s"undecodable paired: $got")
     val hs = rows.map { case (id, s, sh, bp) => id -> referenceHash(s, sh, bp) }
     val want = (for {
       (a, ha) <- hs; (b, hb) <- hs if a < b

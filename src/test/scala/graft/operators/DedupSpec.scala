@@ -81,19 +81,15 @@ class DedupSpec extends SparkSpec {
     assert(sigs == 3L)
   }
 
-  test("prefix-filtered and plain ngram strategies return identical pairs") {
-    def run(pf: Boolean) =
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text", w = 3, tau = 0.3,
-          prefixFilter = pf)
-        .select("doc_a", "doc_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(run(true) == run(false))
-  }
-
   test("simhash pairs rank the near-dup closest") {
-    val out = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 20)
+    // two null-text docs hash to NULL: they must not pair, not even
+    // with each other
+    val withNulls = docs.union(Seq((7L, null: String), (8L, null: String))
+      .toDF("doc_id", "text"))
+    val out = Dedup.simhashPairs(withNulls, "doc_id", "text", maxHamming = 20)
       .select("doc_a", "doc_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    assert(!out.keys.exists(p => p._1 >= 7L || p._2 >= 7L), s"null text paired: $out")
     assert(out((1L, 6L)) == 0)
     assert(out.get((1L, 2L)).isDefined)
     assert(out((1L, 2L)) < out.getOrElse((1L, 3L), Int.MaxValue))
@@ -343,8 +339,8 @@ class DedupSpec extends SparkSpec {
       r.getAs[Double]("containment") == 1.0,
       s"doc 1's shingles are all inside doc 2: $r")
     // the symmetric measure can't see it: 3 shared of 63 union shingles
-    val jac = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      w = 3, tau = 0.5, prefixFilter = false).collect()
+    val jac = Dedup.ngramJaccardPairs(docs, "doc_id", "text", w = 3, tau = 0.5)
+      .collect()
     assert(jac.isEmpty, "symmetric jaccard must miss the quoted-in pair")
   }
 
@@ -725,8 +721,8 @@ class DedupSpec extends SparkSpec {
     assert(buckets.forall(r =>
       r.getAs[Long]("n_caught") <= r.getAs[Long]("n_truth")))
     // n_truth equals the exact pair count at the same tau
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      w = 3, tau = 0.7, prefixFilter = false).count()
+    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", w = 3, tau = 0.7)
+      .count()
     assert(overall.getAs[Long]("n_truth") == exact)
     // S-curve literals: monotone non-decreasing across buckets, in [0,1]
     val ordered = buckets.sortBy(_.getAs[Long]("bkt"))
