@@ -39,17 +39,23 @@ object Dedup {
     * so the banded MinHash pairs grade directly against the exact ones
     * (see [[minhashRecallReport]]). */
   private def verifyJaccard(cand: DataFrame, sh: DataFrame, tau: Double): DataFrame =
-    cand
+    keepJaccard(cand
       .join(sh.select(col("doc_id"), col("sh").as("sh_a")), col("doc_a") === col("doc_id"))
       .drop("doc_id")
       .join(sh.select(col("doc_id"), col("sh").as("sh_b")), col("doc_b") === col("doc_id"))
-      .drop("doc_id")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= tau)
+      .drop("doc_id"), "sh_a", "sh_b", tau)
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
+
+  /** The one exact-Jaccard step of every MinHash verify: `inter` =
+    * |`shA` ∩ `shB`| and `jaccard` = |∩| / |∪| of the two shingle-set
+    * columns, keeping the rows with jaccard ≥ `tau`. */
+  private def keepJaccard(df: DataFrame, shA: String, shB: String,
+                          tau: Double): DataFrame =
+    df.withColumn("inter", size(array_intersect(col(shA), col(shB))))
+      .withColumn("jaccard",
+        col("inter") / (size(col(shA)) + size(col(shB)) - col("inter")))
+      .filter(col("jaccard") >= tau)
 
   /** Default hot-bucket cap for [[bucketPairs]]: far above any bucket a
     * healthy LSH banding produces, low enough that one adversarial bucket
@@ -206,15 +212,11 @@ object Dedup {
     val cand = banded(shB).select(col("doc_id").as("batch_id"), col("band"), col("h"))
       .join(bandsC, Seq("band", "h"))
       .select("batch_id", "corpus_id").distinct()
-    cand
+    keepJaccard(cand
       .join(shB.select(col("doc_id"), col("sh").as("sh_a")),
         col("batch_id") === col("doc_id")).drop("doc_id")
       .join(shC.select(col("doc_id"), col("sh").as("sh_b")),
-        col("corpus_id") === col("doc_id")).drop("doc_id")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= tau)
+        col("corpus_id") === col("doc_id")).drop("doc_id"), "sh_a", "sh_b", tau)
       .select("batch_id", "corpus_id", "jaccard")
       .orderBy("batch_id", "corpus_id")
   }
@@ -536,15 +538,11 @@ object Dedup {
         .as(Seq("band", "h")))
     val cand = bandsB.join(spark.table(bt), Seq("band", "h"))
       .select("batch_id", "corpus_id").distinct()
-    cand
+    keepJaccard(cand
       .join(shB.select(col("doc_id"), col("sh").as("sh_a")),
         col("batch_id") === col("doc_id")).drop("doc_id")
       .join(spark.table(st).select(col("corpus_id"), col("sh").as("sh_b")),
-        Seq("corpus_id"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .filter(col("jaccard") >= tau)
+        Seq("corpus_id")), "sh_a", "sh_b", tau)
       .select("batch_id", "corpus_id", "jaccard")
   }
 
@@ -552,8 +550,11 @@ object Dedup {
     * [[appendMinhashIndex]]): every append writes NEW bucket files under
     * the same bucket spec, so after N daily appends the bucketed scans
     * read N files per bucket; a real deployment runs this weekly. Each
-    * table is rewritten ONCE through a bucket-spec-preserving write into
-    * a temp name and swapped in by a metadata-only RENAME; the bands
+    * table that holds more than one file in some bucket (a fresh
+    * listing, [[PersistedIndex.compact]]) is rewritten ONCE through a
+    * bucket-spec-preserving write into a temp name and swapped in by a
+    * metadata-only RENAME; a table with one file per bucket — as every
+    * write and removal leaves it — is skipped, with no job. The bands
     * table re-applies the write-time salted cap (idempotent: appends
     * already preserve it, so results are bit-equal). Geometry and
     * fingerprint carry over verbatim ([[PersistedIndex]]). */
@@ -564,7 +565,8 @@ object Dedup {
   /** [[compactMinhashIndex]] for the persisted SRP embedding index:
     * the `…_sigs` table re-applies the salted (tbl, sig) cap, the
     * `…_vecs` table rewrites as-is; same rename swap, same carried
-    * properties. */
+    * properties, and the same skip of a table with one file per
+    * bucket. */
   def compactEmbedIndex(spark: org.apache.spark.sql.SparkSession,
                         tag: String): Unit =
     PersistedIndex.embed(tag).compact(spark, "compactEmbedIndex")

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{classic, Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -59,9 +62,10 @@ private[graft] final case class IndexTable(name: String, keys: Seq[String],
   *    rows' delta and removals subtract theirs, so `ensure` keeps
   *    verifying over corpus ∪ appended \ removed; removed rows must be
   *    passed exactly as indexed (validated).
-  * Removal and compaction rewrite each data table through the
-  * layout-preserving swap ([[Dedup.swapRewriteTable]]), never through a
-  * tombstone, so the serving path reads no extra relation. */
+  * Removal rewrites each data table, and compaction each one that is
+  * not already compact, through the layout-preserving swap
+  * ([[Dedup.swapRewriteTable]]), never through a tombstone, so the
+  * serving path reads no extra relation. */
 private[graft] final case class PersistedIndex(
     tag: String,
     tables: Seq[IndexTable],
@@ -140,7 +144,8 @@ private[graft] final case class PersistedIndex(
     * set before the first write and the commit is recorded with the
     * fingerprint merge. A capped table's new rows rank AFTER the rows
     * already indexed under their key, so earlier-indexed ids win and no
-    * key exceeds the cap. */
+    * key exceeds the cap. An admitted set of no rows writes no table
+    * and sets no marker; its commit is still recorded. */
   def appendWith(geom: Map[String, Int], admitted: DataFrame, idCol: String,
                  valueCol: String, phase: PersistedIndex.Phases,
                  batch: Option[Long] = None): DataFrame = {
@@ -149,9 +154,10 @@ private[graft] final case class PersistedIndex(
       val (snap, delta) = Dedup.freezeFingerprinted(admitted, idCol, valueCol)
       (snap, delta, encode(snap, idCol, valueCol, geom))
     }
-    batch.foreach(id => Dedup.setTableProps(spark, primary,
+    val writes = if (delta.startsWith("0:")) Nil else tables
+    if (writes.nonEmpty) batch.foreach(id => Dedup.setTableProps(spark, primary,
       Seq(Dedup.PendingProp -> id.toString)))
-    tables.foreach { t =>
+    writes.foreach { t =>
       val rows = t.rows(signed)
       val kept = if (!t.capped) rows else {
         // occupancy of the batch's own keys only: the semi-join and the
@@ -182,7 +188,11 @@ private[graft] final case class PersistedIndex(
 
   /** Purge the `removed` rows, passed exactly as indexed, by an
     * anti-join rewrite of every data table; the fingerprint is
-    * subtracted. Rows a removed id displaced under a cap do not
+    * subtracted. The frozen id set is broadcast ([[idSet]]) when it fits
+    * `spark.sql.autoBroadcastJoinThreshold` at 8 bytes an id: each
+    * table's rewrite then keeps its bucketed scan's layout and runs as
+    * one job with no shuffle. A removal whose freeze observes no rows
+    * rewrites nothing. Rows a removed id displaced under a cap do not
     * resurrect (a rebuild restores them). Returns the number of ids
     * purged. */
   def remove(removed: DataFrame, idCol: String, valueCol: String,
@@ -193,32 +203,38 @@ private[graft] final case class PersistedIndex(
       // read once per table rewrite; the freeze observes the row count
       // and the fingerprint delta
       val (snap, delta) = phase("freeze")(Dedup.freezeFingerprinted(removed, idCol, valueCol))
-      val ids = snap.select(col(idCol).cast("long").as(this.idCol))
+      val Array(dn, dh) = delta.split(":")
+      val n = dn.toLong
+      val ids = idSet(spark, snap.select(col(idCol).cast("long").as(this.idCol)), n)
       val byId = tables.find(_.keys == Seq(this.idCol)).get.name
-      val purged = phase("probe")(
+      val purged = if (n == 0) 0L else phase("probe")(
         spark.table(byId).join(ids, Seq(this.idCol), "left_semi").count())
       // the fingerprint subtracts the WHOLE removal set: a row that was
       // never indexed (or a duplicate) would silently corrupt it
-      val Array(dn, dh) = delta.split(":")
-      require(purged == dn.toLong,
-        s"$what: $dn removal rows but $purged matched indexed " +
+      require(purged == n,
+        s"$what: $n removal rows but $purged matched indexed " +
         s"rows in '$tag' — `removed` must carry exactly the indexed " +
         "(id, value) rows, no extras and no duplicates")
-      tables.foreach(t => phase(s"rewrite:${t.name}")(rewrite(spark, t, geom,
-        _.join(ids, Seq(this.idCol), "left_anti"))))
-      phase("commit")(Dedup.mergeTableFingerprints(spark, fingerprinted,
-        s"${-dn.toLong}:${-BigInt(dh)}"))
+      if (n > 0) {
+        tables.foreach(t => phase(s"rewrite:${t.name}")(rewrite(spark, t, geom,
+          _.join(ids, Seq(this.idCol), "left_anti"))))
+        phase("commit")(Dedup.mergeTableFingerprints(spark, fingerprinted,
+          s"${-n}:${-BigInt(dh)}"))
+      }
       purged
     }
   }
 
-  /** Rewrite every data table once in its own layout (capped tables
-    * re-apply the cap — idempotent, since appends preserve it),
-    * collapsing the files appends left behind; properties carry over
-    * verbatim. */
+  /** Rewrite, in its own layout, every data table that is not already
+    * [[compacted]] (capped tables re-apply the cap — idempotent, since
+    * appends preserve it), collapsing the files appends left behind;
+    * properties carry over verbatim. A table with at most one file per
+    * bucket or partition is skipped: a rewrite would write the same rows
+    * in the same layout, so compacting after a removal, or twice, runs
+    * no job. */
   def compact(spark: SparkSession, what: String): Unit = {
     val phase = PersistedIndex.Phases(spark, what)
-    maintain(spark, what)(geom => tables.foreach(t =>
+    maintain(spark, what)(geom => tables.filterNot(compacted(spark, _)).foreach(t =>
       phase(s"rewrite:${t.name}")(rewrite(spark, t, geom, cap(t, _, geom)))))
   }
 
@@ -228,16 +244,53 @@ private[graft] final case class PersistedIndex(
     * several writes, so a crash can land any prefix), rewrite them out.
     * Every fingerprint is reset to the primary table's, which only the
     * commit moves. One probe job; `ids` is frozen only when a rewrite
-    * runs. */
+    * runs, and broadcast as in [[remove]]. */
   def purgeUncommitted(spark: SparkSession, geom: Map[String, Int],
                        ids: DataFrame): Unit = {
     if (!tables.map(t => spark.table(t.name).select(idCol)).reduce(_ unionByName _)
         .join(ids, Seq(idCol), "left_semi").isEmpty) {
-      val idsS = ids.localCheckpoint()
+      val o = Observation()
+      val frozen = ids.observe(o, count(lit(1)).as("n")).localCheckpoint()
+      val idsS = idSet(spark, frozen, o.get("n").asInstanceOf[Long])
       tables.foreach(rewrite(spark, _, geom, _.join(idsS, Seq(idCol), "left_anti")))
     }
     Dedup.tableFingerprint(spark, primary).foreach(fp => fingerprinted.tail
       .foreach(Dedup.setTableProps(spark, _, Seq(Dedup.FingerprintProp -> fp))))
+  }
+
+  /** `ids`, a frozen set of `n` ids, marked for broadcast when `n` ids
+    * of 8 bytes fit `spark.sql.autoBroadcastJoinThreshold` (-1 turns it
+    * off). The anti-join of a rewrite then keeps the bucketed scan's
+    * partitioning, so the layout repartition falls away; a larger set
+    * keeps the shuffled join. */
+  private def idSet(spark: SparkSession, ids: DataFrame, n: Long): DataFrame = {
+    val limit = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+      .autoBroadcastJoinThreshold
+    if (n * 8 <= limit) broadcast(ids) else ids
+  }
+
+  /** Whether table `t` is already compact, by a fresh listing of its
+    * location (never the session's cached file index, which can miss
+    * files another session appended): a bucketed table has at most one
+    * data file per bucket id, a partitioned one at most one per
+    * partition directory. Paths Spark ignores (a component starting
+    * with `_` or `.`) are skipped; a file with no bucket id in its name
+    * makes a bucketed table not compact. Every fresh write and rewrite
+    * leaves one file per bucket or cell, and appends preserve the cap,
+    * so rewriting a compact table would change nothing. */
+  private def compacted(spark: SparkSession, t: IndexTable): Boolean = {
+    val root = new Path(spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .getTableMetadata(TableIdentifier(t.name)).location)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s.getPath))
+    val data = files(root)
+    if (t.partitioned) data.groupBy(_.getParent).values.forall(_.size == 1)
+    else {
+      val ids = data.map(p => BucketingUtils.getBucketId(p.getName))
+      ids.forall(_.isDefined) && ids.distinct.size == ids.size
+    }
   }
 
   private def cap(t: IndexTable, rows: DataFrame,

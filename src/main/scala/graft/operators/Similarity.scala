@@ -655,9 +655,11 @@ object Similarity {
   /** [[Dedup.compactMinhashIndex]] for the persisted IVF-PQ serving
     * index (judge r15 ask #3): the code table rewrites ONCE in its
     * `cell` partitioning, the vecs table in its bucket spec, codebooks
-    * untouched (bounded, never appended). Serve results are bit-equal
-    * before/after with per-cell file counts collapsed to one write's
-    * worth. */
+    * untouched (bounded, never appended). A code table with one file
+    * per cell directory, or a vecs table with one file per bucket, is
+    * skipped with no job ([[PersistedIndex.compact]]). Serve results
+    * are bit-equal before/after with per-cell file counts collapsed to
+    * one write's worth. */
   def compactAnnIndex(spark: SparkSession, tag: String): Unit =
     PersistedIndex.ann(tag, loadIndexCodebooks(spark, tag))
       .compact(spark, "compactAnnIndex")

@@ -40,6 +40,10 @@ class DedupSpec extends SparkSpec {
       assert(!record.crashed && record.done(3L) && record.done(0L) && !record.done(4L))
       mark(Dedup.PendingProp, 7L)
       assert(record.crashed && !record.done(7L))
+      // a fresh index is compact: an appended doc gives the compaction
+      // files to collapse, so its rewrite swap runs
+      Dedup.appendMinhashIndex(Seq((90L, "one novel appended doc")).toDF("doc_id", "text"),
+        "doc_id", "text", tag)
       Dedup.compactMinhashIndex(spark, tag)
       assert(record == PersistedIndex.StreamRecord(Some(3L), Some(7L)))
     } finally index.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))

@@ -89,6 +89,19 @@ class PersistedIndexSpec extends SparkSpec {
   private def counts(index: PersistedIndex): Seq[Long] =
     index.tables.map(t => spark.table(t.name).count())
 
+  /** Every table's properties and the (path, length) of each file
+    * under its location, by a fresh listing. */
+  private def state(index: PersistedIndex): Seq[(Map[String, String], Set[(String, Long)])] =
+    index.tables.map { t =>
+      val loc = spark.sql(s"DESCRIBE EXTENDED ${t.name}")
+        .filter(col("col_name") === "Location").head().getString(1)
+      val p = new org.apache.hadoop.fs.Path(loc)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(s => (s.getPath.toString, s.getLen)).toSet
+      (Dedup.tableProps(spark, t.name), files)
+    }
+
   private def sorted(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
 
@@ -250,12 +263,26 @@ class PersistedIndexSpec extends SparkSpec {
         assert(!labels.exists(l => Seq(":guard", ":purge", ":commit").exists(l.endsWith)),
           labels)
         if (f.name == "minhash") assert(labels.size <= 12, labels)
-        val upkeep = jobLabels {
-          f.remove(f.corpus.filter(col(f.idCol) === 1), tag)
-          f.compact(tag)
-        }
-        assert(upkeep.nonEmpty && upkeep.forall(l =>
-          Seq("removeFrom", "compact").exists(l.startsWith) && l.contains(":")), upkeep)
+        // the batch's append left tables with several files per bucket
+        // or cell: the first compaction rewrites them
+        val rewrites = index.tables.map(t => s":rewrite:${t.name}")
+        val compaction = jobLabels(f.compact(tag))
+        info(s"compaction after the batch: ${compaction.size} jobs")
+        assert(compaction.forall(_.startsWith("compact")) &&
+          rewrites.forall(r => compaction.exists(_.endsWith(r))), compaction)
+        val removal = jobLabels(f.remove(f.corpus.filter(col(f.idCol) === 1), tag))
+        info(s"removal: ${removal.size} jobs")
+        assert(removal.nonEmpty && removal.forall(l =>
+          l.startsWith("removeFrom") && l.contains(":")), removal)
+        if (f.name == "minhash") assert(removal.size <= 8, removal)
+        // the removal rewrote every table to one file per bucket or cell:
+        // compaction then skips them all and leaves them untouched
+        val before = state(index)
+        assert(jobLabels(f.compact(tag)).isEmpty)
+        assert(state(index) == before)
+        val empty = jobLabels(assert(f.remove(f.corpus.filter(lit(false)), tag) == 0L))
+        assert(empty.isEmpty, empty)
+        assert(state(index) == before)
       }
     }
 
