@@ -260,6 +260,10 @@ object Dedup {
   private def fingerprintOf(n: Long, h: java.math.BigDecimal): String =
     s"$n:${if (h == null) BigInt(0) else BigInt(h.toBigInteger)}"
 
+  /** The row count of fingerprint (or fingerprint delta) `fp`. */
+  private[operators] def fingerprintCount(fp: String): Long =
+    fp.takeWhile(_ != ':').toLong
+
   /** localCheckpoint `df`, observing its [[corpusFingerprint]] in the
     * same job: the observation sits in the freeze's result stage, so it
     * is exact under task retry and costs no job of its own. */
@@ -378,12 +382,15 @@ object Dedup {
   /** [[requiredIntProp]] for several keys, from one property read. */
   private[graft] def requiredIntProps(spark: org.apache.spark.sql.SparkSession,
                                       table: String, keys: Seq[String],
-                                      what: String): Map[String, Int] = {
-    val props = tableProps(spark, table)
+                                      what: String): Map[String, Int] =
+    requiredIntProps(tableProps(spark, table), table, keys, what)
+
+  /** [[requiredIntProps]] from `table`'s already-read properties. */
+  private[graft] def requiredIntProps(props: Map[String, String], table: String,
+                                      keys: Seq[String], what: String): Map[String, Int] =
     keys.map(k => k -> props.get(k).map(_.toInt).getOrElse(
       throw new IllegalArgumentException(
         s"$what: index table '$table' records no '$k'"))).toMap
-  }
 
   /** Generic salted top-`maxBucket` by ascending `corpus_id` within
     * `keys` (every other column rides along): rank within
@@ -469,15 +476,19 @@ object Dedup {
     * APPEND the admitted docs' band signatures and shingle sets into
     * the bucketed index tables under the SAME bucket spec, so
     * tomorrow's batch collides with today's admissions without a full
-    * rebuild (hash co-partitioning is preserved; multi-file buckets
-    * only forfeit the sorted-scan assumption, which the joins never
-    * relied on). The write-time cap is PRESERVED: the batch's band rows
-    * rank after the rows already indexed per (band, h), salted like
-    * [[cappedOffsetIds]], so earlier-indexed docs always win. Geometry
-    * comes from the recorded properties, and the fingerprint merges
-    * additively ([[PersistedIndex]]). The input is SNAPSHOTTED before
-    * any write and the snapshot RETURNED, so callers build day-2
-    * batches from the same frozen relation. */
+    * rebuild (hash co-partitioning is preserved; each append adds at
+    * most one file per bucket, and multi-file buckets only forfeit the
+    * sorted-scan assumption, which the joins never relied on). The
+    * write-time cap is PRESERVED: the batch's band rows rank after the
+    * rows already indexed per (band, h), salted like
+    * [[cappedOffsetIds]], so earlier-indexed docs always win. That
+    * per-(band, h) count is read only when the cap can bind: a key
+    * holds one row per doc at most, so while the recorded doc count
+    * plus the batch fits maxBucket, every row is kept with no index
+    * read. Geometry comes from the recorded properties, and the
+    * fingerprint merges additively ([[PersistedIndex]]). The input is
+    * SNAPSHOTTED before any write and the snapshot RETURNED, so callers
+    * build day-2 batches from the same frozen relation. */
   def appendMinhashIndex(admitted: DataFrame, idCol: String,
                          textCol: String, tag: String): DataFrame =
     PersistedIndex.minhash(tag).append(admitted, idCol, textCol,
@@ -726,10 +737,14 @@ object Dedup {
     * stale across ALTER TABLE RENAME (the directory moves, the
     * partition specs keep the old paths — scans then read nothing);
     * re-derive them from the moved directory. No-op for bucketed /
-    * unpartitioned tables. */
+    * unpartitioned tables. The partition columns are read from the
+    * catalog entry: `catalog.listColumns` runs a query (~25 ms) on
+    * every swap. */
   private def repairPartitionsIfPartitioned(
       spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    if (spark.catalog.listColumns(table).collect().exists(_.isPartition)) {
+    if (spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+        .catalog.getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+        .partitionColumnNames.nonEmpty) {
       spark.sql(s"MSCK REPAIR TABLE $table")
       ()
     }

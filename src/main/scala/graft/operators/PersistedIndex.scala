@@ -120,14 +120,18 @@ private[graft] final case class PersistedIndex(
   }
 
   /** The maintenance entry: lease, swap recovery, existence check and
-    * one geometry read, then `body` with the geometry. Reentrant. */
+    * one property read of the primary table, then `body` with what it
+    * holds ([[PersistedIndex.State]]). Reentrant. */
   def maintain[T](spark: SparkSession, what: String)
-                 (body: Map[String, Int] => T): T =
+                 (body: PersistedIndex.State => T): T =
     Dedup.withMaintenanceLease(spark, primary, what) {
       tables.foreach(t => Dedup.recoverSwappedTable(spark, t.name))
       require(fingerprinted.forall(spark.catalog.tableExists),
         s"$what: no index for tag '$tag' — write it first")
-      body(Dedup.requiredIntProps(spark, primary, geometry, what))
+      val props = Dedup.tableProps(spark, primary)
+      body(PersistedIndex.State(Dedup.requiredIntProps(props, primary, geometry, what),
+        props.get(Dedup.FingerprintProp).map(Dedup.fingerprintCount),
+        PersistedIndex.StreamRecord(props)))
     }
 
   /** Append `admitted` under the lease; returns its frozen snapshot. */
@@ -144,30 +148,39 @@ private[graft] final case class PersistedIndex(
     * set before the first write and the commit is recorded with the
     * fingerprint merge. A capped table's new rows rank AFTER the rows
     * already indexed under their key, so earlier-indexed ids win and no
-    * key exceeds the cap. An admitted set of no rows writes no table
-    * and sets no marker; its commit is still recorded. */
-  def appendWith(geom: Map[String, Int], admitted: DataFrame, idCol: String,
+    * key exceeds the cap. That needs the index's occupancy of the
+    * batch's keys, read only when the cap can bind: a key holds at most
+    * one row per indexed doc, and the primary's fingerprint count
+    * (`state.indexed`) bounds the indexed docs, so while it plus the
+    * admitted rows stays within maxBucket every row is kept as is. An
+    * index with no recorded fingerprint always reads the occupancy. An
+    * admitted set of no rows writes no table and sets no marker; its
+    * commit is still recorded. */
+  def appendWith(state: PersistedIndex.State, admitted: DataFrame, idCol: String,
                  valueCol: String, phase: PersistedIndex.Phases,
                  batch: Option[Long] = None): DataFrame = {
-    val spark = admitted.sparkSession
+    val (spark, geom) = (admitted.sparkSession, state.geom)
     val (snap, delta, signed) = phase("admit") {
       val (snap, delta) = Dedup.freezeFingerprinted(admitted, idCol, valueCol)
       (snap, delta, encode(snap, idCol, valueCol, geom))
     }
-    val writes = if (delta.startsWith("0:")) Nil else tables
+    val n = Dedup.fingerprintCount(delta)
+    val writes = if (n == 0) Nil else tables
     if (writes.nonEmpty) batch.foreach(id => Dedup.setTableProps(spark, primary,
       Seq(Dedup.PendingProp -> id.toString)))
     writes.foreach { t =>
       val rows = t.rows(signed)
-      val kept = if (!t.capped) rows else {
+      val binds = t.capped && state.indexed.forall(_ + n > geom(Dedup.MaxBucketProp))
+      val kept = if (!binds) rows else {
         // occupancy of the batch's own keys only: the semi-join and the
         // count both keep the index table's bucketing (no index Exchange)
         val keys = t.keys.map(col)
         val have = spark.table(t.name).join(rows.select(keys: _*), t.keys, "left_semi")
           .groupBy(keys: _*).agg(count(lit(1)).as("__have"))
-        // the batch is clustered on the keys once, before the occupancy
-        // join: both of the cap's windows then run without an Exchange
-        Dedup.cappedOffsetIds(rows.repartition(keys: _*).join(have, t.keys, "left")
+        // the batch is clustered once, in the write's own layout, before
+        // the occupancy join: the cap's windows and the write then run
+        // without another Exchange
+        Dedup.cappedOffsetIds(clustered(t, rows, geom).join(have, t.keys, "left")
             .withColumn("__have", coalesce(col("__have"), lit(0L))),
             t.keys, geom(Dedup.MaxBucketProp))
           .select(rows.columns.map(col): _*)
@@ -180,11 +193,8 @@ private[graft] final case class PersistedIndex(
   }
 
   /** The maintained stream's record on the primary table. */
-  def streamRecord(spark: SparkSession): PersistedIndex.StreamRecord = {
-    val props = Dedup.tableProps(spark, primary)
-    def id(k: String) = props.get(k).map(_.toLong)
-    PersistedIndex.StreamRecord(id(Dedup.CommittedProp), id(Dedup.PendingProp))
-  }
+  def streamRecord(spark: SparkSession): PersistedIndex.StreamRecord =
+    PersistedIndex.StreamRecord(Dedup.tableProps(spark, primary))
 
   /** Purge the `removed` rows, passed exactly as indexed, by an
     * anti-join rewrite of every data table; the fingerprint is
@@ -199,7 +209,8 @@ private[graft] final case class PersistedIndex(
              what: String): Long = {
     val spark = removed.sparkSession
     val phase = PersistedIndex.Phases(spark, what)
-    maintain(spark, what) { geom =>
+    maintain(spark, what) { state =>
+      val geom = state.geom
       // read once per table rewrite; the freeze observes the row count
       // and the fingerprint delta
       val (snap, delta) = phase("freeze")(Dedup.freezeFingerprinted(removed, idCol, valueCol))
@@ -234,8 +245,8 @@ private[graft] final case class PersistedIndex(
     * no job. */
   def compact(spark: SparkSession, what: String): Unit = {
     val phase = PersistedIndex.Phases(spark, what)
-    maintain(spark, what)(geom => tables.filterNot(compacted(spark, _)).foreach(t =>
-      phase(s"rewrite:${t.name}")(rewrite(spark, t, geom, cap(t, _, geom)))))
+    maintain(spark, what)(s => tables.filterNot(compacted(spark, _)).foreach(t =>
+      phase(s"rewrite:${t.name}")(rewrite(spark, t, s.geom, cap(t, _, s.geom)))))
   }
 
   /** Crash-recovery purge for a maintained batch whose earlier attempt
@@ -298,10 +309,27 @@ private[graft] final case class PersistedIndex(
     if (t.capped) Dedup.cappedTopIds(rows, t.keys, geom(Dedup.MaxBucketProp))
     else rows
 
-  /** Save `rows` as table `name` in `t`'s layout. A fresh write
-    * repartitions on the layout keys so each bucket or cell lands as ~1
-    * file; a bucketed append keeps its input's tasks (one job fewer on
-    * the per-batch path), a partitioned one still gathers each cell. */
+  /** The tasks a bucketed table is written in: the gcd of its bucket
+    * count and the session's parallelism. Because it divides the bucket
+    * count, `pmod(murmur3(keys), tasks)` is a function of the bucket id,
+    * so each bucket lands whole in one task. */
+  private def writeTasks(spark: SparkSession, geom: Map[String, Int]): Int =
+    BigInt(geom(Dedup.BucketsProp)).gcd(spark.sparkContext.defaultParallelism).toInt
+
+  /** `rows` of bucketed table `t` hash-clustered into [[writeTasks]]
+    * tasks on its keys: one file per bucket on an append. */
+  private def clustered(t: IndexTable, rows: DataFrame,
+                        geom: Map[String, Int]): DataFrame =
+    rows.repartition(writeTasks(rows.sparkSession, geom), t.keys.map(col): _*)
+
+  /** Save `rows` as table `name` in `t`'s layout, one file per bucket
+    * or cell. A bucketed table is written in [[writeTasks]] tasks: an
+    * overwrite repartitions into one partition per bucket and coalesces
+    * whole buckets into those tasks (no second shuffle; a rewrite's
+    * bucketed scan already has that partitioning, so it runs no shuffle
+    * at all), an append is [[clustered]] (a capped append already is,
+    * and the planner drops the repeated exchange). A partitioned table
+    * gathers each cell. */
   private def save(t: IndexTable, name: String, rows: DataFrame,
                    mode: String, geom: Map[String, Int]): Unit = {
     val buckets = geom(Dedup.BucketsProp)
@@ -309,7 +337,8 @@ private[graft] final case class PersistedIndex(
     val laid =
       if (t.partitioned) rows.repartition(keys: _*)
       else if (mode == "overwrite") rows.repartition(buckets, keys: _*)
-      else rows
+        .coalesce(writeTasks(rows.sparkSession, geom))
+      else clustered(t, rows, geom)
     val w = (if (t.name == primary) tap(laid) else laid)
       .write.format("parquet").mode(mode)
     if (t.partitioned) w.partitionBy(t.keys: _*).saveAsTable(name)
@@ -345,6 +374,21 @@ private[graft] object PersistedIndex {
     /** Whether an attempt crashed between its marker and its commit. */
     def crashed: Boolean = pending.exists(p => committed.forall(_ < p))
   }
+
+  object StreamRecord {
+    /** The record held in the primary table's properties `props`. */
+    def apply(props: Map[String, String]): StreamRecord = {
+      def id(k: String) = props.get(k).map(_.toLong)
+      StreamRecord(id(Dedup.CommittedProp), id(Dedup.PendingProp))
+    }
+  }
+
+  /** What [[PersistedIndex.maintain]] reads of the primary table under
+    * the lease, in one property read: the recorded geometry, the row
+    * count of the recorded fingerprint (`indexed`, an upper bound on the
+    * indexed docs; None when none is recorded) and the stream record. */
+  final case class State(geom: Map[String, Int], indexed: Option[Long],
+                         record: StreamRecord)
 
   /** Labels each job of one operator's phase `<operator>:<phase>` in
     * `spark.job.description`, restoring the caller's label after. Each

@@ -877,11 +877,13 @@ object EventStreams {
     * pre-append index; admit the rows that matched nothing. The matched
     * ids are bounded by the batch, so they are broadcast: the planner
     * would otherwise pick a sort-merge join over the two frozen frames
-    * (a shuffle of each side) and AQE would switch it at runtime. */
+    * (a shuffle of each side) and AQE would switch it at runtime. They
+    * are broadcast as matched, repeats included: an anti-join needs no
+    * distinct keys, and a `distinct` would cost a shuffle job. */
   private[graft] def dedupStep(dedup: DataFrame => DataFrame, idCol: String)
                               (snap: DataFrame): (DataFrame, DataFrame) = {
     val hits = dedup(snap).localCheckpoint()
-    (hits, snap.join(broadcast(hits.select("batch_id").distinct()),
+    (hits, snap.join(broadcast(hits.select("batch_id")),
       snap(idCol) === col("batch_id"), "left_anti"))
   }
 
@@ -909,15 +911,15 @@ object EventStreams {
       (step: DataFrame => (DataFrame, DataFrame)): Unit = {
     val spark = df.sparkSession
     val phase = PersistedIndex.Phases(spark, "maintainedBatch", fault)
-    index.maintain(spark, "maintainedBatch") { geom =>
-      val record = phase("guard")(index.streamRecord(spark))
+    index.maintain(spark, "maintainedBatch") { state =>
+      val record = phase("guard")(state.record)
       if (!record.done(id)) {
         val snap = phase("step")(df.localCheckpoint())
-        if (record.crashed) phase("purge")(index.purgeUncommitted(spark, geom,
+        if (record.crashed) phase("purge")(index.purgeUncommitted(spark, state.geom,
           snap.select(col(idCol).cast("long").as(index.idCol))))
         val (out, admitted) = phase("step")(step(snap))
         phase("out")(onOut(id, out))
-        index.appendWith(geom, admitted, idCol, valueCol, phase, Some(id))
+        index.appendWith(state, admitted, idCol, valueCol, phase, Some(id))
       }
     }
   }

@@ -855,7 +855,20 @@ class DedupSpec extends SparkSpec {
     // earlier-indexed ids keep their slots: the bands table still holds
     // only corpus ids (buckets were already full)
     assert(spark.table(bt).agg(max("corpus_id")).head().getLong(0) <= 4L)
-    Seq(bt, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    // the boundary: indexed docs + batch docs == maxBucket, so the cap
+    // cannot bind and every batch row is kept (one doc more is the case
+    // above)
+    val edge = tag + "_edge"
+    Dedup.writeMinhashIndex(corpus.filter(col("doc_id") <= 2L), "doc_id", "text",
+      edge, maxBucket = 5)
+    Dedup.appendMinhashIndex((5L to 7L).map(id => (id, doc(1))).toDF("doc_id", "text"),
+      "doc_id", "text", edge)
+    val (ebt, est) = Dedup.indexTables(edge)
+    val perKey = spark.table(ebt).groupBy("band", "h")
+      .agg(collect_set("corpus_id").as("ids")).select("ids").as[Seq[Long]].collect()
+    assert(perKey.nonEmpty && perKey.forall(_.sorted == Seq(1L, 2L, 5L, 6L, 7L)),
+      perKey.toSeq)
+    Seq(bt, st, ebt, est).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("embedIncrementalPersisted reads the RECORDED geometry and equals " +

@@ -256,6 +256,7 @@ class PersistedIndexSpec extends SparkSpec {
          "maintainedBatch:<phase> and runs no guard, purge or commit job; " +
          "removal and compaction label theirs") {
       withIndex(f) { (tag, index) =>
+        val written = state(index)
         val labels = jobLabels(EventStreams.maintainedBatch(index, f.extra, 0L,
           f.idCol, f.valueCol, (_, out) => out.collect(): Unit)(f.step(tag)))
         info(s"${labels.size} jobs: ${labels.groupBy(identity).view.mapValues(_.size).toMap}")
@@ -263,6 +264,20 @@ class PersistedIndexSpec extends SparkSpec {
         assert(!labels.exists(l => Seq(":guard", ":purge", ":commit").exists(l.endsWith)),
           labels)
         if (f.name == "minhash") assert(labels.size <= 12, labels)
+        // each table's append is one clustering shuffle and its write: the
+        // index and the batch cannot fill a key, so a capped table reads
+        // no occupancy
+        assert(labels.count(_.contains(":append:")) <= 4, labels)
+        // the append added at most one file per bucket id to each
+        // bucketed table
+        for (((t, (_, was)), (_, now)) <- index.tables.zip(written).zip(state(index))
+             if !t.partitioned) {
+          val added = (now -- was).toSeq.map(f => new org.apache.hadoop.fs.Path(f._1).getName)
+            .filterNot(n => n.startsWith("_") || n.startsWith("."))
+            .map(org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId)
+          assert(added.nonEmpty && added.forall(_.isDefined) &&
+            added.distinct.size == added.size, s"${t.name}: $added")
+        }
         // the batch's append left tables with several files per bucket
         // or cell: the first compaction rewrites them
         val rewrites = index.tables.map(t => s":rewrite:${t.name}")
